@@ -6,8 +6,11 @@ started in backfill mode (``available_now=True``) on a landing directory
 of TIFFs, with the shipped defaults: ``local_checkpoint`` barrier, parquet
 sinks, gradient stage off. All frames land before the stream starts, one
 frame per trigger, so one micro-batch is in flight at a time (a closed
-loop of one). The first batch is warm-up and belongs to set-up; the rest
-are timed.
+loop of one). Every batch is timed, the first one included: a warm-up
+batch costs as much as two warm ones, and 22 runs per workload must fit
+the benchmark's time budget. The gated time is therefore a cold image
+(plan build, code generation and JIT included), which is what the first
+frame of a live session waits for.
 """
 
 from __future__ import annotations
@@ -23,7 +26,6 @@ import numpy as np
 from perfbench import frames, probe
 
 SIZE = 512
-WARMUP_BATCHES = 1
 #: --seconds buys one timed batch per this many seconds (at least one)
 SECONDS_PER_BATCH = 10
 TABLES = ("integrals", "spot_stats", "spottiness", "outliers", "h_maxima",
@@ -32,8 +34,7 @@ TABLES = ("integrals", "spot_stats", "spottiness", "outliers", "h_maxima",
 
 def run(ctx) -> dict:
     c = frames.controls(SIZE)
-    n_timed = max(1, ctx.seconds // SECONDS_PER_BATCH)
-    n_frames = WARMUP_BATCHES + n_timed
+    n_frames = max(1, ctx.seconds // SECONDS_PER_BATCH)
 
     t_gen = time.perf_counter()
     imgs = frames.make_frames(c, ctx.seed, n_frames)
@@ -77,19 +78,17 @@ def run(ctx) -> dict:
     if query.exception() is not None:
         raise RuntimeError(f"stream failed: {query.exception()}")
     progress = [p for p in query.recentProgress if p["numInputRows"] > 0]
-    timed = progress[WARMUP_BATCHES:]
-    if len(timed) != n_timed:
-        raise RuntimeError(f"expected {n_timed} timed batches, "
-                           f"got {len(timed)} of {len(progress)}")
+    if len(progress) != n_frames:
+        raise RuntimeError(f"expected {n_frames} batches, got {len(progress)}")
     windows = []
-    for p in timed:
+    for p in progress:
         start = datetime.fromisoformat(
             p["timestamp"].replace("Z", "+00:00")).timestamp()
         windows.append((start, start + p["durationMs"]["triggerExecution"] / 1e3))
     ctx.first_timed_unit(windows[0][0])
     ctx.end_timed()
     by_batch = [p["durationMs"]["triggerExecution"] / 1e3 for p in progress]
-    sec_per_image = statistics.median(by_batch[WARMUP_BATCHES:])
+    sec_per_image = statistics.median(by_batch)
     ctx.log(f"stream drained: seconds per batch {by_batch}")
 
     failed = _check(pipe, c, imgs, ctx)
@@ -97,19 +96,20 @@ def run(ctx) -> dict:
         "attempted": n_frames,
         "correct": not failed,
         "failures": failed,
-        "samples": {"sec_per_image": len(timed)},
+        "samples": {"latency_s": n_frames},
+        "sec_per_image": sec_per_image,
         "sec_per_image_by_batch": by_batch,
-        "metrics": {"sec_per_image": sec_per_image},
+        "metrics": {"latency_s": sec_per_image},
     }
     if ctx.trace:
         layers = result["layers"] = {
-            "trace.sec_per_image": sec_per_image,
+            "trace.latency_s": sec_per_image,
             # every action on the batch frame re-reads its files
             "sources.decode_passes_per_image": statistics.median(
-                p["numInputRows"] for p in timed),
+                p["numInputRows"] for p in progress),
             "streaming.overhead_s": statistics.median(
                 (p["durationMs"]["triggerExecution"]
-                 - p["durationMs"]["addBatch"]) / 1e3 for p in timed),
+                 - p["durationMs"]["addBatch"]) / 1e3 for p in progress),
         }
         layers.update(_readback(pipe, spans))
         ctx.after_stop(lambda: layers.update(_attribute(ctx, windows)))
