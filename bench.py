@@ -253,9 +253,8 @@ def _keepup_2880(batch: int = 8) -> dict:
     # pilot rows 512/256/128); FAIR round-robins slots across jobs so
     # the pilot's idle-slot time backfills with px work. The same mode
     # lets one_batch's concurrent output jobs share slots instead of
-    # queueing whole-job. SPARK_GRAFT_KEEPUP_SCHED=FIFO reverts for A/B.
-    sched = os.environ.get("SPARK_GRAFT_KEEPUP_SCHED", "FAIR").upper()
-    extra_conf = {"spark.scheduler.mode": sched}
+    # queueing whole-job.
+    extra_conf = {"spark.scheduler.mode": "FAIR"}
     if profile:
         # the UI exists only to serve the per-batch REST stage profiles
         # (negligible cost; keeps outlier batches diagnosable from the
@@ -311,10 +310,11 @@ def _keepup_2880(batch: int = 8) -> dict:
     # calib=None: closed-form calibration columns (codegen trig per row
     # beats broadcasting + probing an 8.3 M-row map table — SCALE.md §1);
     # hybrid barrier: columnar pixel cache + checkpointed sparse frames.
-    # A/B'd round 3 vs "hybrid-nopx" (no dense cache, consumers recompute
-    # the column-pruned closed-form trig): hybrid 41.2 vs nopx 44.1 s/img
-    # same-session — the one-time cache build beats 6 pruned trig
-    # recomputes. Env override kept for future comparisons.
+    # The one-time cache build beats every consumer recomputing the
+    # column-pruned closed-form trig: 78.1 vs 172.1 s/batch in the
+    # round-7 interleaved A/B (STATUS.md).
+    # SPARK_GRAFT_KEEPUP_BARRIER=local_checkpoint times the shipped
+    # streaming barrier instead: hybrid vs local_checkpoint is still open.
     barrier = os.environ.get("SPARK_GRAFT_KEEPUP_BARRIER", "hybrid")
     from concurrent.futures import ThreadPoolExecutor
 
@@ -567,31 +567,17 @@ def _keepup_2880(batch: int = 8) -> dict:
         # with 512-size controls compiled DIFFERENT classes than the
         # 2880^2 plan — the one thing the pilot exists to pre-JIT. A
         # y < N row filter keeps the full-size literals (identical
-        # generated source); N defaults to 512 (~18% of the pixels),
-        # SPARK_GRAFT_PILOT_ROWS overrides for A/B probes.
-        pilot_rows = int(os.environ.get("SPARK_GRAFT_PILOT_ROWS", "512"))
-        # Pilot coalesce knob (round-11 A/B, REJECTED as a default): the
-        # theory was that the pilot's wall is stage-count bound and every
-        # narrow stage over the cached pilot frame launches one task per
-        # cached partition, so coalescing the scan side to 8 would trim
-        # scheduling + worker round-trips (shuffle stages already
-        # coalesce under AQE; partition count doesn't change the
-        # generated code the pilot exists to pre-JIT). Measured 2x2
-        # interleaved fresh-process probes (tags r11-pilotparts-* in
-        # BENCH_PROFILES.json): walls 67.5/118.1 s at parts=8 vs
-        # 84.8/64.1 s at parts=32 on a weather-poisoned day — the
-        # within-variant spread (67->118) dwarfs any between-variant
-        # signal and prep cpu-seconds are flat (363/288 vs 309/274), so
-        # the default stays 32 and the knob remains for calmer-day
-        # probes. The row-count probe (r10: 39/42/37 s at 512/256/128)
-        # already showed the floor is page-fault warmup + sequential
-        # barrier-chain scheduling, not per-stage task count.
-        pilot_parts = int(os.environ.get("SPARK_GRAFT_PILOT_PARTS", "32"))
+        # generated source); N = 512 (~18% of the pixels). The pilot
+        # wall is row-count-invariant (r10: 39/42/37 s at 512/256/128
+        # rows) and coalescing its scan to 8 partitions instead of 32 was
+        # rejected in round 11 (STATUS.md): the floor is page-fault
+        # warmup + sequential barrier-chain scheduling, not per-stage
+        # task count.
         pc = _replace(c, dataset="pilot")
         ppx = (
             _synthetic_pixels(spark, pc, n_images=1)
-            .where(_F.col("y") < pilot_rows)
-            .coalesce(pilot_parts)
+            .where(_F.col("y") < 512)
+            .coalesce(32)
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         ppx.count()
@@ -620,37 +606,28 @@ def _keepup_2880(batch: int = 8) -> dict:
     # Prep phase (round 12 restructure — verdict #3, third lever). The
     # pilot is row-count-INVARIANT (probed at rows 512/256/128:
     # 39.3/41.9/36.9 s — its wall is the python-worker page-fault warmup
-    # plus ~85-stage sequential barrier-chain scheduling) and rows/parts
-    # knobs are both measured-rejected, so the remaining levers are
+    # plus ~85-stage sequential barrier-chain scheduling) and fewer rows or
+    # partitions were both measured-rejected, so the remaining levers are
     # (a) LESS first-touch — the round-12 float32 kernel scratch halves
     # the warmup set (~10.5 GB -> ~5.3 GB across 32 workers) — and
     # (b) WHO the pilot overlaps. r10/r11 overlapped pilot ∥ px build,
     # but the px build is JVM-CPU-heavy and stretched the pilot from its
     # ~40 s floor to 104 s under FAIR contention (BENCH_r11: prep_sec ==
     # pilot_sec == 104.2 over a 68 s px build). Default now overlaps the
-    # pilot with the COLD batch instead ("pilot_cold"): prep_sec is the
+    # pilot with the COLD batch instead: prep_sec is the
     # px build alone, and the pilot's JIT + page-fault warmup rides the
     # cold batch's wall-clock — which is a one-time cost either way, and
     # whose early (scan/join) stages don't need the fused projections the
     # pilot is busy compiling. Consequences, documented: cold_batch_sec
     # becomes "first full-res batch sharing the session with the pilot
     # under FAIR" (it may run some late stages interpreted AND contend
-    # with the pilot — do not compare it across prep modes), while the
+    # with the pilot — do not compare it with r10/r11), while the
     # cold PROFILE stays clean (pilot + kernel-warmup job stages are
-    # group-excluded from its attribution). Warm batches see identical
-    # conditions in both modes. SPARK_GRAFT_KEEPUP_PREP_MODE=pilot_px
-    # restores the r10/r11 structure for A/B.
-    prep_mode = os.environ.get("SPARK_GRAFT_KEEPUP_PREP_MODE", "pilot_cold")
+    # group-excluded from its attribution).
     pilot_on = os.environ.get("SPARK_GRAFT_KEEPUP_PILOT", "1") != "0"
     prep_snap = _prof_snap()
     t_prep = time.perf_counter()
-    if pilot_on and prep_mode == "pilot_px":
-        with ThreadPoolExecutor(max_workers=1) as prep_pool:
-            fpx = prep_pool.submit(_build_px)
-            pilot_sec = _run_pilot()
-            px_build_sec = fpx.result()
-    else:
-        px_build_sec = _build_px()
+    px_build_sec = _build_px()
     prep_sec = time.perf_counter() - t_prep
     pdlt = _prof_delta(prep_snap)
     if pdlt is not None:
@@ -658,7 +635,7 @@ def _keepup_2880(batch: int = 8) -> dict:
         batch_profiles.setdefault("prep", []).append(pdlt)
     import statistics
 
-    if pilot_on and prep_mode != "pilot_px":
+    if pilot_on:
         with ThreadPoolExecutor(max_workers=1) as prep_pool:
             fpilot = prep_pool.submit(_run_pilot)
             cold = one_batch(
@@ -1180,7 +1157,7 @@ def _canary_seconds(spark, cpus: int) -> float:
     comparable across rounds and across the driver's 32- vs 8-core runs.
     The probe runs once untimed (JIT) before each timed reading, and the
     timed reading is published raw — a reading far above the calm band
-    (~0.5-0.7 s on this host, r15 calibration in OPTIMIZATION_r15.md)
+    (~0.5-0.7 s on the round-15 bench host)
     means the run's walls are weather-inflated and should be judged
     against core-normalized metrics instead. NOT added to ``value``."""
     from pyspark.sql import functions as F

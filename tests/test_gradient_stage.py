@@ -240,34 +240,6 @@ def test_fused_thresholds_survive_fully_masked_band(spark):
         assert got[k] == v, (k, got[k], v)
 
 
-def test_sentinel_disable_is_loud(spark, monkeypatch):
-    """XRDSPARK_GRAD_SENTINEL=0 silently reopened the round-4
-    fully-masked-band hole if the env var leaked into a production session;
-    plan construction must now emit a RuntimeWarning when the sentinel is
-    off — and stay silent when it's on (the default)."""
-    import warnings
-
-    from xrddatapipeline_spark.plans.gradient_stage import (
-        fused_gradient_inputs,
-    )
-
-    c = CONTROLS
-    px = spark.createDataFrame(
-        [("img", 0, 0, 5, False)],
-        "image_id string, y int, x int, intensity int, base_mask boolean",
-    )
-    lpx = spark.createDataFrame(
-        [("img", 0, 0)], "image_id string, y int, x int"
-    )
-    monkeypatch.setenv("XRDSPARK_GRAD_SENTINEL", "0")
-    with pytest.warns(RuntimeWarning, match="sentinel"):
-        fused_gradient_inputs(px, lpx, c)
-    monkeypatch.delenv("XRDSPARK_GRAD_SENTINEL")
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        fused_gradient_inputs(px, lpx, c)  # must not warn
-
-
 def test_gradient_float32_chain_close_to_float64(spark):
     """Round-12 A/B (verdict Next #6): integer intensities route the
     band kernel through a float32 chain (measured 2.3x per band-chain,

@@ -255,36 +255,23 @@ def test_local_checkpoint_barrier_equivalent_and_released(spark):
     calib.unpersist()
 
 
-def test_hybrid_nopx_barrier_equivalent(spark):
-    """barrier='hybrid-nopx' (no dense pixel cache; consumers re-derive the
-    column-pruned closed-form calibration projection) is bit-identical to
-    'hybrid' on every output."""
-    import pandas as pd
-
-    from tests.fixtures_images import images_long_df, make_image
-
+def test_retired_barrier_rejected_before_any_job(spark):
+    """Only persist / local_checkpoint / hybrid remain: the retired
+    no-dense-cache route is refused at the top of run_image_plan, before
+    the plan submits a single Spark job (eager barriers would otherwise
+    have materialized px first)."""
+    sc = spark.sparkContext
+    group = "retired-barrier-probe"
     pixels = images_long_df(
         spark, [("synth", 0, make_image(CONTROLS, seq=0))]
-    ).persist()
-    pixels.count()
-    outs = {}
-    for mode in ("hybrid", "hybrid-nopx"):
-        res = run_image_plan(
-            pixels, None, CONTROLS, gradient_stage=True, barrier=mode
-        )
-        outs[mode] = {
-            "integrals": res.integrals.orderBy("kind", "tth_idx").toPandas(),
-            "spottiness": res.spottiness.orderBy("qbin").toPandas(),
-            "outliers": res.outliers.orderBy("y", "x").toPandas(),
-        }
-        res.unpersist_all()
-    for name in outs["hybrid"]:
-        pd.testing.assert_frame_equal(
-            outs["hybrid"][name].reset_index(drop=True),
-            outs["hybrid-nopx"][name].reset_index(drop=True),
-            check_exact=True,
-        )
-    pixels.unpersist()
+    )
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        with pytest.raises(ValueError, match="unknown barrier"):
+            run_image_plan(pixels, None, CONTROLS, barrier="hybrid-nopx")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_empty_batch_eager_plan_builds(spark):

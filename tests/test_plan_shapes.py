@@ -254,3 +254,25 @@ def test_fused_integrals_spottiness_one_scan(spark):
         assert "InMemoryTableScan" not in p
     res.unpersist_all()
     pixels.unpersist()
+
+
+def test_outlier_stage_takes_histogram_route(spark):
+    """The ring-outlier stats have one route: the (ring key, intensity)
+    histogram. The lazy (persist) plan pre-aggregates candidates on
+    (image_id, ring_idx, intensity) and never collects raw per-pixel
+    intensities, so an edit that restores the array route fails here."""
+    import re
+
+    from tests.fixtures_images import CONTROLS, images_long_df, make_image
+    from xrddatapipeline_spark.plans.image_pipeline import run_image_plan
+
+    pixels = images_long_df(
+        spark, [("synth", 0, make_image(CONTROLS, seq=0))]
+    )
+    res = run_image_plan(pixels, None, CONTROLS, barrier="persist")
+    plan = res.outliers._jdf.queryExecution().analyzed().toString()
+    assert re.search(
+        r"Aggregate \[image_id#\d+, ring_idx#\d+, intensity#\d+\]", plan
+    ), plan
+    assert not re.search(r"collect_list\(intensity#\d+", plan), plan
+    res.unpersist_all()

@@ -19,9 +19,9 @@ spark.stop()
 """
 
 
-def _run_probe(extra_env: dict[str, str]) -> str:
+def _run_probe() -> str:
     root = os.getcwd()
-    env = dict(os.environ, **extra_env)
+    env = dict(os.environ)
     env.pop("MALLOC_MMAP_THRESHOLD_", None)
     env.pop("MALLOC_TRIM_THRESHOLD_", None)
     out = subprocess.run(
@@ -32,15 +32,6 @@ def _run_probe(extra_env: dict[str, str]) -> str:
     return out.stdout
 
 
-def test_malloc_opt_out_reaches_executor_env():
-    """round-4 ADVICE: XRDSPARK_MALLOC_TUNE=0 must strip the
-    spark.executorEnv.MALLOC_* confs too — in local mode workers inherit
-    the driver env, but on a cluster ONLY executorEnv reaches executors,
-    so leaving the confs set would make the opt-out a silent no-op."""
-    out = _run_probe({"XRDSPARK_MALLOC_TUNE": "0"})
-    assert "MMAP= ABSENT" in out and "TRIM= ABSENT" in out, out
-
-
 def test_malloc_tune_default_sets_executor_env():
-    out = _run_probe({})
+    out = _run_probe()
     assert "MMAP= 67108864" in out and "TRIM= 536870912" in out, out

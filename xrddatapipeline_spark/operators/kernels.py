@@ -823,7 +823,7 @@ def h_maxima(img: np.ndarray, h: float, max_iter: int = 512) -> np.ndarray:
     # (bit-identical boolean output to the float64 path) whenever the
     # image values and h are integers with |img| < 2^24 and
     # img.min() - h > -2^24 — the caller-side gate
-    # (plans/image_pipeline.h_maxima_per_qbin builds the raster float32
+    # (plans.image_pipeline.h_maxima_per_qbin builds the raster float32
     # only under that predicate; tests/test_kernels.py pins f32==f64 on
     # the synthetic fixtures and the planted-spot oracle).
     if isinstance(img, np.ndarray) and img.dtype in (

@@ -95,7 +95,8 @@ def lsh_bucket_vectorized(num_planes: int, dim: int):
     # TWICE per side (guide §4.4 — two ArrowEvalPython nodes per scan,
     # observed in the r15 plan). The function is pure, so marking it
     # non-deterministic only forbids that duplication; one Arrow pass per
-    # side remains (plans/r15/ann_lsh_bucketed_after.txt).
+    # side remains (one ArrowEvalPython per scan in ann_lsh_bucketed's
+    # formatted explain).
     return _bucket.asNondeterministic()
 
 

@@ -26,7 +26,6 @@ one-shuffle discipline as the rest of the per-image plan.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 import numpy as np
@@ -164,31 +163,9 @@ def second_gradients(
     )
 
 
-def resolve_band_rows(height: int, n_images: int | None = None) -> int:
-    """Band height for the fused gradient kernel.
-
-    Default 512 (6 bands at 2880^2). ``XRDSPARK_GRAD_BAND_ROWS`` overrides
-    for same-session A/B runs.
-
-    Round-10 A/B (scripts/ab_gradband_r10.py, 8 x 2880^2, two sessions,
-    order-rotated, min-of-3): wave packing does NOT move the steady state
-    — 720 rows (4 bands x 8 images = exactly one 32-core wave) min
-    gf-run 197.0 core-s, 512 (1.5 waves) 189.8, 360 (2 waves) 193.8;
-    batch minimums 94.6 / 80.9 / 79.6 s, within weather. The round-9
-    profile's grad_fused run/cpu = 4.1 (1007/245) was a weather+first-
-    touch artifact: steady-state run/cpu is 189.8/137.5 ~= 1.4, already
-    under the <= 2 bar — the Python kernel time the JVM thread waits on
-    IS the compute, and it's ~60 core-s over 192 tasks once the scratch
-    pool is warm. 512 stays the default."""
-    env = os.environ.get("XRDSPARK_GRAD_BAND_ROWS")
-    if env:
-        return max(2 * _GRAD_HALO + 1, int(env))
-    return 512
-
-
 def fused_gradient_inputs(
     px: DataFrame, lpx: DataFrame, controls: ImageControls,
-    band_rows: int | None = None,
+    band_rows: int = 512,
     n_images: int | None = None,
 ) -> DataFrame:
     """The banded gradient kernel WITHOUT materializing the dense raster.
@@ -214,6 +191,12 @@ def fused_gradient_inputs(
     Output rows: n_labeled + n_bands per image (~0.5 M + 6 at 2880^2)
     instead of 8.3 M — the dense gradient raster never leaves the kernel.
 
+    ``band_rows`` 512 (6 bands at 2880^2) is a measured default: a
+    round-10 A/B (8 x 2880^2, two sessions, order-rotated, min-of-3)
+    read min grad_fused run 197.0 / 189.8 / 193.8 core-s at 720 / 512 /
+    360 rows and batch minimums 94.6 / 80.9 / 79.6 s — wave packing does
+    not move the steady state beyond weather.
+
     Shuffle-byte economics (round-3 profile: the kernel-feed exchange was
     the single largest stage, ~1 GB write / 27% of batch core-time):
 
@@ -235,8 +218,6 @@ def fused_gradient_inputs(
     h, w = controls.size_y, controls.size_x
     cy = controls.center_y / (controls.pixel_size_y / 1000.0)
     cx = controls.center_x / (controls.pixel_size_x / 1000.0)
-    if band_rows is None:
-        band_rows = resolve_band_rows(h, n_images)
     n_bands = max(1, -(-h // band_rows))
     bh = band_rows
     halo = _GRAD_HALO
@@ -452,43 +433,23 @@ def fused_gradient_inputs(
     # leaves img's zeros in place), so bit-identity to np.percentile holds.
     # Image list comes from lpx (tiny): an image with no labeled pixels has
     # no threshold consumers, so its summary rows are never read.
-    # XRDSPARK_GRAD_SENTINEL=0 disables the union for same-session A/B
-    # perf runs ONLY (it re-introduces the fully-masked-band correctness
-    # hole the sentinel closes — never set it in production). Because a
-    # leaked env var would reopen the round-4 hole INVISIBLY at plan-build
-    # time, disabling it is loud: a RuntimeWarning every time a plan is
-    # built with the sentinel off.
-    import os as _os_mod
-
-    if _os_mod.environ.get("XRDSPARK_GRAD_SENTINEL", "1") == "0":
-        import warnings
-
-        warnings.warn(
-            "XRDSPARK_GRAD_SENTINEL=0: gradient-stage sentinel rows are "
-            "DISABLED — fully-masked bands will silently drop their "
-            "summary row (wrong percentile thresholds). This switch exists "
-            "only for same-session A/B perf runs; unset it in production.",
-            RuntimeWarning,
-            stacklevel=3,
+    sent = (
+        lpx.select("image_id")
+        .distinct()
+        .select(
+            "image_id",
+            F.explode(
+                F.sequence(F.lit(0), F.lit(n_bands - 1))
+            ).alias("band"),
         )
-    else:
-        sent = (
-            lpx.select("image_id")
-            .distinct()
-            .select(
-                "image_id",
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(n_bands - 1))
-                ).alias("band"),
+    )
+    for fld in src.schema.fields:
+        if fld.name not in ("image_id", "band"):
+            default = -1 if fld.name in ("p", "y", "x") else 0
+            sent = sent.withColumn(
+                fld.name, F.lit(default).cast(fld.dataType)
             )
-        )
-        for fld in src.schema.fields:
-            if fld.name not in ("image_id", "band"):
-                default = -1 if fld.name in ("p", "y", "x") else 0
-                sent = sent.withColumn(
-                    fld.name, F.lit(default).cast(fld.dataType)
-                )
-        src = src.unionByName(sent.select(*src.columns))
+    src = src.unionByName(sent.select(*src.columns))
     lsrc = lpx.select("image_id", "y", "x").withColumn("band", yb)
     if n_images is not None:
         src, lsrc = _balanced_group_partitions(

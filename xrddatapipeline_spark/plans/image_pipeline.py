@@ -32,25 +32,6 @@ from xrddatapipeline_spark.functions.binning import tth_bin_center
 from xrddatapipeline_spark.operators.ring_stats import flag_outliers
 from xrddatapipeline_spark.operators.raster import close_mask_pixels, label_pixels
 
-#: ring outlier stage: histogram (per distinct intensity) vs array (per
-#: pixel) order-stat route. Lockstep-tested exactly equal; the histogram
-#: shuffle carries ~35-65x fewer rows for quantized detector counts
-#: (exchange metrics pinned in tests/test_ring_stats_hist.py).
-#: History: an earlier A/B (pre-round-14) read the histogram route ~10%
-#: SLOWER locally and defaulted to array — but that measurement ran under
-#: BypassMergeSortShuffleWriter (pathologically slow on this host, fixed
-#: by bypassMergeThreshold=1 in session.py), which swamped the per-row
-#: shuffle cost the histogram route removes. Re-measured round 14 under
-#: the serialized-sort writer at 8 x 2880^2 / 2500 rings / local[32]
-#: (scripts/ab_outlier_route_r14.py, alternating A/B): histogram median
-#: 11.8 s vs array 39.2 s per batch pass — histogram wins EVERY pairwise
-#: rep, so it is now the default on both local and cluster (where the
-#: row win only grows — the shuffle crosses a network).
-#: Env override XRDSPARK_OUTLIER_HISTOGRAM=1/0 for A/B runs.
-import os as _os
-
-OUTLIER_HISTOGRAM = _os.environ.get("XRDSPARK_OUTLIER_HISTOGRAM", "1") == "1"
-
 #: (applicationId, shapes, stage-set) keys whose kernel-scratch warmup job
 #: has already been submitted this process — python workers persist across
 #: batches within a session, so one warmup per session covers them all and
@@ -141,6 +122,10 @@ def with_base_mask(
 #: 100 TB deployment processes batches, not millions of images per plan).
 _PK_MAX_IMAGES = 64
 
+#: eager plans broadcast the sparse mask sets into their dense joins up to
+#: this many materialized outlier rows (see run_image_plan)
+_SPARSE_BROADCAST_ROWS = 4_000_000
+
 
 def _image_index_expr(image_index: dict[str, int]) -> "F.Column":
     """Driver-literal image_id -> small-int map as a column expression."""
@@ -197,7 +182,15 @@ def outlier_pixels(
     ((img_idx << 32) | ring_idx) instead of (image_id STRING, ring_idx) —
     the histogram aggregation and the stats join-back both stop hashing a
     var-length string per dense row (see _pk_expr; same stats, same
-    flags)."""
+    flags).
+
+    The order statistics take the histogram route (one row per distinct
+    (ring, intensity), map-side combined; exactly equal to the per-pixel
+    array route, pinned in tests/test_ring_stats_hist.py). Its shuffle
+    carries ~35-65x fewer rows for quantized detector counts; the round-14
+    alternating A/B at 8 x 2880^2 / 2500 rings read histogram 11.8 s vs
+    array 39.2 s per pass, then 38.3 vs 69.7 s in the live plan, winning
+    every rep (OPTIMIZATION_r14.md §6)."""
     candidates = px.where(~F.col("base_mask") & (F.col("ring_idx") > 0))
     if image_index is not None and 0 < len(image_index) <= _PK_MAX_IMAGES:
         imap = _image_index_expr(image_index)
@@ -214,7 +207,7 @@ def outlier_pixels(
             value="intensity",
             esd_mul=esd_mul,
             min_count=10,
-            histogram=OUTLIER_HISTOGRAM,
+            histogram=True,
         )
     else:
         flagged = flag_outliers(
@@ -223,9 +216,7 @@ def outlier_pixels(
             value="intensity",
             esd_mul=esd_mul,
             min_count=10,
-            # see OUTLIER_HISTOGRAM: histogram route by default (map-side
-            # combined (ring, intensity) counts — exact for integer counts)
-            histogram=OUTLIER_HISTOGRAM,
+            histogram=True,
         )
     return flagged.where(F.col("is_outlier")).select("image_id", "y", "x")
 
@@ -366,33 +357,11 @@ def label_table_from(lpx: DataFrame, wrap_mode: str = "flip") -> DataFrame:
             diff_q,
         )
     elif wrap_mode == "gap":
-        w = Window.partitionBy("image_id", "label").orderBy("azim")
-        g = lpx.select("image_id", "label", "azim", "q").withColumn(
-            "gap", F.col("azim") - F.lag("azim").over(w)
-        )
-        ext_raw = F.max("azim") - F.min("azim")
-        first_gap = F.min(
-            F.when(
-                F.col("gap") > 10.0,
-                F.struct(F.col("azim").alias("at"), F.col("gap").alias("g")),
-            )
-        )
-        label_table = (
-            g.groupBy("image_id", "label")
-            .agg(
-                F.count("*").alias("area"),
-                ext_raw.alias("_ext_raw"),
-                first_gap.alias("_fg"),
-                diff_q,
-            )
-            .withColumn(
-                "diff_azim",
-                F.when(
-                    (F.col("_ext_raw") > 359.0) & F.col("_fg").isNotNull(),
-                    F.lit(360.0) - F.col("_fg.g"),
-                ).otherwise(F.col("_ext_raw")),
-            )
-            .select("image_id", "label", "area", "diff_azim", "diff_q")
+        label_table = _gap_scan(
+            lpx, [F.count("*").alias("area"), diff_q], carry=("q",)
+        ).select(
+            "image_id", "label", "area",
+            F.col("extent").alias("diff_azim"), "diff_q",
         )
     else:
         raise ValueError(f"wrap_mode must be 'flip' or 'gap', got {wrap_mode!r}")
@@ -444,8 +413,24 @@ def wrapped_extent_gap_scan(
     window sort plus one keyed aggregation — the same single exchange
     as label_table_from; labels bound the group size.
     """
+    return _gap_scan(
+        lpx, [], wrap_threshold=wrap_threshold, min_gap=min_gap
+    ).select("image_id", "label", "extent_raw", "extent")
+
+
+def _gap_scan(
+    lpx: DataFrame,
+    aggs: list,
+    carry: tuple = (),
+    wrap_threshold: float = 359.0,
+    min_gap: float = 10.0,
+) -> DataFrame:
+    """The one first-gap scan behind ``wrapped_extent_gap_scan`` and
+    ``label_table_from(wrap_mode="gap")``: per (image_id, label) the
+    ``extent_raw`` / ``extent`` pair, plus the caller's ``aggs`` computed
+    in the same aggregation over the ``carry`` columns."""
     w = Window.partitionBy("image_id", "label").orderBy("azim")
-    gaps = lpx.select("image_id", "label", "azim").withColumn(
+    gaps = lpx.select("image_id", "label", "azim", *carry).withColumn(
         "gap", F.col("azim") - F.lag("azim").over(w)
     )
     # first qualifying gap in azimuth order == min struct(azim-of-gap, gap):
@@ -460,18 +445,15 @@ def wrapped_extent_gap_scan(
     agg = gaps.groupBy("image_id", "label").agg(
         (F.max("azim") - F.min("azim")).alias("extent_raw"),
         first_gap.alias("_fg"),
+        *aggs,
     )
-    return agg.select(
-        "image_id",
-        "label",
-        "extent_raw",
+    return agg.withColumn(
+        "extent",
         F.when(
             (F.col("extent_raw") > wrap_threshold)
             & F.col("_fg").isNotNull(),
             F.lit(360.0) - F.col("_fg.g"),
-        )
-        .otherwise(F.col("extent_raw"))
-        .alias("extent"),
+        ).otherwise(F.col("extent_raw")),
     )
 
 
@@ -1133,7 +1115,6 @@ def run_image_plan(
     observe: bool = False,
     barrier: str = "persist",
     corrections: dict | None = None,
-    sparse_broadcast_rows: int = 4_000_000,
     n_images: int | None = None,
     h_maxima: bool = True,
 ) -> ImagePlanResult:
@@ -1169,19 +1150,15 @@ def run_image_plan(
     local_checkpoint costs the whole image — the right trade under
     foreachBatch, which retries the batch anyway."""
     shape = (controls.size_y, controls.size_x)
-    if barrier not in ("persist", "local_checkpoint", "hybrid", "hybrid-nopx"):
+    if barrier not in ("persist", "local_checkpoint", "hybrid"):
         raise ValueError(f"unknown barrier {barrier!r}")
-    eager = barrier in ("local_checkpoint", "hybrid", "hybrid-nopx")
+    eager = barrier != "persist"
     if corrections:
         from xrddatapipeline_spark.operators.corrections import (
             apply_correction_images,
         )
 
         pixels = apply_correction_images(pixels, **corrections)
-
-    import os as _os
-    import sys as _sys
-    import time as _time
 
     if (
         eager
@@ -1271,28 +1248,7 @@ def run_image_plan(
                 target=_warm, daemon=True, name="kernel-warmup"
             ).start()
 
-    _bt = bool(_os.environ.get("XRDSPARK_BARRIER_TIMING"))
-    _bt_last = [_time.perf_counter()]
-
     def _bar(df: DataFrame, dense: bool = False, label: str = "") -> DataFrame:
-        if _bt:
-            _t0 = _time.perf_counter()
-            print(
-                f"BT {label or '?'} plan-build {_t0 - _bt_last[0]:.2f}s",
-                file=_sys.stderr, flush=True,
-            )
-            try:
-                return _bar_labeled(df, dense, label)
-            finally:
-                _bt_last[0] = _time.perf_counter()
-                print(
-                    f"BT {label or '?'} dense={dense} "
-                    f"materialize {_bt_last[0] - _t0:.2f}s",
-                    file=_sys.stderr, flush=True,
-                )
-        return _bar_labeled(df, dense, label)
-
-    def _bar_labeled(df: DataFrame, dense: bool, label: str) -> DataFrame:
         # name the barrier's stages in the Spark UI / REST profile: the
         # round-7/8 profiles showed three big "localCheckpoint at
         # <unknown>" stages that could not be attributed to a frame.
@@ -1312,16 +1268,6 @@ def run_image_plan(
             return df.persist()
         from pyspark.storagelevel import StorageLevel
 
-        if barrier == "hybrid-nopx" and dense:
-            # no dense barrier at all: every consumer re-derives the
-            # (column-pruned) closed-form calibration projection from the
-            # caller's raw pixel cache. Worth it when the calib columns are
-            # computed (calib=None) rather than joined: Catalyst prunes the
-            # trig to just the columns each consumer reads, so none of the
-            # 14-column cache build/serialize/re-scan cost is paid. With a
-            # calib JOIN the join would re-execute per consumer — keep
-            # "hybrid" there.
-            return df
         if barrier == "hybrid" and dense:
             # DENSE frames (the calib-joined pixel table, the gradient
             # raster) are re-scanned by 4-6 consumers: a row-format
@@ -1464,7 +1410,7 @@ def run_image_plan(
     # dense mask falls back to SMJ instead of a driver-sized broadcast.
     # Under "persist" the frames are InMemoryRelations whose stats AQE
     # already sees — no hint needed.
-    if eager and outliers.count() <= sparse_broadcast_rows:
+    if eager and outliers.count() <= _SPARSE_BROADCAST_ROWS:
         sb = F.broadcast
     else:
         sb = None

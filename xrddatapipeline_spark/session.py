@@ -56,31 +56,23 @@ def get_spark(
     # the full temp set, which measured 9.5 s vs 0.9 s per band kernel under
     # 24-way concurrency (32-core host, 8 x 2880^2 batch). A fixed 64 MB
     # threshold serves the temps from the reused heap from the first call.
-    # Workers inherit the driver env in local mode; executorEnv covers a
-    # real cluster.
-    # Opt-out via XRDSPARK_MALLOC_TUNE=0 (pinning the mmap threshold also
-    # pins the trim threshold — measured both ways at the 8 x 2880^2
-    # config before keeping this default).
-    malloc_tune = os.environ.get("XRDSPARK_MALLOC_TUNE", "1") != "0"
-    if malloc_tune:
-        os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "67108864")
-        os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "536870912")
+    # Both thresholds stay pinned (round 3, STATUS.md: 183 s per batch vs
+    # 443 s untuned and 546 s with only the mmap threshold pinned); a
+    # caller's own MALLOC_*_THRESHOLD_ wins. Workers inherit the driver
+    # env in local mode; executorEnv covers a real cluster.
+    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "67108864")
+    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "536870912")
 
-    builder = SparkSession.builder.appName(app_name).master(master)
-    if malloc_tune:
-        # the opt-out must reach spark.executorEnv.* too: in local mode
-        # workers inherit the driver env, but on a real cluster ONLY these
-        # confs reach executors — setting them unconditionally would make
-        # XRDSPARK_MALLOC_TUNE=0 a silent no-op there (round-4 ADVICE).
-        builder = builder.config(
-            "spark.executorEnv.MALLOC_MMAP_THRESHOLD_",
-            os.environ.get("MALLOC_MMAP_THRESHOLD_", "67108864"),
-        ).config(
-            "spark.executorEnv.MALLOC_TRIM_THRESHOLD_",
-            os.environ.get("MALLOC_TRIM_THRESHOLD_", "536870912"),
-        )
     builder = (
-        builder
+        SparkSession.builder.appName(app_name).master(master)
+        .config(
+            "spark.executorEnv.MALLOC_MMAP_THRESHOLD_",
+            os.environ["MALLOC_MMAP_THRESHOLD_"],
+        )
+        .config(
+            "spark.executorEnv.MALLOC_TRIM_THRESHOLD_",
+            os.environ["MALLOC_TRIM_THRESHOLD_"],
+        )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Shuffle writer (round 14): always take the serialized-sort path
         # (UnsafeShuffleWriter), never BypassMergeSortShuffleWriter. The
@@ -93,19 +85,11 @@ def get_spark(
         # min-of-3, same session shape): a trivial repartition+agg's map
         # stage 14.7 -> 0.5 run core-s, shuffle write time 9.0 s -> 13 ms;
         # headline-bench total (interleaved A/B) ~2x. One output file per
-        # map task is also the right shape at scale (guide §2.2).
-        # Round 15 (r14 verdict #2): the r14 driver run could not verify
-        # this config (weathered window), so it is now A/B-able in
-        # isolation — XRDSPARK_SHUFFLE_WRITER=legacy restores Spark's
-        # default threshold (200, i.e. the bypass writer at local
-        # partition counts); any other value keeps the serialized-sort
-        # writer. The in-repo A/B record lives in OPTIMIZATION_r15.md.
-        .config(
-            "spark.shuffle.sort.bypassMergeThreshold",
-            "200"
-            if os.environ.get("XRDSPARK_SHUFFLE_WRITER") == "legacy"
-            else "1",
-        )
+        # map task is also the right shape at scale (guide §2.2). A
+        # perfbench re-check at local[4] (5 alternating pairs per
+        # workload, CHANGES.md) had the bypass writer ahead in 8 of 10
+        # pairs by 4-7% in median: not every pair, so the setting stays.
+        .config("spark.shuffle.sort.bypassMergeThreshold", "1")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -143,12 +143,6 @@ class StreamingImagePipeline:
     broadcast_calib: bool = True
     gradient_stage: bool = False
     observe_metrics: bool = False
-    # local_checkpoint truncates lineage at the plan's reuse boundaries:
-    # the per-image plan is deep, and eager re-analysis otherwise costs the
-    # driver ~30 s per BATCH (size-independent). foreachBatch retries a
-    # failed batch wholesale, so the lost fault-tolerance of the
-    # checkpointed RDDs is already covered one level up.
-    barrier: str = "local_checkpoint"
     # K3 viz parity: also materialize per-image `<id>_base.tif` /
     # `<id>_outliermask.tif` boolean rasters under out_dir/masks
     # (pipeline.py:152-159, 196-216) — off by default (parquet is the
@@ -318,7 +312,13 @@ class StreamingImagePipeline:
                 broadcast_calib=self.broadcast_calib,
                 gradient_stage=self.gradient_stage,
                 observe=self.observe_metrics,
-                barrier=self.barrier,
+                # local_checkpoint truncates lineage at the plan's reuse
+                # boundaries: the per-image plan is deep, and eager
+                # re-analysis otherwise costs the driver ~30 s per BATCH
+                # (size-independent). foreachBatch retries a failed batch
+                # wholesale, so the lost fault-tolerance of the
+                # checkpointed RDDs is already covered one level up.
+                barrier="local_checkpoint",
             )
             # independent sinks over the already-materialized barriers:
             # submit concurrently so stage tails of one output job overlap
