@@ -100,16 +100,41 @@ def _synthetic_pixels(spark, c, n_images: int = 1):
     )
 
 
+def _noop_writer(group: str | None = None):
+    """A ``run_batch`` write that materializes each output into the noop
+    sink (no driver-side collect; executors do all the work). ``group``
+    tags the output jobs' ``spark.jobGroup.id`` for split-arm stage
+    attribution; it is set inside the write because each output runs on
+    its own pool thread, and pool threads do not reliably inherit the
+    submitting thread's local properties (py4j pinned threads map 1:1 to
+    fresh JVM threads)."""
+
+    def write(df, name: str) -> None:
+        sc = df.sparkSession.sparkContext
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            df.write.format("noop").mode("overwrite").save()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    return write
+
+
 def _image_plan_seconds(spark) -> float:
-    """End-to-end per-image XRD plan (the reference's core workload,
+    """End-to-end per-image XRD batch (the reference's core workload,
     BASELINE.md stage timers): corrections -> ring outlier mask -> closing/
     labeling -> classification -> 4-way integrals -> spot stats ->
-    spottiness, on one synthetic SIZExSIZE detector image generated
-    executor-side (pure column expressions — no driver data). Calibration
+    spottiness -> per-Qbin h-maxima, plus the overlapped csim series, on
+    one synthetic SIZExSIZE detector image generated executor-side (pure
+    column expressions — no driver data). It is the streamed micro-batch's
+    ``run_batch`` over noop sinks, so it times what ships. Calibration
     build is excluded (once-per-run cache, pipeline_queue.py:183)."""
     from xrddatapipeline_spark.calib.cache import build_calib_pixels
     from xrddatapipeline_spark.calib.geometry import ImageControls
-    from xrddatapipeline_spark.plans.image_pipeline import run_image_plan
+    from xrddatapipeline_spark.plans.image_pipeline import (
+        cosine_similarity_series,
+    )
+    from xrddatapipeline_spark.streaming.pipeline import run_batch
 
     size = int(os.environ.get("SPARK_GRAFT_IMG_SIZE", "512"))
     c = ImageControls(
@@ -135,17 +160,13 @@ def _image_plan_seconds(spark) -> float:
     pixels.count()
 
     t0 = time.perf_counter()
-    res = run_image_plan(pixels, calib, c, barrier="local_checkpoint")
-    # the production submission order (concurrent output jobs, guide §2.6)
-    # lives in ImagePlanResult.write_core_outputs — the bench merely calls
-    # it (round 15, r14 verdict #3: keep the harness inert). Same timed
-    # work, same sinks as r14 (which measured min-of-5 4.20 -> 3.97 s at
-    # 512^2 when the submission went concurrent).
-    res.write_core_outputs(
-        lambda out: out.write.format("noop").mode("overwrite").save()
-    )
+    with run_batch(
+        pixels, calib, c, _noop_writer(),
+        lambda: cosine_similarity_series(pixels),
+        barrier="local_checkpoint",
+    ):
+        pass
     elapsed = time.perf_counter() - t0
-    res.unpersist_all()
     pixels.unpersist()
     calib.unpersist()
     return round(elapsed, 4)
@@ -176,17 +197,6 @@ def _keepup_2880(batch: int = 8) -> dict:
     fixed-size pixel cache build — same bytes every round, so it
     calibrates host weather) and ``pilot_sec`` (the full-size-controls JIT
     pilot).
-
-    h-maxima A/B (``SPARK_GRAFT_KEEPUP_HOFF_REPS`` batches with
-    h_maxima=False, default 3): round 9's driver run published
-    h_on/h_off = 2.79 on identical binaries because the arms were ORDERED
-    (all h-on batches first, all h-off last) — a session-long weather ramp
-    biases the median-of-arms ratio arbitrarily. The arms are
-    INTERLEAVED pairwise with alternating within-pair order
-    (on,off / off,on / on,off ...); the hoff batches still run (they feed
-    hoff_sec_per_image and the weather_hoff index) but every whole-batch
-    h estimator derived from them was dropped from the published line in
-    round 13 — see the split-arm paragraph below.
 
     Split-arm h A/B (round 11 — the PRIMARY h metric, ``h_split_arm``):
     two rounds running, whole-batch arms published over-bar ratios (r9
@@ -220,11 +230,14 @@ def _keepup_2880(batch: int = 8) -> dict:
     dropped from the line in round 13 after the one-round overlap the
     r12 verdict asked for — the split-arm record refuted them on this
     host; their history lives in BENCH_r09-r12/STATUS. h_split_arm is
-    the only published h metric.
+    the only published h metric. ``hoff_sec_per_image`` is the median
+    split off-arm wall per image: it is measured CONCURRENTLY with the
+    on-arm (the two halves share the session's cores), so it is not the
+    wall of a batch run alone without h-maxima.
 
     Per-batch weather index (round 11): every whole-batch profile carries
     ``px_core_sec`` (the ``barrier:px`` stages' core-seconds — identical
-    fixed work in every cold/warm/hoff batch) and ``weather_index``
+    fixed work in every cold/warm batch) and ``weather_index``
     (px_core_sec / session min), so a poisoned batch is identifiable from
     the published profiles instead of needing cross-session forensics.
 
@@ -239,8 +252,8 @@ def _keepup_2880(batch: int = 8) -> dict:
     from xrddatapipeline_spark.calib.geometry import ImageControls
     from xrddatapipeline_spark.plans.image_pipeline import (
         cosine_similarity_series,
-        run_image_plan,
     )
+    from xrddatapipeline_spark.streaming.pipeline import run_batch
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     profile = os.environ.get("XRDSPARK_KEEPUP_PROFILE", "1") != "0"
@@ -260,7 +273,7 @@ def _keepup_2880(batch: int = 8) -> dict:
         # (negligible cost; keeps outlier batches diagnosable from the
         # published BENCH json instead of being one-off mysteries).
         # Retention raised: a full session is prep + cold + 3 warm +
-        # 3 hoff + 2 split-arm batches at ~85 stages each — the 1000-stage
+        # 4 split-arm batches at ~85 stages each — the 1000-stage
         # default would evict early-batch stages out of the REST deltas.
         extra_conf["spark.ui.enabled"] = "true"
         extra_conf["spark.ui.retainedJobs"] = "4000"
@@ -390,7 +403,7 @@ def _keepup_2880(batch: int = 8) -> dict:
             ) / 1000.0
             new.sort(key=lambda s: s.get("executorRunTime", 0), reverse=True)
             # fixed-work weather anchor: the barrier:px cache build does
-            # identical work in every cold/warm/hoff batch, so its
+            # identical work in every cold/warm batch, so its
             # core-seconds calibrate host weather per batch (the round-10
             # judge proved arm inflation with exactly this stage: 508 vs
             # 145-157 core-s across batches of identical work)
@@ -437,76 +450,23 @@ def _keepup_2880(batch: int = 8) -> dict:
         except Exception:
             return None
 
-    def _noop_write(
-        o, label: str | None = None, group: str | None = None
-    ) -> None:
-        # name the output job's stages in the REST profile (callSite.short
-        # is thread-local, and each output job runs on its own pool thread).
-        # `group` tags the job's spark.jobGroup.id for split-arm stage
-        # attribution — set INSIDE the task because pool threads do not
-        # reliably inherit the submitting thread's local properties
-        # (py4j pinned threads map 1:1 to fresh JVM threads).
-        sc = spark.sparkContext
-        if label:
-            sc.setLocalProperty("callSite.short", label)
-        if group:
-            sc.setLocalProperty("spark.jobGroup.id", group)
-        try:
-            o.write.format("noop").mode("overwrite").save()
-        finally:
-            if label:
-                sc.setLocalProperty("callSite.short", None)
-            if group:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-
     def one_batch(
-        h_maxima: bool = True,
         prof_key: str | None = None,
         exclude_groups: "tuple[str, ...]" = (),
     ) -> float:
         snap = _prof_snap() if prof_key else None
         jobs_before = _jobs_snap() if (prof_key and exclude_groups) else None
         t0 = time.perf_counter()
-        with ThreadPoolExecutor(max_workers=8) as pool:
-            # csim needs NOTHING from the plan — only (dataset, seq, y, x,
-            # intensity) off the raw pixel cache — so its big window
-            # shuffle job is submitted FIRST and runs concurrently with
-            # run_image_plan's eager barrier chain (round-8 overlap: the
-            # barriers were profiled at ~36% of core time with csim
-            # previously serialized after them). Identical output to
-            # csim-over-res.pixels: the operator's first select takes the
-            # same fields off the raw frame (the barriered px drops dataset/seq).
-            csim_fut = pool.submit(
-                _noop_write, cosine_similarity_series(pixels), "out:csim"
-            )
-            res = run_image_plan(
-                pixels, None, c, gradient_stage=True, barrier=barrier,
-                n_images=batch, h_maxima=h_maxima,
-            )
-            outs = [
-                (res.integrals, "out:integrals"),
-                (res.spot_stats, "out:spot_stats"),
-                (res.spottiness, "out:spottiness"),
-                (res.outliers, "out:outliers"),
-            ]
-            if res.h_maxima is not None:
-                # A19 runs inside the reference's spottiness stage — part
-                # of the "full parity" keep-up number since round 5
-                outs.append((res.h_maxima, "out:h_maxima"))
-            if res.gradient is not None:
-                outs.append((res.gradient.on_arc_labels, "out:grad_arcs"))
-            # the remaining outputs are independent jobs over the
-            # already-materialized barriers: submit them concurrently so
-            # one job's stage tails overlap the next job's ramp-up
-            # instead of leaving cores idle between sequential actions
-            # (same overlap a multi-sink streaming batch gets on a real
-            # cluster)
-            futs = [pool.submit(_noop_write, out, lbl) for out, lbl in outs]
-            for f in futs:
-                f.result()
-            csim_fut.result()
+        # csim over the raw pixel cache: identical output to
+        # csim-over-res.pixels (the operator's first select takes the same
+        # fields off the raw frame; the barriered px drops dataset/seq)
+        with run_batch(
+            pixels, None, c, _noop_writer(),
+            lambda: cosine_similarity_series(pixels),
+            gradient_stage=True, barrier=barrier, n_images=batch,
+        ):
+            pass
         elapsed = time.perf_counter() - t0
-        res.unpersist_all()
         if prof_key is not None:
             # stages of concurrently-running tagged jobs (the pilot and
             # the kernel-warmup overlapping the COLD batch in the default
@@ -581,24 +541,14 @@ def _keepup_2880(batch: int = 8) -> dict:
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         ppx.count()
-        pres = run_image_plan(
-            ppx, None, pc, gradient_stage=True, barrier=barrier, n_images=1
-        )
-        # csim over the RAW pixel cache — the same plan shape one_batch
-        # compiles, so the pilot pre-JITs the right generated classes
-        pouts = [pres.integrals, pres.spot_stats, pres.spottiness,
-                 pres.outliers, cosine_similarity_series(ppx)]
-        if pres.h_maxima is not None:
-            pouts.append(pres.h_maxima)
-        if pres.gradient is not None:
-            pouts.append(pres.gradient.on_arc_labels)
-        with ThreadPoolExecutor(max_workers=len(pouts)) as pool:
-            for f in [
-                pool.submit(_noop_write, out, None, "pilot")
-                for out in pouts
-            ]:
-                f.result()
-        pres.unpersist_all()
+        # the same batch one_batch runs, so the pilot pre-JITs the right
+        # generated classes
+        with run_batch(
+            ppx, None, pc, _noop_writer("pilot"),
+            lambda: cosine_similarity_series(ppx),
+            gradient_stage=True, barrier=barrier, n_images=1,
+        ):
+            pass
         ppx.unpersist()
         spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
         return time.perf_counter() - t_pilot
@@ -646,30 +596,8 @@ def _keepup_2880(batch: int = 8) -> dict:
     else:
         cold = one_batch(prof_key="cold")
     warm_reps = max(1, int(os.environ.get("SPARK_GRAFT_KEEPUP_WARM_REPS", "3")))
-    # Interleaved h A/B (round 10 — VERDICT r9 #1): ordered arms let a
-    # session-long weather ramp masquerade as a blown h-bar (BENCH_r09
-    # published 2.79 when the uncontended truth was 1.23). Pairwise
-    # interleave with alternating within-pair order: each warm batch gets
-    # a temporally ADJACENT hoff partner, so a monotone drift cancels in
-    # the per-pair ratio. hoff reps default 3 (round 9: a median-of-2 is
-    # poisoned by one weather outlier).
-    hoff_reps = int(os.environ.get("SPARK_GRAFT_KEEPUP_HOFF_REPS", "3"))
-    warms: list[float] = []
-    hoffs: list[float] = []
-    arm_order: list[str] = []
-    for i in range(max(warm_reps, hoff_reps)):
-        pair = [("on", True), ("off", False)]
-        if i % 2:
-            pair.reverse()
-        for arm, h_on in pair:
-            if h_on and len(warms) < warm_reps:
-                warms.append(one_batch(prof_key="warm"))
-                arm_order.append("on")
-            elif not h_on and len(hoffs) < hoff_reps:
-                hoffs.append(one_batch(h_maxima=False, prof_key="hoff"))
-                arm_order.append("off")
+    warms = [one_batch(prof_key="warm") for _ in range(warm_reps)]
     warm = statistics.median(warms)
-    hoff = statistics.median(hoffs) if hoffs else None
 
     # ------------------------------------------------------------------
     # Split-arm h A/B (round 11 — see the docstring): both arms inside
@@ -687,6 +615,7 @@ def _keepup_2880(batch: int = 8) -> dict:
         half = batch // 2
         low_on = rep % 2 == 0
         walls: dict[str, float] = {}
+        arm_images: dict[str, int] = {}
 
         def run_arm(group: str, h_on: bool, low_half: bool) -> None:
             sc = spark.sparkContext
@@ -704,30 +633,15 @@ def _keepup_2880(batch: int = 8) -> dict:
                 n_arm = half if low_half else batch - half
                 hpx = pixels.where(cond)
                 t0 = time.perf_counter()
-                res = run_image_plan(
-                    hpx, None, c, gradient_stage=True, barrier=barrier,
+                with run_batch(
+                    hpx, None, c, _noop_writer(group),
+                    lambda: cosine_similarity_series(hpx),
+                    gradient_stage=True, barrier=barrier,
                     n_images=n_arm, h_maxima=h_on,
-                )
-                outs = [
-                    (res.integrals, "out:integrals"),
-                    (res.spot_stats, "out:spot_stats"),
-                    (res.spottiness, "out:spottiness"),
-                    (res.outliers, "out:outliers"),
-                    (cosine_similarity_series(hpx), "out:csim"),
-                ]
-                if res.h_maxima is not None:
-                    outs.append((res.h_maxima, "out:h_maxima"))
-                if res.gradient is not None:
-                    outs.append((res.gradient.on_arc_labels, "out:grad_arcs"))
-                with ThreadPoolExecutor(max_workers=4) as p:
-                    futs = [
-                        p.submit(_noop_write, o, lbl, group)
-                        for o, lbl in outs
-                    ]
-                    for f in futs:
-                        f.result()
-                walls[group] = round(time.perf_counter() - t0, 1)
-                res.unpersist_all()
+                ):
+                    pass
+                walls[group] = time.perf_counter() - t0
+                arm_images[group] = n_arm
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
 
@@ -791,8 +705,11 @@ def _keepup_2880(batch: int = 8) -> dict:
             # within-batch weather check: identical fixed work per half
             "on_px_core_sec": round(on["px"], 1),
             "off_px_core_sec": round(off["px"], 1),
-            "wall_on_sec": walls.get("split:on"),
-            "wall_off_sec": walls.get("split:off"),
+            "wall_on_sec": round(walls["split:on"], 1),
+            "wall_off_sec": round(walls["split:off"], 1),
+            "off_sec_per_image": round(
+                walls["split:off"] / arm_images["split:off"], 2
+            ),
             "ratio_run": round(on["run"] / off["run"], 3),
             "ratio_cpu": (
                 round(on["cpu"] / off["cpu"], 3) if off["cpu"] > 0 else None
@@ -861,8 +778,8 @@ def _keepup_2880(batch: int = 8) -> dict:
         "cold_batch_sec": round(cold, 2),
         "px_build_sec": round(px_build_sec, 2),
         "sec_per_image": round(sec_per_img, 2),
+        "sec_per_image_best": round(min(warms) / batch, 2),
         "images_per_sec": round(batch / warm, 3),
-        "arm_order": "".join("1" if a == "on" else "0" for a in arm_order),
     }
     if pilot_sec is not None:
         out["pilot_sec"] = round(pilot_sec, 2)
@@ -918,29 +835,28 @@ def _keepup_2880(batch: int = 8) -> dict:
         if cpur:
             out["h_split_arm_cpu"] = _geomean(cpur)
         out["h_split_arm_batches"] = ratios
+        out["hoff_sec_per_image"] = round(
+            statistics.median(s["off_sec_per_image"] for s in splits), 2
+        )
 
     # per-batch weather index over the whole batches (identical fixed px
     # work): px_core_sec / session min. Annotated into the profiles so a
     # poisoned batch is identifiable from the sidecar alone.
     px_all = [
         p["px_core_sec"]
-        for k in ("cold", "warm", "hoff")
+        for k in ("cold", "warm")
         for p in batch_profiles.get(k, [])
         if p.get("px_core_sec")
     ]
     if px_all:
         px_min = min(px_all)
-        for k in ("cold", "warm", "hoff"):
+        for k in ("cold", "warm"):
             for p in batch_profiles.get(k, []):
                 if p.get("px_core_sec"):
                     p["weather_index"] = round(p["px_core_sec"] / px_min, 2)
         out["weather_warm"] = [
             p.get("weather_index")
             for p in batch_profiles.get("warm", [])
-        ]
-        out["weather_hoff"] = [
-            p.get("weather_index")
-            for p in batch_profiles.get("hoff", [])
         ]
     if batch_profiles:
         # Round 8 lesson: embedding the full per-batch REST stage profiles
@@ -971,11 +887,6 @@ def _keepup_2880(batch: int = 8) -> dict:
             out["profiles_path"] = prof_path
         except OSError as e:
             print(f"profile sidecar write failed: {e!r}", file=sys.stderr)
-    if hoff is not None:
-        out["hoff_batch_sec"] = round(hoff, 2)
-        out["hoff_batches_sec"] = [round(v, 2) for v in hoffs]
-        out["hoff_sec_per_image"] = round(hoff / batch, 2)
-        out["sec_per_image_best"] = round(min(warms) / batch, 2)
     return out
 
 
@@ -1117,8 +1028,7 @@ LINE_BUDGET = 1600
 #: diagnostics first; the headline value/queries/sec_per_image and the h
 #: A/B ratios (h_split_arm above all) are never dropped.
 SHEDDABLE = [
-    "weather_warm", "weather_hoff", "h_split_arm_batches",
-    "hoff_batches_sec", "warm_spread_sec", "arm_order",
+    "weather_warm", "h_split_arm_batches", "warm_spread_sec",
     "warm_batches_sec",
     "core_cpu_sec_per_image", "prep_sec",
     "pilot_sec", "px_build_sec", "cold_batch_sec", "profiles_path",

@@ -13,8 +13,9 @@ from a .imctrl or .poni file, optional masks from a .immask file.
         --controls run.poni --out /data/out --watch --interval "1 second"
 
 Outputs: parquet tables integrals / spot_stats / spottiness / outliers /
-csim under --out (Delta where delta-spark is installed), readable with the
-plans.readback query layer or any SQL engine.
+h_maxima / csim (plus gradient_arcs with --gradient) under --out (Delta
+where delta-spark is installed), readable with the plans.readback query
+layer or any SQL engine.
 """
 
 from __future__ import annotations

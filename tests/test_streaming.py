@@ -13,7 +13,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from xrddatapipeline_spark.calib.cache import build_calib_pixels
+from xrddatapipeline_spark.plans.image_pipeline import cosine_similarity_series
 from xrddatapipeline_spark.streaming import StreamingImagePipeline, read_pixel_stream
+from xrddatapipeline_spark.streaming.pipeline import run_batch
 from tests.fixtures_images import CONTROLS, images_long_df, make_image
 
 
@@ -665,7 +667,7 @@ def test_plan_failure_settles_csim_before_batch_exits(
 ):
     """ADVICE r8: if run_image_plan raises, the overlapped csim thread must
     be SETTLED (its append finished or failed) before process_batch exits —
-    an orphaned in-flight append would race the retry's _append_csim into
+    an orphaned in-flight append would race the retry's csim append into
     duplicate (dataset, seq) csim rows."""
     import threading
     import time as _time
@@ -678,14 +680,15 @@ def test_plan_failure_settles_csim_before_batch_exits(
     pipe = StreamingImagePipeline(spark, calib, CONTROLS, str(tmp_path / "o"))
 
     csim_done = threading.Event()
-    orig_append = pipe._append_csim
+    orig_frame = pipe._csim_frame
 
-    def slow_append(batch_df):
+    def slow_frame(batch_df):
         _time.sleep(1.5)  # still in flight when run_image_plan raises
-        orig_append(batch_df)
+        frame = orig_frame(batch_df)
         csim_done.set()
+        return frame
 
-    monkeypatch.setattr(pipe, "_append_csim", slow_append)
+    monkeypatch.setattr(pipe, "_csim_frame", slow_frame)
 
     def boom(*a, **k):
         raise RuntimeError("plan construction failed")
@@ -704,3 +707,65 @@ def test_plan_failure_settles_csim_before_batch_exits(
     # appends alongside a FINISHED write, never a concurrent one)
     got = spark.read.parquet(str(tmp_path / "o" / "csim"))
     assert got.count() == 1
+
+
+def test_sink_failure_settles_csim_and_releases_plan(spark):
+    """A sink's write raising inside run_batch propagates, but only after
+    the overlapped csim write has settled and every frame the plan
+    persisted has been released."""
+    import threading
+    import time as _time
+
+    from tests.test_barrier import _persistent_rdd_ids
+
+    calib = build_calib_pixels(spark, CONTROLS)
+    px = images_long_df(spark, [("synth", 0, make_image(CONTROLS, seq=0))])
+    before = _persistent_rdd_ids(spark)
+    live: list[set[int]] = []
+    sink_failed, csim_done = threading.Event(), threading.Event()
+
+    def slow_csim():
+        # still in flight when the failing sink raises
+        assert sink_failed.wait(timeout=300)
+        _time.sleep(1.5)
+        return cosine_similarity_series(px)
+
+    def write(df, name):
+        if name == "spot_stats":
+            live.append(_persistent_rdd_ids(spark) - before)
+            sink_failed.set()
+            raise RuntimeError("sink down")
+        df.write.format("noop").mode("overwrite").save()
+        if name == "csim":
+            csim_done.set()
+
+    with pytest.raises(RuntimeError, match="sink down"):
+        with run_batch(px, calib, CONTROLS, write, slow_csim,
+                       barrier="local_checkpoint"):
+            pytest.fail("the with-body must not run after a sink failed")
+    assert csim_done.is_set(), "run_batch raised with csim still in flight"
+    assert live and live[0], "the plan's barrier frames were not persisted"
+    assert not (_persistent_rdd_ids(spark) - before)
+
+
+@pytest.mark.parametrize("gradient", [False, True])
+def test_run_batch_writes_the_shipped_output_set(spark, gradient):
+    """run_batch hands write() exactly the shipped outputs, each plan
+    output under its sink:<name> job label and csim under "csim"."""
+    calib = build_calib_pixels(spark, CONTROLS)
+    px = images_long_df(spark, [("synth", 0, make_image(CONTROLS, seq=0))])
+    labels: dict[str, str] = {}
+
+    def write(df, name):
+        assert name not in labels, f"{name} written twice"
+        labels[name] = spark.sparkContext.getLocalProperty("callSite.short")
+
+    # the stream's barrier: a lazy "persist" plan with the gradient stage
+    # spends minutes in driver-side re-analysis
+    with run_batch(px, calib, CONTROLS, write,
+                   lambda: cosine_similarity_series(px),
+                   gradient_stage=gradient, barrier="local_checkpoint"):
+        pass
+    want = {"integrals", "spot_stats", "spottiness", "outliers", "h_maxima"}
+    want |= {"gradient_arcs"} if gradient else set()
+    assert labels == {**{n: f"sink:{n}" for n in want}, "csim": "csim"}

@@ -11,10 +11,13 @@ Minutes-long by design, so skip-guarded: run with
 
     XRDSPARK_KEEPUP_SMOKE=1 python -m pytest tests/test_streaming_keepup.py -s
 
-The per-batch plan is identical to bench.py's `_keepup_2880` measurement
-path; this test adds what bench can't see — the Structured Streaming
-wrapper (source listing, foreachBatch dispatch, checkpoint commits,
-csim-over-store lookback) on top of the same plan.
+The per-batch assembly is shared by construction with bench.py's
+`_keepup_2880` measurement path: both run `streaming.pipeline.run_batch`
+(the bench with noop sinks, closed-form calibration and its own barrier;
+the stream with the calib table and `local_checkpoint`). This test adds
+what bench can't see — the Structured Streaming wrapper (source listing,
+foreachBatch dispatch, checkpoint commits, csim-over-store lookback) on
+top of that batch.
 """
 
 from __future__ import annotations

@@ -246,7 +246,7 @@ def labeled_pixels_frame(
     the warm 8 x 2880^2 profile).
 
     With ``controls`` set (valid ONLY when the caller's calibration is
-    the closed-form one, i.e. run_image_plan(calib=None)), the dense
+    the closed-form one, i.e. run_image_plan with calib=None), the dense
     probe reads just (image_id, y, x, intensity) — 4 columns instead of
     7 off the columnar cache — and q/azim/qbin are recomputed closed-form
     on the ~1%-of-pixels sparse rows with the SAME expressions that built
@@ -1054,7 +1054,7 @@ class ImagePlanResult:
     spottiness: DataFrame
     # A19/M6 per-Qbin regional h-maxima counts (the reference computes
     # these inside the spottiness stage, spottiness.py:64-84); None only
-    # with run_image_plan(..., h_maxima=False). Lazy — not a barrier
+    # with run_image_plan's h_maxima=False. Lazy — not a barrier
     # frame, so skipping materialization costs nothing.
     h_maxima: "DataFrame | None" = None
     gradient: "object | None" = None  # GradientStageResult when enabled
@@ -1062,32 +1062,11 @@ class ImagePlanResult:
     # spottiness are selects over it) — kept so unpersist_all can drop it
     fused_bins: "DataFrame | None" = None
     # stage counters (A22 analog of the reference's per-stage printouts,
-    # pipeline_queue.py:1007-1014): populated when run_image_plan(...,
-    # observe=True); each Observation.get blocks until an action has run
+    # pipeline_queue.py:1007-1014): populated when run_image_plan gets
+    # observe=True; each Observation.get blocks until an action has run
     # over the observed frame, then yields its named metrics for free —
     # no extra job per counter.
     observations: dict[str, Observation] = field(default_factory=dict)
-
-    def write_core_outputs(self, write, max_workers: int = 4) -> None:
-        """Submit the four always-produced outputs (integrals, spot_stats,
-        spottiness, outliers) as CONCURRENT jobs (guide §2.6): they are
-        independent reads over the already-materialized barriers, so one
-        job's stage tail overlaps the next job's ramp-up instead of
-        leaving cores idle between sequential actions — the same
-        submission order the keep-up batch path and a multi-sink
-        streaming batch use. ``write`` is the sink callable
-        (``lambda out: out.write...save()``); callers that need more
-        outputs (h_maxima, gradient) or per-job labels submit their own
-        pool. Lives here (round 15, r14 verdict #3) so bench harnesses
-        merely call the production submission order instead of
-        re-implementing it inside their timed regions."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        outs = (self.integrals, self.spot_stats, self.spottiness,
-                self.outliers)
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            for f in [pool.submit(write, out) for out in outs]:
-                f.result()
 
     def unpersist_all(self) -> None:
         """Drop every frame the plan persisted (call after the batch's

@@ -44,6 +44,9 @@ deployments should point the sinks at a transactional table format
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,6 +55,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from xrddatapipeline_spark.calib.geometry import ImageControls
 from xrddatapipeline_spark.plans.image_pipeline import (
+    ImagePlanResult,
     cosine_similarity_series,
     run_image_plan,
 )
@@ -60,10 +64,6 @@ from xrddatapipeline_spark.plans.image_pipeline import (
 PIXEL_SCHEMA = (
     "dataset string, seq int, image_id string, y int, x int, intensity int"
 )
-
-OUTPUT_TABLES = ("integrals", "spot_stats", "spottiness", "outliers", "csim")
-#: written additionally when the pipeline runs with gradient_stage=True
-GRADIENT_TABLES = ("gradient_arcs",)
 
 
 def _observation_get(o, name: str, timeout_s: float = 60.0):
@@ -126,6 +126,86 @@ def read_pixel_stream(
             <= F.current_timestamp() - F.expr(f"INTERVAL {settle_seconds} SECONDS")
         )
     return df
+
+
+@contextmanager
+def run_batch(
+    pixels: DataFrame,
+    calib: DataFrame | None,
+    controls: ImageControls,
+    write: Callable[[DataFrame, str], None],
+    csim: Callable[[], DataFrame],
+    *,
+    broadcast_calib: bool = True,
+    gradient_stage: bool = False,
+    observe: bool = False,
+    barrier: str = "persist",
+    n_images: int | None = None,
+    h_maxima: bool = True,
+) -> Iterator[ImagePlanResult]:
+    """One micro-batch as shipped: ``with run_batch(...) as res:``
+
+    1. submits ``write(csim(), "csim")`` on a side thread before the plan
+       (csim needs only the raw pixels, so its window-shuffle job, the
+       biggest independent one, overlaps the plan's eager barriers);
+    2. calls ``run_image_plan`` with the remaining arguments;
+    3. writes integrals, spot_stats, spottiness, outliers, h_maxima (if
+       on) and gradient_arcs (if on) concurrently, so one job's stage
+       tail overlaps the next one's ramp-up, each under
+       ``callSite.short = "sink:<name>"``. csim's write runs under
+       ``"csim"``: the repo benchmark's ``--trace 1`` run rejects the
+       per-layer metric a ``sink:csim`` label would add.
+
+    The with-body runs while the plan's frames are still persisted. On
+    every exit path csim settles before ``unpersist_all``, so a failed
+    batch never leaves an append in flight when foreachBatch retries it.
+    """
+    sc = pixels.sparkSession.sparkContext
+
+    def _sink(df: DataFrame, name: str, label: str) -> None:
+        # callSite.short is thread-local and each write has its own thread
+        sc.setLocalProperty("callSite.short", label)
+        try:
+            write(df, name)
+        finally:
+            sc.setLocalProperty("callSite.short", None)
+
+    csim_pool = ThreadPoolExecutor(max_workers=1)
+    csim_fut = csim_pool.submit(lambda: _sink(csim(), "csim", "csim"))
+    res = None
+    try:
+        res = run_image_plan(
+            pixels, calib, controls,
+            broadcast_calib=broadcast_calib,
+            gradient_stage=gradient_stage,
+            observe=observe,
+            barrier=barrier,
+            n_images=n_images,
+            h_maxima=h_maxima,
+        )
+        sinks = [
+            (res.integrals, "integrals"),
+            (res.spot_stats, "spot_stats"),
+            (res.spottiness, "spottiness"),
+            (res.outliers, "outliers"),
+        ]
+        if res.h_maxima is not None:
+            # A19: part of the reference's spottiness stage output
+            sinks.append((res.h_maxima, "h_maxima"))
+        if res.gradient is not None:
+            sinks.append((res.gradient.on_arc_labels, "gradient_arcs"))
+        with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
+            for f in [
+                pool.submit(_sink, df, name, f"sink:{name}")
+                for df, name in sinks
+            ]:
+                f.result()
+        yield res
+        csim_fut.result()
+    finally:
+        csim_pool.shutdown(wait=True)
+        if res is not None:
+            res.unpersist_all()
 
 
 @dataclass
@@ -278,81 +358,35 @@ class StreamingImagePipeline:
         batch_df = batch_df.select(
             "dataset", "seq", "image_id", "y", "x", "intensity"
         )
-        from xrddatapipeline_spark.tables import write_table
+        from xrddatapipeline_spark import tables
 
         # pixel store first: partitioned by (dataset, seq) so the csim
         # lookback and any reprocessing read only the partitions they need.
-        write_table(
+        tables.write_table(
             batch_df, self._path("pixels"),
             partition_by=("dataset", "seq"), fmt=self.table_format,
         )
 
-        # csim depends ONLY on the pixel store just written (T5 reads the
-        # pruned partitions back), so its window-shuffle job overlaps the
-        # eager barrier chain inside run_image_plan instead of running
-        # serialized after every sink (round 8 — the barriers profile at
-        # ~36% of core time; csim is the single biggest independent job)
-        from concurrent.futures import ThreadPoolExecutor
+        def write(df: DataFrame, name: str) -> None:
+            tables.write_table(df, self._path(name), fmt=self.table_format)
 
-        csim_pool = ThreadPoolExecutor(max_workers=1)
-        csim_fut = csim_pool.submit(self._append_csim, batch_df)
-
-        # everything from here on sits inside the try so that a failure in
-        # run_image_plan itself (not just in a sink) still reaches the
-        # csim_pool.shutdown(wait=True) below — otherwise the csim thread
-        # would be orphaned with its append-mode write possibly still in
-        # flight when foreachBatch retries the batch, racing the retry's
-        # _append_csim into duplicate (dataset, seq) rows.
-        res = None
-        try:
-            res = run_image_plan(
-                batch_df,
-                self.calib,
-                self.controls,
-                broadcast_calib=self.broadcast_calib,
-                gradient_stage=self.gradient_stage,
-                observe=self.observe_metrics,
-                # local_checkpoint truncates lineage at the plan's reuse
-                # boundaries: the per-image plan is deep, and eager
-                # re-analysis otherwise costs the driver ~30 s per BATCH
-                # (size-independent). foreachBatch retries a failed batch
-                # wholesale, so the lost fault-tolerance of the
-                # checkpointed RDDs is already covered one level up.
-                barrier="local_checkpoint",
-            )
-            # independent sinks over the already-materialized barriers:
-            # submit concurrently so stage tails of one output job overlap
-            # the ramp-up of the next (measured idle-core gaps between the
-            # sequential actions at 8 x 2880^2)
-            sinks = [
-                (res.integrals, "integrals"),
-                (res.spot_stats, "spot_stats"),
-                (res.spottiness, "spottiness"),
-                (res.outliers, "outliers"),
-            ]
-            if res.h_maxima is not None:
-                # A19: part of the reference's spottiness stage output
-                sinks.append((res.h_maxima, "h_maxima"))
-            if self.gradient_stage and res.gradient is not None:
-                sinks.append((res.gradient.on_arc_labels, "gradient_arcs"))
-            def _labeled_write(df: DataFrame, name: str) -> None:
-                # name the sink job's stages in the UI/REST profile
-                # (callSite.short is thread-local; each sink has its own
-                # pool thread) — same attribution scheme as the barriers
-                sc = self.spark.sparkContext
-                sc.setLocalProperty("callSite.short", f"sink:{name}")
-                try:
-                    write_table(df, self._path(name), fmt=self.table_format)
-                finally:
-                    sc.setLocalProperty("callSite.short", None)
-
-            with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
-                futs = [
-                    pool.submit(_labeled_write, df, name)
-                    for df, name in sinks
-                ]
-                for f in futs:
-                    f.result()
+        with run_batch(
+            batch_df,
+            self.calib,
+            self.controls,
+            write,
+            lambda: self._csim_frame(batch_df),
+            broadcast_calib=self.broadcast_calib,
+            gradient_stage=self.gradient_stage,
+            observe=self.observe_metrics,
+            # local_checkpoint truncates lineage at the plan's reuse
+            # boundaries: the per-image plan is deep, and eager
+            # re-analysis otherwise costs the driver ~30 s per BATCH
+            # (size-independent). foreachBatch retries a failed batch
+            # wholesale, so the lost fault-tolerance of the
+            # checkpointed RDDs is already covered one level up.
+            barrier="local_checkpoint",
+        ) as res:
             if self.render_masks:
                 from xrddatapipeline_spark.sinks import render_mask_tiffs
 
@@ -365,10 +399,6 @@ class StreamingImagePipeline:
                 render_mask_tiffs(
                     res.outliers, shape, masks_dir, "_outliermask"
                 ).collect()
-            # join the overlapped csim job (submitted before
-            # run_image_plan); surfaces any csim failure here, after the
-            # sinks, exactly where the serialized call used to run
-            csim_fut.result()
             if self.observe_metrics and res.observations:
                 # A22 analog: the reference prints per-stage counters at
                 # Stop (pipeline_queue.py:1007-1014); here each batch
@@ -387,16 +417,8 @@ class StreamingImagePipeline:
                 self.spark.createDataFrame([flat]).write.mode("append").json(
                     self._path("stage_metrics")
                 )
-        finally:
-            # csim must be settled (done or failed) before the batch's
-            # frames are unpersisted — shutdown(wait=True) guarantees it
-            # on every exit path, including run_image_plan raising before
-            # res exists
-            csim_pool.shutdown(wait=True)
-            if res is not None:
-                res.unpersist_all()
 
-    def _append_csim(self, batch_df: DataFrame) -> None:
+    def _csim_frame(self, batch_df: DataFrame) -> DataFrame:
         """T5: csim vs previous/first via the pixel store (J4-over-store).
 
         Reads only the (dataset, seq) partitions needed: the batch images,
@@ -413,7 +435,7 @@ class StreamingImagePipeline:
         cond = F.lit(False)
         for ds, seq in sorted(needed):
             cond = cond | ((F.col("dataset") == ds) & (F.col("seq") == seq))
-        from xrddatapipeline_spark.tables import read_table, write_table
+        from xrddatapipeline_spark.tables import read_table
 
         store = read_table(
             self.spark, self._path("pixels"),
@@ -425,8 +447,7 @@ class StreamingImagePipeline:
             batch_keys = batch_keys | (
                 (F.col("dataset") == ds) & (F.col("seq") == seq)
             )
-        write_table(series.where(batch_keys), self._path("csim"),
-                    fmt=self.table_format)
+        return series.where(batch_keys)
 
     def start(
         self,
