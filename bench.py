@@ -463,7 +463,7 @@ def _keepup_2880(batch: int = 8) -> dict:
         with run_batch(
             pixels, None, c, _noop_writer(),
             lambda: cosine_similarity_series(pixels),
-            gradient_stage=True, barrier=barrier, n_images=batch,
+            gradient_stage=True, barrier=barrier,
         ):
             pass
         elapsed = time.perf_counter() - t0
@@ -546,7 +546,7 @@ def _keepup_2880(batch: int = 8) -> dict:
         with run_batch(
             ppx, None, pc, _noop_writer("pilot"),
             lambda: cosine_similarity_series(ppx),
-            gradient_stage=True, barrier=barrier, n_images=1,
+            gradient_stage=True, barrier=barrier,
         ):
             pass
         ppx.unpersist()
@@ -626,18 +626,15 @@ def _keepup_2880(batch: int = 8) -> dict:
                 cond = (
                     F.col("seq") < half if low_half else F.col("seq") >= half
                 )
-                # per-arm image count (round-11 ADVICE): for odd `batch`
-                # the high half holds batch - half images, so sizing the
-                # image_id repartition off `half` for both arms would
-                # mis-provision one arm (latent with the default batch=8)
+                # per-arm image count: for odd `batch` the high half holds
+                # batch - half images
                 n_arm = half if low_half else batch - half
                 hpx = pixels.where(cond)
                 t0 = time.perf_counter()
                 with run_batch(
                     hpx, None, c, _noop_writer(group),
                     lambda: cosine_similarity_series(hpx),
-                    gradient_stage=True, barrier=barrier,
-                    n_images=n_arm, h_maxima=h_on,
+                    gradient_stage=True, barrier=barrier, h_maxima=h_on,
                 ):
                     pass
                 walls[group] = time.perf_counter() - t0

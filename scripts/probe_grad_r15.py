@@ -60,6 +60,7 @@ def main() -> None:
         labeled_pixels_frame,
         outlier_pixels,
         with_base_mask,
+        with_img_idx,
     )
 
     size, batch = 2880, 8
@@ -79,9 +80,9 @@ def main() -> None:
     masked = with_base_mask(
         join_calib(pixels, None, broadcast=True, controls=c), controls=c
     )
-    px = masked.drop(*[col for col in drop if col in masked.columns]).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    px = with_img_idx(
+        masked.drop(*[col for col in drop if col in masked.columns])
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     print("px rows:", px.count(), flush=True)
     outliers = outlier_pixels(
         px.drop("dataset", "seq"), esd_mul=c.esd_mul

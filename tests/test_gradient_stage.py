@@ -149,12 +149,15 @@ def test_fused_thresholds_bit_equal_dense_percentiles(spark):
         join_calib,
         outlier_pixels,
         with_base_mask,
+        with_img_idx,
     )
 
     c = CONTROLS
     pixels = images_long_df(spark, [("synth", 0, make_image(c, seq=0))])
     calib = build_calib_pixels(spark, c).cache()
-    px = with_base_mask(join_calib(pixels, calib, controls=c)).cache()
+    px = with_img_idx(
+        with_base_mask(join_calib(pixels, calib, controls=c))
+    ).cache()
     om = closed_outlier_pixels(outlier_pixels(px, c.esd_mul), (c.size_y, c.size_x))
     lpx, _ = classify_clusters(px, om, (c.size_y, c.size_x))
 
@@ -205,6 +208,7 @@ def test_fused_thresholds_survive_fully_masked_band(spark):
         join_calib,
         outlier_pixels,
         with_base_mask,
+        with_img_idx,
     )
     from pyspark.sql import functions as F
 
@@ -214,10 +218,10 @@ def test_fused_thresholds_survive_fully_masked_band(spark):
     # band_rows=32 -> 8 bands; mask band 5 (y 160-191) PLUS its 4-row halo
     # on both sides, so the halo'd slices of band 5 contain zero good pixels
     px = with_base_mask(join_calib(pixels, calib, controls=c))
-    px = px.withColumn(
+    px = with_img_idx(px.withColumn(
         "base_mask",
         F.col("base_mask") | F.col("y").between(160 - 4, 191 + 4),
-    ).cache()
+    )).cache()
     om = closed_outlier_pixels(outlier_pixels(px, c.esd_mul), (c.size_y, c.size_x))
     lpx, _ = classify_clusters(px, om, (c.size_y, c.size_x))
 

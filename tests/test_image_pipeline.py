@@ -274,6 +274,29 @@ def test_retired_barrier_rejected_before_any_job(spark):
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
+@pytest.mark.parametrize("side", ["size_x", "size_y"])
+def test_oversized_detector_rejected_before_any_job(spark, side):
+    """The packed pixel key (img_idx << 26) | y*8192 + x needs both
+    detector sides <= 8192: a wider or taller detector is refused at the
+    top of run_image_plan, before the image-set collect or any barrier
+    submits a job."""
+    import dataclasses
+
+    sc = spark.sparkContext
+    group = f"oversized-detector-probe-{side}"
+    big = dataclasses.replace(CONTROLS, **{side: 8193})
+    pixels = images_long_df(
+        spark, [("synth", 0, make_image(CONTROLS, seq=0))]
+    )
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        with pytest.raises(ValueError, match="8192 px per side"):
+            run_image_plan(pixels, None, big, barrier="local_checkpoint")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_empty_batch_eager_plan_builds(spark):
     """Round-7 review: an empty pixel frame under an eager barrier yields
     n_images=0 — the h-maxima feed's explicit repartition must not be
@@ -435,7 +458,7 @@ def test_warmup_job_submitted_once_per_session(spark, monkeypatch):
     for _ in range(3):
         res = run_image_plan(
             pixels, None, big, gradient_stage=True, barrier="hybrid",
-            n_images=1, h_maxima=True,
+            h_maxima=True,
         )
         res.unpersist_all()
     assert len(starts) == 1, f"warmup thread started {len(starts)}x"

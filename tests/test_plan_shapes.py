@@ -258,9 +258,10 @@ def test_fused_integrals_spottiness_one_scan(spark):
 
 def test_outlier_stage_takes_histogram_route(spark):
     """The ring-outlier stats have one route: the (ring key, intensity)
-    histogram. The lazy (persist) plan pre-aggregates candidates on
-    (image_id, ring_idx, intensity) and never collects raw per-pixel
-    intensities, so an edit that restores the array route fails here."""
+    histogram. The lazy (persist) plan pre-aggregates candidates on the
+    packed ring key ``_gk`` ((img_idx << 32) | ring_idx) and intensity,
+    and never collects raw per-pixel intensities, so an edit that
+    restores the array route or the (image_id, ring_idx) key fails here."""
     import re
 
     from tests.fixtures_images import CONTROLS, images_long_df, make_image
@@ -271,8 +272,7 @@ def test_outlier_stage_takes_histogram_route(spark):
     )
     res = run_image_plan(pixels, None, CONTROLS, barrier="persist")
     plan = res.outliers._jdf.queryExecution().analyzed().toString()
-    assert re.search(
-        r"Aggregate \[image_id#\d+, ring_idx#\d+, intensity#\d+\]", plan
-    ), plan
+    assert re.search(r"Aggregate \[_gk#\d+L, intensity#\d+\]", plan), plan
+    assert not re.search(r"Aggregate \[image_id#\d+, ring_idx#\d+", plan), plan
     assert not re.search(r"collect_list\(intensity#\d+", plan), plan
     res.unpersist_all()

@@ -769,3 +769,39 @@ def test_run_batch_writes_the_shipped_output_set(spark, gradient):
     want = {"integrals", "spot_stats", "spottiness", "outliers", "h_maxima"}
     want |= {"gradient_arcs"} if gradient else set()
     assert labels == {**{n: f"sink:{n}" for n in want}, "csim": "csim"}
+
+
+def test_tiff_stream_decodes_each_frame_once(spark, tmp_path):
+    """process_batch checkpoints the decoded batch once, and the emptiness
+    check, the pixel store, csim's key collect and the plan all scan that
+    checkpoint: the TIFF source reports one input row (its one file) per
+    trigger, not one per action. The checkpoint is released when the
+    batch ends, and csim still matches numpy on the decoded frames."""
+    from tests.test_barrier import _persistent_rdd_ids
+    from xrddatapipeline_spark.sources.tiff import decode_image, write_tiff_gray
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    frames = {}
+    for seq in (0, 1):
+        path = landing / f"synth-{seq:05d}.tif"
+        write_tiff_gray(str(path), make_image(CONTROLS, seq=seq))
+        frames[seq] = decode_image(path.read_bytes()).astype(np.float64).ravel()
+    calib = build_calib_pixels(spark, CONTROLS)
+    before = _persistent_rdd_ids(spark)
+    pipe = StreamingImagePipeline(spark, calib, CONTROLS, str(tmp_path / "out"))
+    q = pipe.start(
+        str(landing), str(tmp_path / "ckpt"), available_now=True,
+        max_files_per_trigger=1, source_format="tiff",
+    )
+    q.awaitTermination(300)
+
+    rows = [p["numInputRows"] for p in q.recentProgress]
+    assert rows == [1, 1], rows
+    assert not (_persistent_rdd_ids(spark) - before)
+    csim = pipe.output("csim").toPandas().set_index("seq")
+    a, b = frames[0], frames[1]
+    want = (a @ b) / np.sqrt((a @ a) * (b @ b))
+    np.testing.assert_allclose(csim.loc[0, "csim_first"], 1.0, rtol=1e-12)
+    np.testing.assert_allclose(csim.loc[1, "csim_first"], want, rtol=1e-12)
+    np.testing.assert_allclose(csim.loc[1, "csim_prev"], want, rtol=1e-12)

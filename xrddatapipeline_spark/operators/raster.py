@@ -31,6 +31,12 @@ def to_raster(pdf: pd.DataFrame, col: str, shape: tuple[int, int], fill=0):
     return arr
 
 
+def _id_type(df: DataFrame, id_col: str) -> str:
+    """DDL of the group key as the input types it (image_id string, or
+    the plan's int img_idx)."""
+    return f"{id_col} {dict(df.dtypes)[id_col]}"
+
+
 def label_pixels(
     masked_pixels: DataFrame,
     shape: tuple[int, int],
@@ -66,7 +72,7 @@ def label_pixels(
             }
         )
 
-    schema = f"{id_col} string, y int, x int, label int"
+    schema = f"{_id_type(masked_pixels, id_col)}, y int, x int, label int"
     return (
         masked_pixels.select(id_col, "y", "x")
         .groupBy(id_col)
@@ -96,7 +102,7 @@ def close_mask_pixels(
             }
         )
 
-    schema = f"{id_col} string, y int, x int"
+    schema = f"{_id_type(masked_pixels, id_col)}, y int, x int"
     return (
         masked_pixels.select(id_col, "y", "x")
         .groupBy(id_col)
@@ -144,7 +150,7 @@ def close_and_label_pixels(
             }
         )
 
-    schema = f"{id_col} string, y int, x int, label int"
+    schema = f"{_id_type(masked_pixels, id_col)}, y int, x int, label int"
     return (
         masked_pixels.select(id_col, "y", "x")
         .groupBy(id_col)

@@ -1895,6 +1895,7 @@ def image_plan_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
         integrate_all,
         label_table_from,
         labeled_pixels_frame,
+        with_img_idx,
     )
 
     orders = _t(spark, sf_dir, "orders")
@@ -1932,8 +1933,9 @@ def image_plan_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(CASE WHEN y = 119 THEN 0 ELSE 1 + x % 40 END AS INT) "
         "AS tth_idx",
     )
-    om = px.where("planted").select("image_id", "y", "x")
-    lpx = labeled_pixels_frame(px, om, shape=(128, 256))
+    ipx = with_img_idx(px, ["sp"])  # the raster's one image
+    om = ipx.where("planted").select("img_idx", "y", "x")
+    lpx = labeled_pixels_frame(ipx, om, shape=(128, 256))
     ltab = label_table_from(lpx)
     flags = classifier_mask_flags(lpx, ltab)
     controls = ImageControls(iotth=(1.0, 9.0), out_channels=40)

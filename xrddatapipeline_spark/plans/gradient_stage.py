@@ -450,7 +450,12 @@ def fused_gradient_inputs(
                 fld.name, F.lit(default).cast(fld.dataType)
             )
     src = src.unionByName(sent.select(*src.columns))
-    lsrc = lpx.select("image_id", "y", "x").withColumn("band", yb)
+    # fresh attributes: lpx's pixel columns can come from px's own lineage
+    # (labeled_pixels_frame's dense probe), and a cogroup of two frames
+    # sharing an attribute fails Spark's ambiguous self-join check
+    lsrc = lpx.select(
+        *[F.col(c).alias(c) for c in ("image_id", "y", "x")]
+    ).withColumn("band", yb)
     if n_images is not None:
         src, lsrc = _balanced_group_partitions(
             src, lsrc, n_groups=n_images * n_bands
@@ -537,7 +542,7 @@ def exact_percentiles_from_candidates(fused_summaries: DataFrame) -> DataFrame:
 
 @dataclass
 class GradientStageResult:
-    pixel_flags: DataFrame   # (image_id, y, x, label, new_spot, new_arc)
+    pixel_flags: DataFrame   # (image_id, [img_idx,] y, x, label, new_spot, new_arc)
     on_arc_labels: DataFrame  # (image_id, label, p20_r2, on_arc)
     grad_clusters: DataFrame  # (image_id, newlabel, parent_label, med_azim, n_px)
     # frames persisted by gradient_classify; the caller (or
@@ -663,7 +668,8 @@ def azimuth_swap_classify(
     Inputs: ``gc`` gradient-cluster member pixels (image_id, newlabel,
     label, azim, azim_flip); ``lpx`` labeled pixels (image_id, y, x, label,
     azim); ``on_arc`` (image_id, label, on_arc); ``label_table``
-    (image_id, label, diff_q). Returns (clusters, pixel_flags).
+    (image_id, label, diff_q). Returns (clusters, pixel_flags); the flags
+    keep lpx's ``img_idx`` when it has one (run_image_plan's lpx does).
     """
     clusters = gc.groupBy("image_id", "newlabel").agg(
         F.first("label").alias("parent_label"),
@@ -705,6 +711,7 @@ def azimuth_swap_classify(
             (F.col("diff_q") * SWAP_RADIUS_QWIDTHS).alias("swap_radius"),
         )
     )
+    pixel = [c for c in ("image_id", "img_idx", "y", "x") if c in lpx.columns]
     flagged = (
         lpx.join(
             F.broadcast(on_arc.select("image_id", "label", "on_arc")),
@@ -724,7 +731,7 @@ def azimuth_swap_classify(
                 F.lit(False),
             ),
         )
-        .groupBy("image_id", "y", "x", "label", "on_arc")
+        .groupBy(*pixel, "label", "on_arc")
         .agg(F.max(F.col("near_cut").cast("int")).alias("near_cut"))
         .withColumn(
             "new_spot", ~F.col("on_arc") | (F.col("near_cut") == 1)
@@ -732,6 +739,6 @@ def azimuth_swap_classify(
         .withColumn(
             "new_arc", F.col("on_arc") & (F.col("near_cut") == 0)
         )
-        .select("image_id", "y", "x", "label", "new_spot", "new_arc")
+        .select(*pixel, "label", "new_spot", "new_arc")
     )
     return clusters, flagged

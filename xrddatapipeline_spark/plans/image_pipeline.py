@@ -116,73 +116,72 @@ def with_base_mask(
     return px.withColumn("base_mask", mask)
 
 
-#: packed-key join/group shapes are gated on a small per-batch image set:
-#: the image_id -> index lookup is a literal-map linear scan per row, so it
-#: must stay a few entries (every bench/streaming batch is <= 8 images; a
-#: 100 TB deployment processes batches, not millions of images per plan).
-_PK_MAX_IMAGES = 64
-
 #: eager plans broadcast the sparse mask sets into their dense joins up to
 #: this many materialized outlier rows (see run_image_plan)
 _SPARSE_BROADCAST_ROWS = 4_000_000
 
+#: detector side limit of the packed pixel key: y * 8192 + x < 2^26
+_PK_MAX_SIDE = 8192
 
-def _image_index_expr(image_index: dict[str, int]) -> "F.Column":
-    """Driver-literal image_id -> small-int map as a column expression."""
-    return F.create_map(
-        *[
-            lit
-            for s, i in sorted(image_index.items())
-            for lit in (F.lit(s), F.lit(i))
-        ]
+
+def _image_set(df: DataFrame) -> list:
+    """The frame's sorted distinct image_ids (one collect job)."""
+    return sorted(r[0] for r in df.select("image_id").distinct().collect())
+
+
+def with_img_idx(px: DataFrame, ids: list | None = None) -> DataFrame:
+    """Attach ``img_idx int``: each row's position in the sorted image set
+    ``ids`` (one job collects it from ``px`` when not given). The stage
+    functions key their dense joins and groupings on packed longs built
+    from this column (see ``_pk_expr``); ``run_image_plan`` attaches it to
+    the px barrier, so the literal-map lookup runs once per pixel per
+    batch. Direct callers of the stage functions attach it with this
+    helper."""
+    if ids is None:
+        ids = _image_set(px)
+    if not ids:
+        return px.withColumn("img_idx", F.lit(None).cast("int"))
+    imap = F.create_map(
+        *[lit for i, s in enumerate(ids) for lit in (F.lit(s), F.lit(i))]
     )
+    return px.withColumn("img_idx", imap[F.col("image_id")].cast("int"))
 
 
-def _pk_usable(
-    image_index: dict[str, int] | None, shape: tuple[int, int]
-) -> bool:
+def _pk_expr() -> "F.Column":
+    """Collision-free packed pixel key (img_idx << 26) | (y * 8192 + x).
+
+    The dense-side probes on (image_id STRING, y, x) dominated three
+    barrier stages at 8 x 2880^2: an isolated decomposition priced the
+    3-column broadcast probe at 253 run core-s per 66 M-row pass against
+    27 for the same join on ONE packed long, because a single bigint key
+    takes Spark's LongHashedRelation path instead of generic UnsafeRow
+    hashing with a var-length string per row. Keying the outlier ring
+    stats, the lpx probe and the intspot flag join on packed longs removed
+    ~557 run core-s per warm 8 x 2880^2 batch (outliers 173 -> 39, lpx
+    233 -> 40, intspot 321 -> 91; 4 alternating reps, every rep a win).
+    Grouping the h-maxima feed by the int index instead of the image_id
+    string measured a wash (546.7 -> 539.6 MB post-compression shuffle,
+    run core-s split 2-2 across reps), so that stage keeps image_id.
+
+    y*8192+x < 2^26 holds because run_image_plan refuses a detector with
+    either side above ``_PK_MAX_SIDE``; the pack is a bijection, so the
+    joined row set is bit-identical to the 3-column join (pinned by
+    tests/test_r14_pk_parity.py)."""
     return (
-        image_index is not None
-        and 0 < len(image_index) <= _PK_MAX_IMAGES
-        and shape[0] <= 8192
-        and shape[1] <= 8192
-    )
-
-
-def _pk_expr(imap: "F.Column") -> "F.Column":
-    """Collision-free packed join key (img_idx << 26) | (y * 8192 + x).
-
-    Round 14 (guide §2.4/§3): the dense-side broadcast probes on
-    (image_id STRING, y, x) dominated three barrier stages — an isolated
-    decomposition at 8 x 2880^2 priced the 3-column probe at ~250 run
-    core-s per 66 M-row pass vs ~27 for the same join on ONE packed long
-    (scripts/probe_dense_pass_r14.py): a single bigint key takes Spark's
-    specialized LongHashedRelation path instead of generic UnsafeRow
-    hashing with a var-length string per row. y*8192+x < 2^26 (gated on
-    detector shape), img_idx is a per-batch driver-literal index — the
-    pack is a bijection, so the joined row set is bit-identical to the
-    3-column join (pinned by tests/test_r14_pk_parity.py)."""
-    return (
-        F.shiftleft(imap[F.col("image_id")].cast("long"), 26)
+        F.shiftleft(F.col("img_idx").cast("long"), 26)
         + F.col("y").cast("long") * 8192
         + F.col("x")
     )
 
 
-def outlier_pixels(
-    px: DataFrame,
-    esd_mul: float = 3.0,
-    image_index: dict[str, int] | None = None,
-) -> DataFrame:
+def outlier_pixels(px: DataFrame, esd_mul: float = 3.0) -> DataFrame:
     """A2/A4: per-ring sigma-clip on not-base-masked pixels; returns the
-    sparse outlier pixel set (image_id, y, x).
+    sparse outlier pixel set (image_id, img_idx, y, x).
 
-    ``image_index`` (round 14, optional): with a per-batch image_id ->
-    index map the ring-stats group/join key becomes ONE packed long
-    ((img_idx << 32) | ring_idx) instead of (image_id STRING, ring_idx) —
-    the histogram aggregation and the stats join-back both stop hashing a
-    var-length string per dense row (see _pk_expr; same stats, same
-    flags).
+    The ring-stats group/join key is ONE packed long
+    ((img_idx << 32) | ring_idx), so the histogram aggregation and the
+    stats join-back never hash a var-length string per dense row (see
+    _pk_expr). ``px`` carries ``img_idx`` (``with_img_idx``).
 
     The order statistics take the histogram route (one row per distinct
     (ring, intensity), map-side combined; exactly equal to the per-pixel
@@ -191,52 +190,47 @@ def outlier_pixels(
     alternating A/B at 8 x 2880^2 / 2500 rings read histogram 11.8 s vs
     array 39.2 s per pass, then 38.3 vs 69.7 s in the live plan, winning
     every rep (OPTIMIZATION_r14.md §6)."""
-    candidates = px.where(~F.col("base_mask") & (F.col("ring_idx") > 0))
-    if image_index is not None and 0 < len(image_index) <= _PK_MAX_IMAGES:
-        imap = _image_index_expr(image_index)
-        keyed = candidates.select(
-            (
-                F.shiftleft(imap[F.col("image_id")].cast("long"), 32)
-                + F.col("ring_idx")
-            ).alias("_gk"),
-            "image_id", "y", "x", "intensity",
-        )
-        flagged = flag_outliers(
-            keyed,
-            keys=["_gk"],
-            value="intensity",
-            esd_mul=esd_mul,
-            min_count=10,
-            histogram=True,
-        )
-    else:
-        flagged = flag_outliers(
-            candidates.select("image_id", "y", "x", "ring_idx", "intensity"),
-            keys=["image_id", "ring_idx"],
-            value="intensity",
-            esd_mul=esd_mul,
-            min_count=10,
-            histogram=True,
-        )
-    return flagged.where(F.col("is_outlier")).select("image_id", "y", "x")
+    keyed = px.where(~F.col("base_mask") & (F.col("ring_idx") > 0)).select(
+        (
+            F.shiftleft(F.col("img_idx").cast("long"), 32) + F.col("ring_idx")
+        ).alias("_gk"),
+        "image_id", "img_idx", "y", "x", "intensity",
+    )
+    flagged = flag_outliers(
+        keyed,
+        keys=["_gk"],
+        value="intensity",
+        esd_mul=esd_mul,
+        min_count=10,
+        histogram=True,
+    )
+    return flagged.where(F.col("is_outlier")).select(
+        "image_id", "img_idx", "y", "x"
+    )
 
 
 def closed_outlier_pixels(
     outliers: DataFrame, shape: tuple[int, int]
 ) -> DataFrame:
-    """M2: 3x3 binary closing of the outlier mask (pipeline.py:191-205)."""
-    return close_mask_pixels(outliers, shape=shape, radius=1)
+    """M2: 3x3 binary closing of the outlier mask (pipeline.py:191-205);
+    returns the closed set keyed (img_idx, y, x)."""
+    return close_mask_pixels(outliers, shape=shape, radius=1, id_col="img_idx")
 
 
 def labeled_pixels_frame(
     px: DataFrame, om_pixels: DataFrame, shape: tuple[int, int],
     sparse_hint=None, controls: ImageControls | None = None,
     closing_radius: int | None = None,
-    image_index: dict[str, int] | None = None,
 ) -> DataFrame:
     """The labeled sparse pixel set feeding shape classification: label
     the closed outlier mask (M1), then attach the per-pixel physics
     columns from the dense table.
+
+    ``om_pixels`` is keyed (img_idx, y, x) and ``px`` carries ``img_idx``
+    (``with_img_idx``): the labeling kernel groups by the int index, and
+    the dense probe joins on ONE packed long (see ``_pk_expr``) — the
+    dense side's (image_id STRING, y, x) hash per row was ~70% of this
+    barrier's CPU.
 
     q/azim feed the shape classifier; intensity/qbin ride along so
     downstream per-label stats (spot_stats) never probe the dense pixel
@@ -247,12 +241,12 @@ def labeled_pixels_frame(
 
     With ``controls`` set (valid ONLY when the caller's calibration is
     the closed-form one, i.e. run_image_plan with calib=None), the dense
-    probe reads just (image_id, y, x, intensity) — 4 columns instead of
-    7 off the columnar cache — and q/azim/qbin are recomputed closed-form
-    on the ~1%-of-pixels sparse rows with the SAME expressions that built
-    the cache, so the values are bit-identical. Only ``intensity`` is
-    data; everything else is geometry. With an externally-measured calib
-    table the 7-column probe stays (recomputation could diverge).
+    probe reads just (image_id, img_idx, y, x, intensity) off the
+    columnar cache, and q/azim/qbin are recomputed closed-form on the
+    ~1%-of-pixels sparse rows with the SAME expressions that built the
+    cache, so the values are bit-identical. Only ``intensity`` is data;
+    everything else is geometry. With an externally-measured calib table
+    the probe also reads q/azim/qbin (recomputation could diverge).
 
     ``closing_radius`` (round 14): when set, ``om_pixels`` is the RAW
     outlier set and the M2 closing runs FUSED with the labeling kernel
@@ -268,56 +262,29 @@ def labeled_pixels_frame(
         )
 
         labeled = close_and_label_pixels(
-            om_pixels, shape=shape, radius=closing_radius, connectivity=2
+            om_pixels, shape=shape, radius=closing_radius, connectivity=2,
+            id_col="img_idx",
         )
     else:
-        labeled = label_pixels(om_pixels, shape=shape, connectivity=2)
-    use_pk = _pk_usable(image_index, shape)
-    if use_pk:
-        # single packed-long probe key (see _pk_expr): the dense side's
-        # (image_id STRING, y, x) hash per row was ~70% of this barrier's
-        # CPU; identical joined rows, ~10x cheaper probe
-        pk = _pk_expr(_image_index_expr(image_index))
-        labeled = labeled.select(pk.alias("_pk"), "label")
+        labeled = label_pixels(
+            om_pixels, shape=shape, connectivity=2, id_col="img_idx"
+        )
+    labeled = labeled.select(_pk_expr().alias("_pk"), "label")
     if sparse_hint is not None:
         labeled = sparse_hint(labeled)
+    probe = ["image_id", "img_idx", "y", "x", "intensity"]
+    if controls is None:
+        probe += ["q", "azim", "qbin"]
+    lpx = px.select(*probe, _pk_expr().alias("_pk")).join(labeled, "_pk")
     if controls is not None:
         from xrddatapipeline_spark.calib.cache import with_calib_columns
 
-        if use_pk:
-            dense = px.select(
-                "image_id", "y", "x", "intensity",
-                pk.alias("_pk"),
-            )
-            lpx = dense.join(labeled, "_pk").drop("_pk")
-        else:
-            lpx = labeled.join(
-                px.select("image_id", "y", "x", "intensity"),
-                ["image_id", "y", "x"],
-            )
-        lpx = with_calib_columns(lpx, controls).select(
-            "image_id", "y", "x", "label", "q", "azim", "intensity", "qbin"
-        )
-    else:
-        if use_pk:
-            dense = px.select(
-                "image_id", "y", "x", "q", "azim", "intensity", "qbin",
-                pk.alias("_pk"),
-            )
-            lpx = dense.join(labeled, "_pk").drop("_pk").select(
-                "image_id", "y", "x", "label",
-                "q", "azim", "intensity", "qbin",
-            )
-        else:
-            lpx = labeled.join(
-                px.select(
-                    "image_id", "y", "x", "q", "azim", "intensity", "qbin"
-                ),
-                ["image_id", "y", "x"],
-            )
+        lpx = with_calib_columns(lpx, controls)
     # flipped azimuth mirrors the axis so wrapped arcs read contiguous (A7)
-    return lpx.withColumn(
-        "azim_flip", F.pmod(F.col("azim") + 180.0, F.lit(360.0))
+    return lpx.select(
+        "image_id", "img_idx", "y", "x", "label",
+        "q", "azim", "intensity", "qbin",
+        F.pmod(F.col("azim") + 180.0, F.lit(360.0)).alias("azim_flip"),
     )
 
 
@@ -464,12 +431,15 @@ def classifier_mask_flags(lpx: DataFrame, label_table: DataFrame) -> DataFrame:
     non-gradient mask_flags branch of run_image_plan, split out so the
     driver's composed spine anchor (image_plan_spine) executes the
     plan's own code, not a re-spelling (F11/F12 membership join,
-    pipeline.py:375-414 mask variants)."""
+    pipeline.py:375-414 mask variants). The flags keep lpx's ``img_idx``
+    when it has one (labeled_pixels_frame's lpx does), for the packed
+    intspot join."""
+    pixel = [c for c in ("image_id", "img_idx", "y", "x") if c in lpx.columns]
     return lpx.join(
         label_table.select("image_id", "label", "classifier"),
         ["image_id", "label"],
     ).select(
-        "image_id", "y", "x",
+        *pixel,
         F.lit(True).alias("is_om"),
         (F.col("classifier") == 1).alias("is_spot_px"),
         (F.col("classifier") == 2).alias("is_arc_px"),
@@ -569,7 +539,6 @@ def integrate_and_spottiness(
     mask_flags: DataFrame,
     controls: ImageControls,
     sparse_hint=None,
-    image_index: dict[str, int] | None = None,
 ) -> DataFrame:
     """A1 x4 + A15 in ONE pixel-table pass (joint-key fusion, round 13).
 
@@ -611,28 +580,18 @@ def integrate_and_spottiness(
         "spotsmasked": F.col("base_mask") | F.col("is_spot_px"),
         "arcsmasked": F.col("base_mask") | F.col("is_arc_px"),
     }
-    if _pk_usable(image_index, (controls.size_y, controls.size_x)):
-        # single packed-long probe key for the dense left join — see
-        # _pk_expr; the flag columns attach to exactly the same rows
-        pk = _pk_expr(_image_index_expr(image_index))
-        mask_flags = mask_flags.select(
-            pk.alias("_pk"), "is_om", "is_spot_px", "is_arc_px"
-        )
-        if sparse_hint is not None:
-            mask_flags = sparse_hint(mask_flags)
-        flagged = (
-            px.withColumn("_pk", pk)
-            .join(mask_flags, "_pk", "left")
-            .drop("_pk")
-        )
-    else:
-        if sparse_hint is not None:
-            mask_flags = sparse_hint(mask_flags)
-        flagged = px.join(mask_flags, ["image_id", "y", "x"], "left")
+    # the flag columns attach to the dense rows on ONE packed long (see
+    # _pk_expr): both sides carry img_idx
+    mask_flags = mask_flags.select(
+        _pk_expr().alias("_pk"), "is_om", "is_spot_px", "is_arc_px"
+    )
+    if sparse_hint is not None:
+        mask_flags = sparse_hint(mask_flags)
     flagged = (
-        flagged.fillna(
-            {"is_om": False, "is_spot_px": False, "is_arc_px": False}
-        )
+        px.withColumn("_pk", _pk_expr())
+        .join(mask_flags, "_pk", "left")
+        .drop("_pk")
+        .fillna({"is_om": False, "is_spot_px": False, "is_arc_px": False})
         .withColumn("_v", value)
     )
     aggs = []
@@ -1058,8 +1017,8 @@ class ImagePlanResult:
     # frame, so skipping materialization costs nothing.
     h_maxima: "DataFrame | None" = None
     gradient: "object | None" = None  # GradientStageResult when enabled
-    # the fused A1+A15 GROUPING SETS agg frame (barriered; integrals and
-    # spottiness are selects over it) — kept so unpersist_all can drop it
+    # the fused A1+A15 joint agg frame (barriered; integrals and
+    # spottiness are margin re-aggregations of it)
     fused_bins: "DataFrame | None" = None
     # stage counters (A22 analog of the reference's per-stage printouts,
     # pipeline_queue.py:1007-1014): populated when run_image_plan gets
@@ -1067,21 +1026,14 @@ class ImagePlanResult:
     # over the observed frame, then yields its named metrics for free —
     # no extra job per counter.
     observations: dict[str, Observation] = field(default_factory=dict)
+    # every frame a plan barrier materialized, the gradient stage's
+    # included; outliers and om_pixels are projections of two of them
+    barriers: list = field(default_factory=list)
 
     def unpersist_all(self) -> None:
         """Drop every frame the plan persisted (call after the batch's
         outputs are written — the streaming sink does this per batch)."""
-        # om_pixels is a projection of the labeled_pixels barrier since the
-        # round-14 M2+M1 fusion — releasing labeled_pixels frees it
-        frames = [
-            self.pixels, self.outliers,
-            self.labeled_pixels, self.label_table,
-        ]
-        if self.fused_bins is not None:
-            frames.append(self.fused_bins)
-        if self.gradient is not None:
-            frames.extend(self.gradient.cached)
-        for df in frames:
+        for df in self.barriers:
             _release(df)
 
 
@@ -1094,14 +1046,20 @@ def run_image_plan(
     observe: bool = False,
     barrier: str = "persist",
     corrections: dict | None = None,
-    n_images: int | None = None,
     h_maxima: bool = True,
 ) -> ImagePlanResult:
     """Full per-image plan (pipeline.py:78-504 equivalent).
 
     NOTE: with ``barrier="local_checkpoint"`` (the streaming default) plan
     construction is EAGER — five intermediates materialize as Spark jobs
-    before this function returns; ``barrier="persist"`` keeps it lazy.
+    before this function returns. ``barrier="persist"`` runs one job, the
+    collect of the batch's sorted image set, then stays lazy.
+
+    That image set keys the plan: the px barrier carries each row's
+    ``img_idx`` (its position in the set), and the dense joins and
+    groupings build packed longs from it (see ``_pk_expr``). The pack
+    needs both detector sides <= 8192; a larger detector raises
+    ``ValueError`` before any job.
 
     ``corrections`` (optional) is a kwargs dict for
     ``operators.corrections.apply_correction_images`` (dark / background /
@@ -1131,6 +1089,11 @@ def run_image_plan(
     shape = (controls.size_y, controls.size_x)
     if barrier not in ("persist", "local_checkpoint", "hybrid"):
         raise ValueError(f"unknown barrier {barrier!r}")
+    if max(shape) > _PK_MAX_SIDE:
+        raise ValueError(
+            f"detector {shape[0]}x{shape[1]} exceeds the packed pixel key's "
+            f"{_PK_MAX_SIDE} px per side"
+        )
     eager = barrier != "persist"
     if corrections:
         from xrddatapipeline_spark.operators.corrections import (
@@ -1227,6 +1190,8 @@ def run_image_plan(
                 target=_warm, daemon=True, name="kernel-warmup"
             ).start()
 
+    barriers: list[DataFrame] = []
+
     def _bar(df: DataFrame, dense: bool = False, label: str = "") -> DataFrame:
         # name the barrier's stages in the Spark UI / REST profile: the
         # round-7/8 profiles showed three big "localCheckpoint at
@@ -1234,13 +1199,15 @@ def run_image_plan(
         # callSite.short is a thread-local property the scheduler copies
         # into the stage name of jobs submitted while it is set.
         sc = df.sparkSession.sparkContext
-        if not label:
-            return _bar_inner(df, dense)
-        sc.setLocalProperty("callSite.short", f"barrier:{label}")
+        if label:
+            sc.setLocalProperty("callSite.short", f"barrier:{label}")
         try:
-            return _bar_inner(df, dense)
+            df = _bar_inner(df, dense)
         finally:
-            sc.setLocalProperty("callSite.short", None)
+            if label:
+                sc.setLocalProperty("callSite.short", None)
+        barriers.append(df)
+        return df
 
     def _bar_inner(df: DataFrame, dense: bool = False) -> DataFrame:
         if not eager:
@@ -1302,6 +1269,11 @@ def run_image_plan(
     drop_cols = ["tth", "azim_band", "azim_mask", "dataset", "seq"]
     if calib is None:
         drop_cols += ["q", "azim"]
+    # the batch's sorted image set, collected once: img_idx rides on the
+    # px barrier, so the three dense stages build their packed keys
+    # arithmetically (see _pk_expr) and the kernel feeds know the image
+    # count
+    ids = _image_set(pixels)
     masked = with_base_mask(
         join_calib(
             pixels, calib, broadcast=broadcast_calib, controls=controls
@@ -1336,44 +1308,17 @@ def run_image_plan(
             .drop("is_predef")
         )
     px = _bar(_obs(
-        masked.drop(*drop_cols),
+        with_img_idx(masked.drop(*drop_cols), ids),
         "corrections",
         F.count(F.lit(1)).alias("n_px"),
         F.count_if(F.col("base_mask")).alias("n_base_masked"),
     ), dense=True, label="px")
-    # Per-batch image_id -> index map (round 14): lets the three dense
-    # barrier stages key their probes/aggregations on packed longs instead
-    # of (image_id STRING, ...) — see _pk_expr. ONE tiny cached-scan job
-    # (it subsumes the distinct-count the gradient/h-maxima feeds already
-    # ran for n_images). Eager only: under a lazy barrier a collect here
-    # would force materialization (dump_plans relies on persist staying
-    # lazy), and the legacy 3-column joins remain correct either way.
-    image_index = None
-    if eager and shape[0] <= 8192 and shape[1] <= 8192:
-        ids = sorted(
-            r[0] for r in px.select("image_id").distinct().collect()
-        )
-        if n_images is None:
-            n_images = len(ids)
-        # amortization gate: below ~4M total pixels the packed path's
-        # extra projections + plan/codegen cost exceed the probe saving
-        # (alternating A/B on the 512^2 single-image bench plan: packed
-        # med 5.23 s vs legacy 4.84 — the probe there is 262k rows);
-        # one full-res 2880^2 image (8.3M px) is already far past
-        # break-even (~28 run core-s saved per dense pass per image).
-        if (
-            0 < len(ids) <= _PK_MAX_IMAGES
-            and shape[0] * shape[1] * len(ids) >= 4_000_000
-        ):
-            image_index = {s: i for i, s in enumerate(ids)}
     # The sparse intermediates (outlier/om/labeled pixel sets, label table)
     # feed several downstream outputs; persist them so the expensive
     # upstream (ring stats + raster kernels) runs once, not once per output.
     # They are ~1e4-1e5 rows per image — cheap to cache at any scale.
     outliers = _bar(_obs(
-        outlier_pixels(
-            px, esd_mul=controls.esd_mul, image_index=image_index
-        ),
+        outlier_pixels(px, esd_mul=controls.esd_mul),
         "outlier_mask",
         F.count(F.lit(1)).alias("n_outlier_px"),
     ), label="outliers")
@@ -1412,7 +1357,6 @@ def run_image_plan(
             # full-column probe
             controls=controls if calib is None else None,
             closing_radius=1,
-            image_index=image_index,
         ),
         "binary_closing",
         F.count(F.lit(1)).alias("n_om_px"),
@@ -1429,12 +1373,6 @@ def run_image_plan(
     # the labeled pixel set, and spot/arc membership is the classifier (or
     # the gradient stage's refined new_spot/new_arc flags)
     grad = None
-    if (gradient_stage or h_maxima) and n_images is None and eager:
-        # cheap column-pruned count on the already-materialized px
-        # barrier — lets the band-kernel and h-maxima feeds pin a balanced
-        # explicit partition count (streaming callers don't know the
-        # batch's image count up front)
-        n_images = px.select("image_id").distinct().count()
     if gradient_stage:
         from xrddatapipeline_spark.plans.gradient_stage import gradient_classify
 
@@ -1444,10 +1382,10 @@ def run_image_plan(
         # 135 s/task vs ~44 s at 8 x 2880^2
         grad = gradient_classify(
             px, lpx, label_table, controls, barrier_fn=_bar, sparse_hint=sb,
-            n_images=n_images,
+            n_images=len(ids),
         )
         mask_flags = grad.pixel_flags.select(
-            "image_id", "y", "x",
+            "image_id", "img_idx", "y", "x",
             F.lit(True).alias("is_om"),
             F.col("new_spot").alias("is_spot_px"),
             F.col("new_arc").alias("is_arc_px"),
@@ -1461,10 +1399,7 @@ def run_image_plan(
     # jobs (the round-9 profile priced the separate spottiness job at
     # 176-548 core-s per warm batch).
     fused_bins = _bar(
-        integrate_and_spottiness(
-            px, mask_flags, controls, sparse_hint=sb,
-            image_index=image_index,
-        ),
+        integrate_and_spottiness(px, mask_flags, controls, sparse_hint=sb),
         label="intspot",
     )
     integrals = _obs(
@@ -1486,7 +1421,7 @@ def run_image_plan(
                     "image_id", "y", "x"
                 ),
                 controls,
-                n_images=n_images,
+                n_images=len(ids),
                 # closed-form calibration => qbin re-attaches bit-identically
                 # to the sparse maxima; a calib TABLE keeps it in the feed
                 recompute_qbin=calib is None,
@@ -1496,7 +1431,7 @@ def run_image_plan(
         )
     return ImagePlanResult(
         pixels=px,
-        outliers=outliers,
+        outliers=outliers.drop("img_idx"),
         om_pixels=om,
         labeled_pixels=lpx,
         label_table=label_table,
@@ -1506,5 +1441,6 @@ def run_image_plan(
         h_maxima=hm,
         gradient=grad,
         fused_bins=fused_bins,
+        barriers=barriers,
         observations=obs,
     )

@@ -34,6 +34,14 @@ Reference semantics mapped to Spark:
   latest earlier seq present — where the reference mis-pairs on gaps
   (pipeline.py:516-523).
 
+Each micro-batch is decoded once: ``process_batch`` turns the batch frame
+into one eager local checkpoint before anything else (a TIFF stream would
+otherwise re-run its decode for every action), and the pixel store and the
+plan read that checkpoint. The batch's (dataset, seq) keys, which the
+emptiness check and csim's store lookback need, are an observed metric of
+the checkpoint job. Structured Streaming's ``foreachBatch`` guidance is
+the same: materialize a micro-batch once when several writers read it.
+
 Exactly-once: the checkpoint makes the SOURCE exactly-once (each input
 file is processed in one batch). The parquet sinks here are append-only,
 so a crash mid-batch can duplicate output rows on retry; production
@@ -53,17 +61,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from xrddatapipeline_spark.barrier import release
 from xrddatapipeline_spark.calib.geometry import ImageControls
 from xrddatapipeline_spark.plans.image_pipeline import (
     ImagePlanResult,
     cosine_similarity_series,
     run_image_plan,
 )
-
-#: schema of a landed pixel file (what the TIFF decode emits per image)
-PIXEL_SCHEMA = (
-    "dataset string, seq int, image_id string, y int, x int, intensity int"
-)
+from xrddatapipeline_spark.sources.tiff import PIXEL_SCHEMA
 
 
 def _observation_get(o, name: str, timeout_s: float = 60.0):
@@ -140,7 +145,6 @@ def run_batch(
     gradient_stage: bool = False,
     observe: bool = False,
     barrier: str = "persist",
-    n_images: int | None = None,
     h_maxima: bool = True,
 ) -> Iterator[ImagePlanResult]:
     """One micro-batch as shipped: ``with run_batch(...) as res:``
@@ -180,7 +184,6 @@ def run_batch(
             gradient_stage=gradient_stage,
             observe=observe,
             barrier=barrier,
-            n_images=n_images,
             h_maxima=h_maxima,
         )
         sinks = [
@@ -352,12 +355,32 @@ class StreamingImagePipeline:
         return self.start(**self._start_kwargs)
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        from pyspark import StorageLevel
+        from pyspark.sql import Observation
+
         self.batches_seen += 1
-        if batch_df.isEmpty():
-            return
-        batch_df = batch_df.select(
-            "dataset", "seq", "image_id", "y", "x", "intensity"
+        # decode once: a TIFF stream re-runs its decode UDTF for every
+        # action on the batch frame, so the pixel store and the plan scan
+        # this checkpoint instead. The batch's (dataset, seq) keys are an
+        # observed metric of the checkpoint job: they are the emptiness
+        # check and csim's partition keys without a job of their own. The
+        # checkpoint is released when the batch ends.
+        keys = Observation(f"batch_keys_{batch_id}")
+        batch_df = (
+            batch_df.select("dataset", "seq", "image_id", "y", "x", "intensity")
+            .observe(keys, F.collect_set(F.struct("dataset", "seq")).alias("k"))
+            .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
         )
+        try:
+            touched = sorted((r.dataset, r.seq) for r in keys.get["k"])
+            if touched:
+                self._process_decoded(batch_df, batch_id, touched)
+        finally:
+            release(batch_df)
+
+    def _process_decoded(
+        self, batch_df: DataFrame, batch_id: int, touched: list
+    ) -> None:
         from xrddatapipeline_spark import tables
 
         # pixel store first: partitioned by (dataset, seq) so the csim
@@ -375,7 +398,7 @@ class StreamingImagePipeline:
             self.calib,
             self.controls,
             write,
-            lambda: self._csim_frame(batch_df),
+            lambda: self._csim_frame(touched),
             broadcast_calib=self.broadcast_calib,
             gradient_stage=self.gradient_stage,
             observe=self.observe_metrics,
@@ -418,17 +441,14 @@ class StreamingImagePipeline:
                     self._path("stage_metrics")
                 )
 
-    def _csim_frame(self, batch_df: DataFrame) -> DataFrame:
-        """T5: csim vs previous/first via the pixel store (J4-over-store).
+    def _csim_frame(self, touched: list) -> DataFrame:
+        """T5: csim vs previous/first via the pixel store (J4-over-store)
+        for the batch's ``touched`` (dataset, seq) images.
 
         Reads only the (dataset, seq) partitions needed: the batch images,
         each predecessor seq, and seq 0 of each touched dataset — a
         partition-pruned scan however large the store grows.
         """
-        touched = [
-            (r.dataset, r.seq)
-            for r in batch_df.select("dataset", "seq").distinct().collect()
-        ]
         needed = set()
         for ds, seq in touched:
             needed.update({(ds, seq), (ds, seq - 1), (ds, 0)})
