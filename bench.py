@@ -163,7 +163,6 @@ def _image_plan_seconds(spark) -> float:
     with run_batch(
         pixels, calib, c, _noop_writer(),
         lambda: cosine_similarity_series(pixels),
-        barrier="local_checkpoint",
     ):
         pass
     elapsed = time.perf_counter() - t0

@@ -53,7 +53,7 @@ def main() -> None:
     pixels.count()
     drop = ["tth", "azim_band", "azim_mask", "dataset", "seq", "q", "azim"]
     masked = with_base_mask(
-        join_calib(pixels, None, broadcast=True, controls=c), controls=c
+        join_calib(pixels, None, controls=c), controls=c
     )
     px = masked.drop(*[col for col in drop if col in masked.columns])
     px = px.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)

@@ -78,7 +78,7 @@ def main() -> None:
     pixels.count()
     drop = ["tth", "azim_band", "azim_mask", "q", "azim"]
     masked = with_base_mask(
-        join_calib(pixels, None, broadcast=True, controls=c), controls=c
+        join_calib(pixels, None, controls=c), controls=c
     )
     px = with_img_idx(
         masked.drop(*[col for col in drop if col in masked.columns])
@@ -137,9 +137,7 @@ def main() -> None:
                     _noop,
                     h_maxima_per_qbin(
                         with_base_mask(
-                            join_calib(
-                                pixels, None, broadcast=True, controls=c
-                            ),
+                            join_calib(pixels, None, controls=c),
                             controls=c,
                         ).where(~F.col("base_mask")).select(
                             "image_id", "y", "x", "intensity"

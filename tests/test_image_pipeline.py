@@ -222,16 +222,16 @@ def test_observed_stage_counters_match_outputs(spark):
 
 
 def test_local_checkpoint_barrier_equivalent_and_released(spark):
-    """barrier='local_checkpoint' (the streaming default) produces the
-    same integrals as the persist barrier, and unpersist_all frees the
+    """barrier='local_checkpoint' (the default) produces the same
+    integrals as the hybrid barrier, and unpersist_all frees the
     checkpointed RDD storage (a long-lived stream cannot wait for GC)."""
     img = make_image(CONTROLS, seq=3)
     pixels = images_long_df(spark, [("synth", 3, img)])
     calib = build_calib_pixels(spark, CONTROLS).cache()
 
-    res_p = run_image_plan(pixels, calib, CONTROLS, barrier="persist")
-    want = res_p.integrals.orderBy("kind", "tth_idx").toPandas()
-    res_p.unpersist_all()
+    res_h = run_image_plan(pixels, calib, CONTROLS, barrier="hybrid")
+    want = res_h.integrals.orderBy("kind", "tth_idx").toPandas()
+    res_h.unpersist_all()
 
     def rdd_ids() -> set:
         return {
@@ -255,20 +255,21 @@ def test_local_checkpoint_barrier_equivalent_and_released(spark):
     calib.unpersist()
 
 
-def test_retired_barrier_rejected_before_any_job(spark):
-    """Only persist / local_checkpoint / hybrid remain: the retired
-    no-dense-cache route is refused at the top of run_image_plan, before
-    the plan submits a single Spark job (eager barriers would otherwise
-    have materialized px first)."""
+@pytest.mark.parametrize("barrier", ["hybrid-nopx", "persist"])
+def test_retired_barrier_rejected_before_any_job(spark, barrier):
+    """Only local_checkpoint / hybrid remain: the retired no-dense-cache
+    and lazy persist routes are refused at the top of run_image_plan,
+    before the plan submits a single Spark job (the image-set collect and
+    the eager barriers would otherwise have run first)."""
     sc = spark.sparkContext
-    group = "retired-barrier-probe"
+    group = f"retired-barrier-probe-{barrier}"
     pixels = images_long_df(
         spark, [("synth", 0, make_image(CONTROLS, seq=0))]
     )
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
         with pytest.raises(ValueError, match="unknown barrier"):
-            run_image_plan(pixels, None, CONTROLS, barrier="hybrid-nopx")
+            run_image_plan(pixels, None, CONTROLS, barrier=barrier)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

@@ -1,12 +1,9 @@
-"""Multi-image batches: per-image isolation and the non-broadcast join path.
+"""Multi-image batches: per-image isolation.
 
 The 100 TB execution model processes many images per batch; every
-aggregation and kernel groups on image_id. These tests prove (a) a
-multi-image batch produces byte-identical per-image outputs to
-single-image runs (no cross-image leakage through kernels, ring stats, or
-integrals), and (b) the sort-merge calib-join path (broadcast_calib=False
-— what a 8.3 Mpx detector would use with a bucketed calib table) matches
-the broadcast path exactly.
+aggregation and kernel groups on image_id. This test proves a multi-image
+batch produces byte-identical per-image outputs to single-image runs (no
+cross-image leakage through kernels, ring stats, or integrals).
 """
 
 from __future__ import annotations
@@ -62,12 +59,3 @@ def test_multi_image_batch_equals_single_runs(spark, calib):
         k = single.image_id.iloc[0]
         assert got_sets[k] == set(zip(single.y, single.x))
 
-
-def test_nonbroadcast_calib_join_matches(spark, calib):
-    img = make_image(CONTROLS, seq=0)
-    pixels = images_long_df(spark, [("synth", 0, img)])
-    res_b = run_image_plan(pixels, calib, CONTROLS, broadcast_calib=True)
-    res_s = run_image_plan(pixels, calib, CONTROLS, broadcast_calib=False)
-    a = _base_integrals(res_b)
-    b = _base_integrals(res_s)
-    np.testing.assert_allclose(a.intensity, b.intensity, rtol=1e-12)

@@ -258,21 +258,29 @@ def test_fused_integrals_spottiness_one_scan(spark):
 
 def test_outlier_stage_takes_histogram_route(spark):
     """The ring-outlier stats have one route: the (ring key, intensity)
-    histogram. The lazy (persist) plan pre-aggregates candidates on the
-    packed ring key ``_gk`` ((img_idx << 32) | ring_idx) and intensity,
-    and never collects raw per-pixel intensities, so an edit that
-    restores the array route or the (image_id, ring_idx) key fails here."""
+    histogram. The outlier stage, built lazily on the plan's own px
+    frame, pre-aggregates candidates on the packed ring key ``_gk``
+    ((img_idx << 32) | ring_idx) and intensity, and never collects raw
+    per-pixel intensities, so an edit that restores the array route or
+    the (image_id, ring_idx) key fails here."""
     import re
 
     from tests.fixtures_images import CONTROLS, images_long_df, make_image
-    from xrddatapipeline_spark.plans.image_pipeline import run_image_plan
+    from xrddatapipeline_spark.plans.image_pipeline import (
+        join_calib,
+        outlier_pixels,
+        with_base_mask,
+        with_img_idx,
+    )
 
     pixels = images_long_df(
         spark, [("synth", 0, make_image(CONTROLS, seq=0))]
     )
-    res = run_image_plan(pixels, None, CONTROLS, barrier="persist")
-    plan = res.outliers._jdf.queryExecution().analyzed().toString()
+    px = with_img_idx(with_base_mask(
+        join_calib(pixels, None, controls=CONTROLS), controls=CONTROLS
+    ))
+    outliers = outlier_pixels(px, esd_mul=CONTROLS.esd_mul)
+    plan = outliers._jdf.queryExecution().analyzed().toString()
     assert re.search(r"Aggregate \[_gk#\d+L, intensity#\d+\]", plan), plan
     assert not re.search(r"Aggregate \[image_id#\d+, ring_idx#\d+", plan), plan
     assert not re.search(r"collect_list\(intensity#\d+", plan), plan
-    res.unpersist_all()

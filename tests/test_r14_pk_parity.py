@@ -41,7 +41,7 @@ def px2(spark):
     )
     px = with_img_idx(
         with_base_mask(
-            join_calib(pixels, None, broadcast=True, controls=CONTROLS),
+            join_calib(pixels, None, controls=CONTROLS),
             controls=CONTROLS,
         )
     ).persist()

@@ -740,8 +740,7 @@ def test_sink_failure_settles_csim_and_releases_plan(spark):
             csim_done.set()
 
     with pytest.raises(RuntimeError, match="sink down"):
-        with run_batch(px, calib, CONTROLS, write, slow_csim,
-                       barrier="local_checkpoint"):
+        with run_batch(px, calib, CONTROLS, write, slow_csim):
             pytest.fail("the with-body must not run after a sink failed")
     assert csim_done.is_set(), "run_batch raised with csim still in flight"
     assert live and live[0], "the plan's barrier frames were not persisted"
@@ -760,11 +759,9 @@ def test_run_batch_writes_the_shipped_output_set(spark, gradient):
         assert name not in labels, f"{name} written twice"
         labels[name] = spark.sparkContext.getLocalProperty("callSite.short")
 
-    # the stream's barrier: a lazy "persist" plan with the gradient stage
-    # spends minutes in driver-side re-analysis
     with run_batch(px, calib, CONTROLS, write,
                    lambda: cosine_similarity_series(px),
-                   gradient_stage=gradient, barrier="local_checkpoint"):
+                   gradient_stage=gradient):
         pass
     want = {"integrals", "spot_stats", "spottiness", "outliers", "h_maxima"}
     want |= {"gradient_arcs"} if gradient else set()

@@ -545,9 +545,6 @@ class GradientStageResult:
     pixel_flags: DataFrame   # (image_id, [img_idx,] y, x, label, new_spot, new_arc)
     on_arc_labels: DataFrame  # (image_id, label, p20_r2, on_arc)
     grad_clusters: DataFrame  # (image_id, newlabel, parent_label, med_azim, n_px)
-    # frames persisted by gradient_classify; the caller (or
-    # ImagePlanResult.unpersist_all) drops them after the batch is written
-    cached: tuple = ()
 
 
 def gradient_classify(
@@ -555,7 +552,7 @@ def gradient_classify(
     lpx: DataFrame,
     label_table: DataFrame,
     controls: ImageControls,
-    barrier_fn=None,
+    barrier_fn,
     sparse_hint=None,
     n_images: int | None = None,
 ) -> GradientStageResult:
@@ -565,9 +562,9 @@ def gradient_classify(
     pixels with (q, azim); ``label_table``: shape-classifier output with
     (area, diff_azim, diff_q, classifier).
 
-    ``barrier_fn`` (default ``persist``) materializes the fused kernel
-    output; run_image_plan passes its eager-checkpoint barrier so the
-    kernel provably runs ONCE — a lazy persist lets two consumer branches
+    ``barrier_fn(df, label=...)`` materializes the fused kernel output;
+    run_image_plan passes its eager-checkpoint barrier so the kernel
+    provably runs ONCE — a lazy persist would let two consumer branches
     of the same job race the cache and compute the kernel twice (measured
     at 8 x 2880^2: two full shuffle+kernel stage pairs).
 
@@ -576,8 +573,6 @@ def gradient_classify(
     where LogicalRDD stats are unknown to AQE.
     """
     shape = (controls.size_y, controls.size_x)
-    if barrier_fn is None:
-        barrier_fn = lambda df, label="": df.persist()  # noqa: E731
     if sparse_hint is None:
         sparse_hint = lambda df: df  # noqa: E731
     # ONE banded kernel pass emits only the labeled-pixel gradients plus
@@ -650,7 +645,6 @@ def gradient_classify(
         pixel_flags=flagged,
         on_arc_labels=on_arc,
         grad_clusters=clusters,
-        cached=(fused, on_arc, thresholds),
     )
 
 

@@ -4,7 +4,7 @@ Mirrors ``run_iteration`` (pipeline.py:78-567) and the groupby
 classification path (classification.py:373-444; SURVEY §2.9, §3.1 step 4),
 re-expressed Spark-first:
 
-    pixels ⋈ calib_pixels          (J1; broadcast for small detectors)
+    pixels ⋈ calib_pixels          (J1; broadcast, or closed-form)
       → base mask                  (F1-F3: nonpositive ∨ azim-range ∨ predef)
       → ring median/MAD outliers   (A2/A4/J7 as groupBy + broadcast-back)
       → binary closing             (M2 kernel)
@@ -16,7 +16,8 @@ re-expressed Spark-first:
 
 Every stage returns a DataFrame; nothing collects to the driver. At 100 TB
 scale the plan shuffles on image_id (kernel stages) and on the small
-aggregation keys; calib join broadcasts below ~10 MB and bucket-joins above.
+aggregation keys; a calib table is always broadcast, and detectors at the
+8.3 Mpx scale use closed-form calibration (``calib=None``) instead.
 """
 
 from __future__ import annotations
@@ -74,25 +75,20 @@ MIN_ARC_AREA = 100
 def join_calib(
     pixels: DataFrame,
     calib: DataFrame | None,
-    broadcast: bool = True,
     controls: ImageControls | None = None,
 ) -> DataFrame:
-    """J1: image ⋈ calibration maps on (y, x) — or, when ``calib`` is
-    None, compute the calibration columns closed-form on the pixel rows
-    (``with_calib_columns``): zero joins, zero shuffles; codegen'd trig
-    per row is cheaper than sorting 8.3 M rows per image for a join. The
-    join path remains for externally-measured per-pixel tables (flat
-    fields, dark frames) that cannot be recomputed. Broadcast for
-    test-sized detectors; at 8.3 Mpx store every such table via
-    ``calib.cache.save_bucketed_pixel_table`` so the sort-merge join is
-    exchange-free (see test_bucketed_pixel_join_is_exchange_free)."""
+    """J1: image ⋈ calibration maps on (y, x), the calib table broadcast —
+    or, when ``calib`` is None, compute the calibration columns closed-form
+    on the pixel rows (``with_calib_columns``): zero joins, zero shuffles;
+    codegen'd trig per row is cheaper than sorting 8.3 M rows per image
+    for a join. The shipped stream joins a table at 512²; detectors at the
+    8.3 Mpx scale use closed-form calibration (``calib=None``)."""
     if calib is None:
         from xrddatapipeline_spark.calib.cache import with_calib_columns
 
         assert controls is not None
         return with_calib_columns(pixels, controls)
-    c = F.broadcast(calib) if broadcast else calib
-    return pixels.join(c, ["y", "x"])
+    return pixels.join(F.broadcast(calib), ["y", "x"])
 
 
 def with_base_mask(
@@ -116,7 +112,7 @@ def with_base_mask(
     return px.withColumn("base_mask", mask)
 
 
-#: eager plans broadcast the sparse mask sets into their dense joins up to
+#: the plan broadcasts the sparse mask sets into its dense joins up to
 #: this many materialized outlier rows (see run_image_plan)
 _SPARSE_BROADCAST_ROWS = 4_000_000
 
@@ -814,7 +810,7 @@ def h_maxima_per_qbin(
         )
     else:
         src = px.select("image_id", "y", "x", "intensity", *qbin_cols)
-    # n_images may legitimately be 0 (empty batch under an eager barrier):
+    # n_images may legitimately be 0 (empty batch):
     # repartition(0) is an error, and there is nothing to balance anyway
     if n_images and 0 < 4 * n_images <= 4096:
         src = src.repartition(4 * n_images, "image_id")
@@ -1041,19 +1037,16 @@ def run_image_plan(
     pixels: DataFrame,
     calib: DataFrame,
     controls: ImageControls,
-    broadcast_calib: bool = True,
     gradient_stage: bool = False,
     observe: bool = False,
-    barrier: str = "persist",
+    barrier: str = "local_checkpoint",
     corrections: dict | None = None,
     h_maxima: bool = True,
 ) -> ImagePlanResult:
     """Full per-image plan (pipeline.py:78-504 equivalent).
 
-    NOTE: with ``barrier="local_checkpoint"`` (the streaming default) plan
-    construction is EAGER — five intermediates materialize as Spark jobs
-    before this function returns. ``barrier="persist"`` runs one job, the
-    collect of the batch's sorted image set, then stays lazy.
+    Plan construction is EAGER: the batch's sorted image set and five
+    intermediates materialize as Spark jobs before this function returns.
 
     That image set keys the plan: the px barrier carries each row's
     ``img_idx`` (its position in the set), and the dense joins and
@@ -1071,30 +1064,41 @@ def run_image_plan(
     (plans.gradient_stage): the spot/arc pixel sets fed to the integrals
     become the refined new_spot/new_arc flags (classification.py:587-606).
 
-    ``barrier`` picks the reuse boundary for the five shared intermediates:
-    "persist" keeps full lineage (fault-tolerant; any lost partition
-    recomputes); "local_checkpoint" ALSO truncates lineage; "hybrid"
-    (eager like local_checkpoint) keeps the two DENSE frames (pixel table,
-    gradient raster) as eager COLUMNAR caches — pruned compressed re-scans
-    for their 4-6 consumers — and checkpoints only the sparse frames. The plan is
-    deep, and classic Spark re-analyzes the whole upstream plan on every
-    transformation AND per output job, a driver-side cost independent of
-    pixel count; checkpointed barriers make every downstream plan shallow.
-    Measured warm steady-state per image on local[32]: 1 Mpx 40-48 s
-    (persist) vs 9-11 s (local_checkpoint); single 8.3 Mpx ~par (22-39 s
-    vs 26-28 s); 8-image 8.3 Mpx batches 15.9 s/img (persist) vs
-    12.7-14.5 s/img (checkpoint, serialized storage). Executor loss under
-    local_checkpoint costs the whole image — the right trade under
-    foreachBatch, which retries the batch anyway."""
+    ``barrier`` picks the reuse boundary for the five shared intermediates.
+    "local_checkpoint" (the default, and what the stream and the 512²
+    bench run) checkpoints each one eagerly, which truncates lineage at
+    the plan's reuse boundaries. "hybrid" (the keep-up bench's choice)
+    keeps the two DENSE frames (pixel table, gradient raster) as eager
+    COLUMNAR caches — pruned compressed re-scans for their 4-6 consumers
+    — and checkpoints only the sparse frames. Any other value raises
+    ``ValueError`` before any job.
+
+    The plan is deep, and classic Spark re-analyzes the whole upstream
+    plan on every transformation AND per output job: a driver-side cost
+    independent of pixel count (~30 s per batch without truncation).
+    Checkpointed barriers make every downstream plan shallow. A lazy
+    ``persist`` barrier that kept full lineage lost every recorded A/B
+    and was deleted:
+
+    - 512², r8, min of 3 interleaved: 4.55 s against 3.89 s for
+      local_checkpoint (hybrid 4.31; STATUS.md);
+    - 512², r14, min of 5 alternating: 3.91 s against 3.55 s (hybrid
+      3.90; OPTIMIZATION_r14.md §10);
+    - warm 1 Mpx per image on local[32]: 40-48 s against 9-11 s;
+    - 8-image 8.3 Mpx batches: 15.9 s/img against 12.7-14.5 s/img (a
+      single 8.3 Mpx image was about par, 22-39 s against 26-28 s).
+
+    Executor loss under a checkpoint costs the whole image, and that
+    lineage bought nothing: foreachBatch retries a failed batch as a
+    whole, so lost checkpoint lineage is covered one level up."""
     shape = (controls.size_y, controls.size_x)
-    if barrier not in ("persist", "local_checkpoint", "hybrid"):
+    if barrier not in ("local_checkpoint", "hybrid"):
         raise ValueError(f"unknown barrier {barrier!r}")
     if max(shape) > _PK_MAX_SIDE:
         raise ValueError(
             f"detector {shape[0]}x{shape[1]} exceeds the packed pixel key's "
             f"{_PK_MAX_SIDE} px per side"
         )
-    eager = barrier != "persist"
     if corrections:
         from xrddatapipeline_spark.operators.corrections import (
             apply_correction_images,
@@ -1102,10 +1106,8 @@ def run_image_plan(
 
         pixels = apply_correction_images(pixels, **corrections)
 
-    if (
-        eager
-        and (gradient_stage or h_maxima)
-        and controls.size_y * controls.size_x >= 4_000_000
+    if (gradient_stage or h_maxima) and (
+        controls.size_y * controls.size_x >= 4_000_000
     ):
         # pre-fault the kernel scratch sets across the python worker pool
         # CONCURRENTLY with the px cache build (JVM-heavy, pythons idle):
@@ -1210,8 +1212,6 @@ def run_image_plan(
         return df
 
     def _bar_inner(df: DataFrame, dense: bool = False) -> DataFrame:
-        if not eager:
-            return df.persist()
         from pyspark.storagelevel import StorageLevel
 
         if barrier == "hybrid" and dense:
@@ -1250,7 +1250,7 @@ def run_image_plan(
         return df.observe(o, *metrics)
 
     # px (the dense calib-joined pixel table) feeds five outputs; without a
-    # persist every output re-executes the pixels ⋈ calib join. ~8.3 M rows
+    # barrier every output re-executes the pixels ⋈ calib join. ~8.3 M rows
     # x ~15 columns per image — a deliberate per-batch cache, dropped by the
     # caller (streaming does this per foreachBatch).
     # columns no plan stage reads after base-mask folding are dropped
@@ -1275,9 +1275,7 @@ def run_image_plan(
     # count
     ids = _image_set(pixels)
     masked = with_base_mask(
-        join_calib(
-            pixels, calib, broadcast=broadcast_calib, controls=controls
-        ),
+        join_calib(pixels, calib, controls=controls),
         controls=controls,
     )
     # Predef RASTER mask (the reference's .tif mask branch,
@@ -1314,7 +1312,7 @@ def run_image_plan(
         F.count_if(F.col("base_mask")).alias("n_base_masked"),
     ), dense=True, label="px")
     # The sparse intermediates (outlier/om/labeled pixel sets, label table)
-    # feed several downstream outputs; persist them so the expensive
+    # feed several downstream outputs; barrier them so the expensive
     # upstream (ring stats + raster kernels) runs once, not once per output.
     # They are ~1e4-1e5 rows per image — cheap to cache at any scale.
     outliers = _bar(_obs(
@@ -1332,12 +1330,7 @@ def run_image_plan(
     # already ran it eagerly; the 3x3 closing only grows the set by gap
     # fill, far inside the threshold's safety margin) so a pathologically
     # dense mask falls back to SMJ instead of a driver-sized broadcast.
-    # Under "persist" the frames are InMemoryRelations whose stats AQE
-    # already sees — no hint needed.
-    if eager and outliers.count() <= _SPARSE_BROADCAST_ROWS:
-        sb = F.broadcast
-    else:
-        sb = None
+    sb = F.broadcast if outliers.count() <= _SPARSE_BROADCAST_ROWS else None
     # split construction (round 8): materialize the lpx barrier FIRST,
     # then build label_table FROM the barrier — the tuple form re-ran
     # the labeling kernel + the 66M-row px join inside the label_table

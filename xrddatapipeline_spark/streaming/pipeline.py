@@ -141,10 +141,9 @@ def run_batch(
     write: Callable[[DataFrame, str], None],
     csim: Callable[[], DataFrame],
     *,
-    broadcast_calib: bool = True,
     gradient_stage: bool = False,
     observe: bool = False,
-    barrier: str = "persist",
+    barrier: str = "local_checkpoint",
     h_maxima: bool = True,
 ) -> Iterator[ImagePlanResult]:
     """One micro-batch as shipped: ``with run_batch(...) as res:``
@@ -152,7 +151,10 @@ def run_batch(
     1. submits ``write(csim(), "csim")`` on a side thread before the plan
        (csim needs only the raw pixels, so its window-shuffle job, the
        biggest independent one, overlaps the plan's eager barriers);
-    2. calls ``run_image_plan`` with the remaining arguments;
+    2. calls ``run_image_plan`` with the remaining arguments; its eager
+       barriers materialize the plan's intermediates (``barrier`` is
+       ``"local_checkpoint"``, the default and the stream's, or
+       ``"hybrid"``, the keep-up bench's; see ``run_image_plan``);
     3. writes integrals, spot_stats, spottiness, outliers, h_maxima (if
        on) and gradient_arcs (if on) concurrently, so one job's stage
        tail overlaps the next one's ramp-up, each under
@@ -160,7 +162,7 @@ def run_batch(
        ``"csim"``: the repo benchmark's ``--trace 1`` run rejects the
        per-layer metric a ``sink:csim`` label would add.
 
-    The with-body runs while the plan's frames are still persisted. On
+    The with-body runs while the plan's barriers are still held. On
     every exit path csim settles before ``unpersist_all``, so a failed
     batch never leaves an append in flight when foreachBatch retries it.
     """
@@ -180,7 +182,6 @@ def run_batch(
     try:
         res = run_image_plan(
             pixels, calib, controls,
-            broadcast_calib=broadcast_calib,
             gradient_stage=gradient_stage,
             observe=observe,
             barrier=barrier,
@@ -223,7 +224,6 @@ class StreamingImagePipeline:
     calib: DataFrame
     controls: ImageControls
     out_dir: str
-    broadcast_calib: bool = True
     gradient_stage: bool = False
     observe_metrics: bool = False
     # K3 viz parity: also materialize per-image `<id>_base.tif` /
@@ -399,16 +399,8 @@ class StreamingImagePipeline:
             self.controls,
             write,
             lambda: self._csim_frame(touched),
-            broadcast_calib=self.broadcast_calib,
             gradient_stage=self.gradient_stage,
             observe=self.observe_metrics,
-            # local_checkpoint truncates lineage at the plan's reuse
-            # boundaries: the per-image plan is deep, and eager
-            # re-analysis otherwise costs the driver ~30 s per BATCH
-            # (size-independent). foreachBatch retries a failed batch
-            # wholesale, so the lost fault-tolerance of the
-            # checkpointed RDDs is already covered one level up.
-            barrier="local_checkpoint",
         ) as res:
             if self.render_masks:
                 from xrddatapipeline_spark.sinks import render_mask_tiffs
@@ -431,9 +423,10 @@ class StreamingImagePipeline:
                 flat: dict[str, int] = {"batch_id": int(batch_id)}
                 for name, o in res.observations.items():
                     # Observation.get blocks until an action materializes
-                    # the observed frame; with barrier='persist' a frame no
-                    # output consumed would hang the stream forever — bound
-                    # the wait and skip (with a warning) instead of hanging.
+                    # the observed frame; every observed frame is a barrier
+                    # or an output written above, but an observed frame no
+                    # action ran would hang the stream forever — bound the
+                    # wait and skip (with a warning) instead of hanging.
                     got = _observation_get(o, name, timeout_s=60.0)
                     if got is not None:
                         flat.update({k: int(v) for k, v in got.items()})
