@@ -103,9 +103,9 @@ def _synthetic_pixels(spark, c, n_images: int = 1):
 def _noop_writer(group: str | None = None):
     """A ``run_batch`` write that materializes each output into the noop
     sink (no driver-side collect; executors do all the work). ``group``
-    tags the output jobs' ``spark.jobGroup.id`` for split-arm stage
-    attribution; it is set inside the write because each output runs on
-    its own pool thread, and pool threads do not reliably inherit the
+    tags the output jobs' ``spark.jobGroup.id`` so a concurrently profiled
+    batch can exclude them; it is set inside the write because each output
+    runs on its own pool thread, and pool threads do not reliably inherit the
     submitting thread's local properties (py4j pinned threads map 1:1 to
     fresh JVM threads)."""
 
@@ -197,42 +197,7 @@ def _keepup_2880(batch: int = 8) -> dict:
     calibrates host weather) and ``pilot_sec`` (the full-size-controls JIT
     pilot).
 
-    Split-arm h A/B (round 11 — the PRIMARY h metric, ``h_split_arm``):
-    two rounds running, whole-batch arms published over-bar ratios (r9
-    2.79, r10 1.394/1.561) that stage-level fixed-work profiles refuted —
-    this host's weather excursions span WHOLE batches (multi-minute), so
-    even temporally adjacent whole-batch pairs land in different weather.
-    The split-arm design runs both arms INSIDE one batch: the batch's
-    images are split in half (images are independent; every stage except
-    A19 is per-image), one half runs the full plan WITH h-maxima, the
-    other half WITHOUT, concurrently in the same wall-clock window, each
-    arm tagged with its own ``spark.jobGroup.id`` so the REST jobs API
-    attributes every stage to its arm exactly. Weather multiplies both
-    arms' core-seconds by the same factor and cancels in the ratio.
-    ``SPARK_GRAFT_KEEPUP_SPLIT_REPS`` (default 4 — round-12 ADVICE fix;
-    must be EVEN) split batches alternate WHICH half carries h-on (the
-    synthetic halves differ slightly in spot content), and
-    ``h_split_arm`` is the geometric mean of per-batch core-second ratios
-    — the geomean over an EVEN number of alternating reps pairs every
-    (lowHalf-on/highHalf-off) with a (highHalf-on/lowHalf-off) and
-    cancels the halves' work asymmetry exactly; an odd count leaves a
-    residual asymmetry^(1/reps) bias (round 11's default 3 did — warned
-    at runtime now). If any batch shows the stall-excursion signature
-    (ratio_run detached >0.2 from its own cpu tier, or >1.4 outright),
-    TWO more alternating batches are appended automatically so one
-    excursion is averaged against more clean points without breaking the
-    even pairing; if the count still ends up odd (a failed batch), the
-    line carries ``h_split_arm_odd_reps`` flagging the residual bias
-    (round-12 ADVICE). Each arm's ``barrier:px`` core-seconds are
-    published as the within-batch weather check (identical fixed work
-    per half). The legacy whole-batch estimators (``h_legacy_*``) were
-    dropped from the line in round 13 after the one-round overlap the
-    r12 verdict asked for — the split-arm record refuted them on this
-    host; their history lives in BENCH_r09-r12/STATUS. h_split_arm is
-    the only published h metric. ``hoff_sec_per_image`` is the median
-    split off-arm wall per image: it is measured CONCURRENTLY with the
-    on-arm (the two halves share the session's cores), so it is not the
-    wall of a batch run alone without h-maxima.
+    ``h_core_sec_per_image``: median warm ``sink:h_maxima`` core-s/image.
 
     Per-batch weather index (round 11): every whole-batch profile carries
     ``px_core_sec`` (the ``barrier:px`` stages' core-seconds — identical
@@ -271,9 +236,9 @@ def _keepup_2880(batch: int = 8) -> dict:
         # the UI exists only to serve the per-batch REST stage profiles
         # (negligible cost; keeps outlier batches diagnosable from the
         # published BENCH json instead of being one-off mysteries).
-        # Retention raised: a full session is prep + cold + 3 warm +
-        # 4 split-arm batches at ~85 stages each — the 1000-stage
-        # default would evict early-batch stages out of the REST deltas.
+        # Retention raised: a full session is prep + pilot + cold + 3
+        # warm batches at ~85 stages each — the 1000-stage default would
+        # evict early-batch stages out of the REST deltas.
         extra_conf["spark.ui.enabled"] = "true"
         extra_conf["spark.ui.retainedJobs"] = "4000"
         extra_conf["spark.ui.retainedStages"] = "4000"
@@ -285,7 +250,7 @@ def _keepup_2880(batch: int = 8) -> dict:
     )
     spark.sparkContext.setLogLevel("ERROR")
     # SPARK_GRAFT_KEEPUP_SIZE exists for fast smoke iteration on the
-    # harness itself (split-arm attribution, profile capture); published
+    # harness itself (profile capture, line shape); published
     # rounds always run the reference config (2880, and img_size in the
     # output line makes any deviation visible). Distance scales with size
     # so the ring geometry stays the reference's.
@@ -406,13 +371,9 @@ def _keepup_2880(batch: int = 8) -> dict:
             # core-seconds calibrate host weather per batch (the round-10
             # judge proved arm inflation with exactly this stage: 508 vs
             # 145-157 core-s across batches of identical work)
-            px_core = sum(
-                s.get("executorRunTime", 0)
-                for s in new
-                if s["name"].splitlines()[0].startswith("barrier:px")
-            ) / 1000.0
             return {
-                "px_core_sec": round(px_core, 1),
+                "px_core_sec": round(_label_core_sec(new, "barrier:px"), 1),
+                "h_core_sec": round(_label_core_sec(new, "sink:h_maxima"), 1),
                 "gc_sec": round(gc_sec, 1),
                 "run_sec": round(
                     sum(s.get("executorRunTime", 0) for s in new) / 1000, 1
@@ -439,9 +400,9 @@ def _keepup_2880(batch: int = 8) -> dict:
     batch_profiles: dict[str, list] = {}
 
     def _jobs_snap() -> "set[int] | None":
-        # jobId set for split-arm attribution: the /jobs endpoint is the
-        # only REST surface that carries jobGroup -> stageIds, letting
-        # concurrent arms' stages be separated exactly.
+        # jobId set for group exclusion: the /jobs endpoint is the only
+        # REST surface that carries jobGroup -> stageIds, letting the
+        # pilot's and the kernel warmup's stages be separated exactly.
         if not profile:
             return None
         try:
@@ -478,7 +439,7 @@ def _keepup_2880(batch: int = 8) -> dict:
                 # placeholder keeps list POSITIONS aligned with the wall
                 # lists (round-10 ADVICE): a silently skipped capture would
                 # shift every later profile onto a temporally distant
-                # partner in the sidecar. _arm_core's `field in p` filter
+                # partner in the sidecar. _warm_core's `field in p` filter
                 # treats it as a missing measurement in place.
                 d = {}
             d["wall_sec"] = round(elapsed, 1)
@@ -598,167 +559,6 @@ def _keepup_2880(batch: int = 8) -> dict:
     warms = [one_batch(prof_key="warm") for _ in range(warm_reps)]
     warm = statistics.median(warms)
 
-    # ------------------------------------------------------------------
-    # Split-arm h A/B (round 11 — see the docstring): both arms inside
-    # ONE batch, so whole-batch weather multiplies both arms' core-seconds
-    # identically and cancels in the ratio. Requires the REST profile
-    # (wall time cannot attribute concurrent arms).
-    # ------------------------------------------------------------------
-    def split_batch(rep: int) -> "dict | None":
-        from pyspark.sql import functions as F
-
-        jobs_before = _jobs_snap()
-        snap = _prof_snap()
-        if jobs_before is None or snap is None:
-            return None
-        half = batch // 2
-        low_on = rep % 2 == 0
-        walls: dict[str, float] = {}
-        arm_images: dict[str, int] = {}
-
-        def run_arm(group: str, h_on: bool, low_half: bool) -> None:
-            sc = spark.sparkContext
-            # arm thread: tag every job submitted from here (the eager
-            # barrier chain inside run_image_plan runs on THIS thread)
-            sc.setLocalProperty("spark.jobGroup.id", group)
-            try:
-                cond = (
-                    F.col("seq") < half if low_half else F.col("seq") >= half
-                )
-                # per-arm image count: for odd `batch` the high half holds
-                # batch - half images
-                n_arm = half if low_half else batch - half
-                hpx = pixels.where(cond)
-                t0 = time.perf_counter()
-                with run_batch(
-                    hpx, None, c, _noop_writer(group),
-                    lambda: cosine_similarity_series(hpx),
-                    gradient_stage=True, barrier=barrier, h_maxima=h_on,
-                ):
-                    pass
-                walls[group] = time.perf_counter() - t0
-                arm_images[group] = n_arm
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-
-        with ThreadPoolExecutor(max_workers=2) as arms:
-            fa = arms.submit(run_arm, "split:on", True, low_on)
-            fb = arms.submit(run_arm, "split:off", False, not low_on)
-            fa.result()
-            fb.result()
-        # round-11 ADVICE: the UI status store is fed by an ASYNC listener
-        # queue, so fetching immediately after the arm futures resolve can
-        # miss the final noop-write stages (still enqueued), silently
-        # deflating one arm's run/cpu sums. Poll until no tagged job still
-        # reports RUNNING and the count of tagged stages missing from the
-        # complete list is stable across two reads (jobs' stageIds include
-        # SKIPPED stages that never reach the complete list, so requiring
-        # zero missing would never converge); surface the remainder as
-        # ``uncaptured_stages`` instead of pretending the capture is full.
-        uncaptured = prev_missing = None
-        jobs = stages = None
-        for _ in range(40):  # <= ~20 s
-            try:
-                jobs = _rest("jobs")
-                stages = _rest("stages?status=complete")
-            except Exception:
-                # transient REST failure (history-server compaction,
-                # momentary reset): retry against the iteration budget
-                # instead of discarding a fully-measured batch — only a
-                # capture that NEVER succeeds aborts (round-12 review)
-                time.sleep(0.5)
-                continue
-            new = [
-                j for j in jobs
-                if j["jobId"] not in jobs_before
-                and j.get("jobGroup") in ("split:on", "split:off")
-            ]
-            running = any(j.get("status") == "RUNNING" for j in new)
-            want: set = set()
-            for j in new:
-                want.update(j.get("stageIds", []))
-            have = {s["stageId"] for s in stages}
-            uncaptured = len(want - have)
-            if new and not running and uncaptured == prev_missing:
-                break
-            prev_missing = uncaptured
-            time.sleep(0.5)
-        if jobs is None or stages is None:
-            return None  # every poll attempt failed — no data to attribute
-        arms_sum = _attribute_split_stages(
-            jobs, stages, jobs_before, snap["done"]
-        )
-        if arms_sum is None:
-            return None
-        on, off = arms_sum["split:on"], arms_sum["split:off"]
-        d = {
-            "rep": rep,
-            "on_half": "low" if low_on else "high",
-            "on_run_sec": round(on["run"], 1),
-            "off_run_sec": round(off["run"], 1),
-            "on_cpu_sec": round(on["cpu"], 1),
-            "off_cpu_sec": round(off["cpu"], 1),
-            # within-batch weather check: identical fixed work per half
-            "on_px_core_sec": round(on["px"], 1),
-            "off_px_core_sec": round(off["px"], 1),
-            "wall_on_sec": round(walls["split:on"], 1),
-            "wall_off_sec": round(walls["split:off"], 1),
-            "off_sec_per_image": round(
-                walls["split:off"] / arm_images["split:off"], 2
-            ),
-            "ratio_run": round(on["run"] / off["run"], 3),
-            "ratio_cpu": (
-                round(on["cpu"] / off["cpu"], 3) if off["cpu"] > 0 else None
-            ),
-            "ambiguous_stages": arms_sum["ambiguous"],
-            "uncaptured_stages": uncaptured,
-            "on_top": on["top"],
-            "off_top": off["top"],
-        }
-        batch_profiles.setdefault("split", []).append(d)
-        return d
-
-    # default 4 (round 12, ADVICE): the geomean's EXACT half-asymmetry
-    # cancellation — geomean of (lowOn/highOff) and (highOn/lowOff) pairs
-    # — only holds when the alternating reps are EVEN in count; round
-    # 11's odd default (3, meant to average out a stall excursion) left a
-    # residual asymmetry^(1/3) bias in the published PRIMARY metric. Four
-    # reps keep the excursion-averaging property (one bad batch is 1 of
-    # 4, not 1 of 2) AND the exact cancellation. If any batch still shows
-    # stall evidence (ratio_run far above its own cpu tier, the round-11
-    # excursion signature), TWO more alternating batches are appended —
-    # extension by an even count preserves the pairing.
-    split_reps = int(os.environ.get("SPARK_GRAFT_KEEPUP_SPLIT_REPS", "4"))
-    if split_reps % 2:
-        print(
-            f"SPLIT_REPS={split_reps} is odd — the half-asymmetry "
-            "cancellation is exact only for even rep counts; the "
-            "published geomean carries a residual per-half work bias",
-            file=sys.stderr,
-        )
-    splits: list[dict] = []
-    # a split-batch failure must not lose the whole keep-up block (the
-    # wall/core metrics above are already measured) — degrade to fewer
-    # or zero split points instead
-    def _run_splits(start: int, n: int) -> None:
-        for i in range(start, start + n):
-            try:
-                r = split_batch(i)
-            except Exception as e:  # noqa: BLE001 — degrade, keep keepup
-                print(f"split batch {i} failed: {e!r}", file=sys.stderr)
-                r = None
-            if r is not None:
-                splits.append(r)
-
-    _run_splits(0, split_reps)
-
-    if should_extend_splits(splits, split_reps):
-        print(
-            "split-arm stall excursion detected — extending by 2 batches",
-            file=sys.stderr,
-        )
-        _run_splits(split_reps, 2)
-
     pixels.unpersist()
     spark.stop()
     sec_per_img = warm / batch
@@ -784,56 +584,20 @@ def _keepup_2880(batch: int = 8) -> dict:
     # Primary cross-round metric: core-seconds per image (Σ executorRunTime
     # of each warm batch's stages / batch), median over warm reps — weather
     # cancels in it (the A1+A15 fusion A/B was judged on exactly this
-    # number). Published alongside: the JVM-cpu variant and the core-sec
-    # h A/B ratio. Absent if the REST profile capture failed.
-    def _arm_core(key: str, field: str) -> list[float]:
-        return [p[field] for p in batch_profiles.get(key, []) if field in p]
+    # number). Published alongside: the JVM-cpu variant and the h-maxima
+    # sink's share. Absent if the REST profile capture failed.
+    def _warm_core(field: str) -> "float | None":
+        vals = [p[field] for p in batch_profiles.get("warm", []) if field in p]
+        return round(statistics.median(vals) / batch, 1) if vals else None
 
-    warm_run = _arm_core("warm", "run_sec")
-    if warm_run:
-        out["core_sec_per_image"] = round(
-            statistics.median(warm_run) / batch, 1
-        )
-        warm_cpu = _arm_core("warm", "cpu_sec")
-        if warm_cpu:
-            out["core_cpu_sec_per_image"] = round(
-                statistics.median(warm_cpu) / batch, 1
-            )
-    # The legacy whole-batch h estimators (h_legacy_core / h_legacy_robust
-    # / h_legacy_core_robust / h_legacy_on_over_off[_min]) were DROPPED
-    # from the published line in round 13 (round-12 verdict #5): the
-    # split-arm record refuted them on this host, r12 carried the
-    # one-round overlap, and the historical values live in BENCH_r09-r12
-    # and STATUS. h_split_arm is the only h metric published.
-
-    # PRIMARY h metric (round 11): within-batch split-arm ratio — weather
-    # cancels exactly (both arms share every wall-clock second), and the
-    # geometric mean over alternating-half reps cancels the halves' work
-    # asymmetry. ratio_run is the published number; the cpu variant is the
-    # contention-immune cross-check.
-    if splits:
-        ratios = [s["ratio_run"] for s in splits]
-        out["h_split_arm"] = _geomean(ratios)
-        if len(ratios) % 2:
-            # a failed batch in the base run or the +2 extension leaves an
-            # odd ratio count even when SPLIT_REPS was even: the published
-            # geomean then carries the asymmetry^(1/n) residual — warn AND
-            # flag it next to the metric so readers of the line see it
-            # without the stderr (round-12 ADVICE)
-            print(
-                f"split-arm ratio count {len(ratios)} is odd (a batch "
-                "failed or the extension was cut short) — h_split_arm "
-                "carries the per-half work-asymmetry residual",
-                file=sys.stderr,
-            )
-            out["h_split_arm_odd_reps"] = len(ratios)
-        cpur = [s["ratio_cpu"] for s in splits if s.get("ratio_cpu")]
-        if cpur:
-            out["h_split_arm_cpu"] = _geomean(cpur)
-        out["h_split_arm_batches"] = ratios
-        out["hoff_sec_per_image"] = round(
-            statistics.median(s["off_sec_per_image"] for s in splits), 2
-        )
+    for key, field in (
+        ("core_sec_per_image", "run_sec"),
+        ("core_cpu_sec_per_image", "cpu_sec"),
+        ("h_core_sec_per_image", "h_core_sec"),
+    ):
+        v = _warm_core(field)
+        if v is not None:
+            out[key] = v
 
     # per-batch weather index over the whole batches (identical fixed px
     # work): px_core_sec / session min. Annotated into the profiles so a
@@ -886,105 +650,15 @@ def _keepup_2880(batch: int = 8) -> dict:
     return out
 
 
-def should_extend_splits(splits: "list[dict]", split_reps: int) -> bool:
-    """Auto-extension decision after the initial split-arm reps: extend
-    by 2 more alternating batches iff (a) the rep count is even (an odd
-    base already carries the asymmetry residual — extending won't fix
-    what the operator mis-configured), (b) every planned batch actually
-    produced a measurement (a dropped batch means capture trouble, not
-    weather — don't burn 2 more batches on a broken profile path), and
-    (c) any batch shows the stall-excursion signature
-    (``split_stall_hit``). Pure over the published dicts — unit-tested
-    without Spark."""
-    return (
-        split_reps % 2 == 0
-        and len(splits) == split_reps
-        and any(split_stall_hit(d) for d in splits)
-    )
-
-
-def split_stall_hit(d: dict) -> bool:
-    """The round-11 stall-excursion signature on one split batch's
-    published dict: the run-tier ratio detaches from its own batch's cpu
-    tier (memory stall inflates run, not cpu — the 181.6/58.4 vs
-    39.0/17.8 record), or blows past the historical clean band outright.
-    A hit triggers the even auto-extension (+2 alternating batches) so
-    one excursion is averaged against more clean points. Module-level so
-    the rule is unit-testable without Spark (tests/test_bench_line.py)."""
-    rc = d.get("ratio_cpu")
-    return (rc is not None and d["ratio_run"] - rc > 0.2) or d[
-        "ratio_run"
-    ] > 1.4
-
-
-def _attribute_split_stages(
-    jobs: list, stages: list, jobs_before: set, done: set
-) -> "dict[str, dict] | None":
-    """Attribute this split batch's completed stages to their arms.
-
-    Pure function over REST payloads (unit-tested without Spark): new
-    jobs' jobGroup -> stageIds maps each arm to its stage set; a stage
-    listed under BOTH groups (should never happen — the arms' lineages
-    are disjoint) is excluded from both sums rather than double-counted,
-    and its count is surfaced as ``ambiguous``. Returns per-arm
-    run/cpu/px core-seconds, or None if either arm got no stages
-    (failed capture — the caller drops the batch, never guesses)."""
-    groups: dict[str, set] = {"split:on": set(), "split:off": set()}
-    for j in jobs:
-        g = j.get("jobGroup")
-        if j["jobId"] not in jobs_before and g in groups:
-            groups[g].update(j.get("stageIds", []))
-    both = groups["split:on"] & groups["split:off"]
-    new_stages = [
-        s for s in stages if (s["stageId"], s["attemptId"]) not in done
-    ]
-    out: dict[str, dict] = {}
-    for g, sids in groups.items():
-        run = cpu = px = 0.0
-        mine = []
-        for s in new_stages:
-            sid = s["stageId"]
-            if sid in sids and sid not in both:
-                run += s.get("executorRunTime", 0) / 1000.0
-                cpu += s.get("executorCpuTime", 0) / 1e9
-                if s["name"].splitlines()[0].startswith("barrier:px"):
-                    px += s.get("executorRunTime", 0) / 1000.0
-                mine.append(s)
-        # per-arm top stages: when the arms' ratio moves between sessions
-        # (the A19 marginal cost is host-state sensitive — round-11
-        # record2), this shows WHERE the surcharge sits without a rerun
-        mine.sort(key=lambda s: s.get("executorRunTime", 0), reverse=True)
-        out[g] = {
-            "run": run, "cpu": cpu, "px": px,
-            "top": [
-                [
-                    s["name"].splitlines()[0][:40],
-                    round(s.get("executorRunTime", 0) / 1000, 1),
-                    round(s.get("executorCpuTime", 0) / 1e9, 1),
-                ]
-                for s in mine[:5]
-            ],
-        }
-    if not (out["split:on"]["run"] > 0 and out["split:off"]["run"] > 0):
-        return None
-    out["ambiguous"] = len(both)  # type: ignore[assignment]
-    return out
-
-
-def _geomean(ratios: "list[float]") -> float:
-    """Geometric mean, rounded — the right combiner for the split-arm
-    ratios: with alternating halves, geomean((A_on/B_off), (B_on/A_off))
-    = sqrt((A_on*B_on)/(A_off*B_off)) — the halves' per-half work
-    asymmetry cancels exactly, which an arithmetic mean does not. The
-    exact cancellation requires an EVEN number of alternating reps (each
-    low-on batch paired with a high-on one); with an odd count the extra
-    rep's half appears once unpaired, leaving an asymmetry^(1/n)
-    residual — which is why SPLIT_REPS defaults to 4 and warns on odd."""
-    import math
-
-    return round(
-        math.exp(sum(math.log(r) for r in ratios) / len(ratios)), 3
-    )
+def _label_core_sec(stages: list, prefix: str) -> float:
+    """Run core-seconds of the REST ``stages`` whose name (first line, the
+    job's ``callSite.short``) starts with ``prefix``, e.g. ``barrier:px``
+    or ``sink:h_maxima``."""
+    return sum(
+        s.get("executorRunTime", 0)
+        for s in stages
+        if s["name"].splitlines()[0].startswith(prefix)
+    ) / 1000.0
 
 
 def _merge_profile_sessions(
@@ -1021,10 +695,10 @@ def _merge_profile_sessions(
 LINE_BUDGET = 1600
 
 #: keep-up sub-fields shed (in order) when the line exceeds the budget —
-#: diagnostics first; the headline value/queries/sec_per_image and the h
-#: A/B ratios (h_split_arm above all) are never dropped.
+#: diagnostics first; the headline value/queries/sec_per_image and the
+#: core-second fields are never dropped.
 SHEDDABLE = [
-    "weather_warm", "h_split_arm_batches", "warm_spread_sec",
+    "weather_warm", "warm_spread_sec",
     "warm_batches_sec",
     "core_cpu_sec_per_image", "prep_sec",
     "pilot_sec", "px_build_sec", "cold_batch_sec", "profiles_path",

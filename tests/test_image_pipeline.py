@@ -255,23 +255,42 @@ def test_local_checkpoint_barrier_equivalent_and_released(spark):
     calib.unpersist()
 
 
+def _plan_and_batch(pixels, controls, writes: list) -> tuple:
+    """run_image_plan and the shipped run_batch (csim included, a writer
+    recording each output name) as two callables over the same inputs."""
+    from xrddatapipeline_spark.streaming.pipeline import run_batch
+
+    def batch(**kw):
+        with run_batch(
+            pixels, None, controls, lambda df, name: writes.append(name),
+            lambda: cosine_similarity_series(pixels), **kw,
+        ):
+            pass
+
+    return (lambda **kw: run_image_plan(pixels, None, controls, **kw)), batch
+
+
 @pytest.mark.parametrize("barrier", ["hybrid-nopx", "persist"])
 def test_retired_barrier_rejected_before_any_job(spark, barrier):
     """Only local_checkpoint / hybrid remain: the retired no-dense-cache
-    and lazy persist routes are refused at the top of run_image_plan,
-    before the plan submits a single Spark job (the image-set collect and
-    the eager barriers would otherwise have run first)."""
+    and lazy persist routes are refused at the top of run_image_plan and
+    run_batch, before a single Spark job or write (the image-set collect,
+    the eager barriers and run_batch's csim would otherwise have run
+    first)."""
     sc = spark.sparkContext
     group = f"retired-barrier-probe-{barrier}"
     pixels = images_long_df(
         spark, [("synth", 0, make_image(CONTROLS, seq=0))]
     )
+    writes: list = []
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
-        with pytest.raises(ValueError, match="unknown barrier"):
-            run_image_plan(pixels, None, CONTROLS, barrier=barrier)
+        for build in _plan_and_batch(pixels, CONTROLS, writes):
+            with pytest.raises(ValueError, match="unknown barrier"):
+                build(barrier=barrier)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    assert writes == []
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
@@ -279,8 +298,8 @@ def test_retired_barrier_rejected_before_any_job(spark, barrier):
 def test_oversized_detector_rejected_before_any_job(spark, side):
     """The packed pixel key (img_idx << 26) | y*8192 + x needs both
     detector sides <= 8192: a wider or taller detector is refused at the
-    top of run_image_plan, before the image-set collect or any barrier
-    submits a job."""
+    top of run_image_plan and run_batch, before the image-set collect,
+    any barrier or csim submits a job or a write."""
     import dataclasses
 
     sc = spark.sparkContext
@@ -289,12 +308,15 @@ def test_oversized_detector_rejected_before_any_job(spark, side):
     pixels = images_long_df(
         spark, [("synth", 0, make_image(CONTROLS, seq=0))]
     )
+    writes: list = []
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
-        with pytest.raises(ValueError, match="8192 px per side"):
-            run_image_plan(pixels, None, big, barrier="local_checkpoint")
+        for build in _plan_and_batch(pixels, big, writes):
+            with pytest.raises(ValueError, match="8192 px per side"):
+                build(barrier="local_checkpoint")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    assert writes == []
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
@@ -311,9 +333,7 @@ def test_empty_batch_eager_plan_builds(spark):
         spark, [("synth", 0, make_image(CONTROLS, seq=0))]
     ).where(F.lit(False))
     calib = build_calib_pixels(spark, CONTROLS)
-    res = run_image_plan(
-        empty, calib, CONTROLS, barrier="local_checkpoint", h_maxima=True
-    )
+    res = run_image_plan(empty, calib, CONTROLS, barrier="local_checkpoint")
     assert res.h_maxima.count() == 0
     assert res.integrals.count() == 0
     res.unpersist_all()
@@ -432,8 +452,9 @@ def test_closed_form_calib_matches_calib_table(spark):
 def test_warmup_job_submitted_once_per_session(spark, monkeypatch):
     """VERDICT r8 #7, closed driver-side in round 9: however many batches
     run_image_plan builds in one session, the kernel-warmup JOB is
-    submitted at most once per (session, shape, stage-set) — workers
-    persist across batches, so resubmitting only occupies task slots."""
+    submitted at most once per (session, shape, component) — workers
+    persist across batches, so resubmitting only occupies task slots.
+    The h-maxima component alone trips the gate at >= 4 Mpx."""
     import threading
 
     from xrddatapipeline_spark.plans import image_pipeline as ip
@@ -451,17 +472,13 @@ def test_warmup_job_submitted_once_per_session(spark, monkeypatch):
     ip._WARMUP_SUBMITTED.clear()
 
     # warmup gate needs >= 4 Mpx: a 2048^2 controls clone trips it; the
-    # plan is only BUILT (never materialized), so no heavy work happens —
+    # pixels stay the small fixture image, so each eager plan is cheap —
     # the thread submission happens at plan-build time
     import dataclasses
     big = dataclasses.replace(CONTROLS, size_x=2048, size_y=2048)
     pixels = images_long_df(spark, [("synth", 0, make_image(CONTROLS, seq=0))])
     for _ in range(3):
-        res = run_image_plan(
-            pixels, None, big, gradient_stage=True, barrier="hybrid",
-            h_maxima=True,
-        )
-        res.unpersist_all()
+        run_image_plan(pixels, None, big).unpersist_all()
     assert len(starts) == 1, f"warmup thread started {len(starts)}x"
 
 
@@ -543,23 +560,22 @@ def test_base_mask_honors_immask_and_predef_raster(spark):
 
 
 def test_warmup_missing_component_tracking():
-    """h_maxima=False after an h-on warmup submits NOTHING (round 11):
-    components are tracked per (session, shape), not per flag tuple."""
+    """A gradient-off plan after a gradient-on warmup submits NOTHING:
+    components are tracked per (session, shape), not per stage set."""
     from xrddatapipeline_spark.plans.image_pipeline import _warmup_missing
 
     base = ("app-1", (520, 2880), (2880, 2880))
     submitted: set = set()
-    first = _warmup_missing(base, bands=True, hmax=True, submitted=submitted)
+    first = _warmup_missing(base, bands=True, submitted=submitted)
     assert first == {"bands", "hmax"}
     submitted.update((base, p) for p in first)
-    # the h-off plan's needs are a subset of what's already warm
-    assert _warmup_missing(base, True, False, submitted) == frozenset()
-    # a new session (different base) starts cold again
+    # the gradient-off plan's needs are a subset of what's already warm
+    assert _warmup_missing(base, False, submitted) == frozenset()
+    # a new session (different base) starts cold again, h-maxima always
     base2 = ("app-2", (520, 2880), (2880, 2880))
-    assert _warmup_missing(base2, True, False, submitted) == {"bands"}
-    # hmax-only after bands-only warms just the missing component
-    submitted2 = {(base2, "bands")}
-    assert _warmup_missing(base2, True, True, submitted2) == {"hmax"}
+    assert _warmup_missing(base2, False, submitted) == {"hmax"}
+    # gradient-on after gradient-off warms just the missing component
+    assert _warmup_missing(base2, True, {(base2, "hmax")}) == {"bands"}
 
 
 def _gap_scan_numpy(values, wrap_threshold=359.0, min_gap=10.0):

@@ -361,18 +361,6 @@ def test_chi_xye_roundtrip(spark, tmp_path):
     assert len(xlines) == len(want) + 1
 
 
-def test_write_table_format_gating(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from xrddatapipeline_spark import sinks
-
-    df = spark.range(5).select(F.col("id"), (F.col("id") % 2).alias("p"))
-    fmt = sinks.write_table(df, str(tmp_path / "t"), partition_by=("p",))
-    assert fmt == sinks.table_format()  # delta where available, else parquet
-    back = spark.read.format(fmt).load(str(tmp_path / "t"))
-    assert back.count() == 5 and set(back.columns) == {"id", "p"}
-
-
 def test_export_dataset_chis_bytes_match_single_writer(spark, tmp_path):
     """The distributed bulk exporter (one applyInPandas job) must produce
     byte-identical files to the driver-side per-image writer."""

@@ -33,7 +33,7 @@ from xrddatapipeline_spark.functions.binning import tth_bin_center
 from xrddatapipeline_spark.operators.ring_stats import flag_outliers
 from xrddatapipeline_spark.operators.raster import close_mask_pixels, label_pixels
 
-#: (applicationId, shapes, stage-set) keys whose kernel-scratch warmup job
+#: ((applicationId, shapes), component) pairs whose kernel-scratch warmup
 #: has already been submitted this process — python workers persist across
 #: batches within a session, so one warmup per session covers them all and
 #: repeat submissions only occupy task slots (see run_image_plan).
@@ -47,23 +47,15 @@ import threading as _threading  # noqa: E402
 _WARMUP_LOCK = _threading.Lock()
 
 
-def _warmup_missing(
-    base, bands: bool, hmax: bool, submitted: set
-) -> frozenset:
+def _warmup_missing(base, bands: bool, submitted: set) -> frozenset:
     """Scratch-warmup components still needed for `base` (session, shapes).
 
-    Tracked per COMPONENT so a plan variant that needs a subset of an
-    already-warmed set (e.g. h_maxima=False after an h-on call) submits
-    nothing instead of a redundant bands-only job (round 11 — the no-op
-    job still cost ~96 task slots of worker round-trips per session)."""
-    needed = set()
-    if bands:
-        needed.add("bands")
-    if hmax:
-        needed.add("hmax")
-    return frozenset(
-        p for p in needed if (base, p) not in submitted
-    )
+    The h-maxima set ("hmax") is always needed; the band-gradient set
+    ("bands") only with the gradient stage. Tracked per COMPONENT, so a
+    plan that needs a subset of an already-warmed set (a gradient-off plan
+    after a gradient-on one) submits nothing instead of a redundant job."""
+    needed = {"hmax", "bands"} if bands else {"hmax"}
+    return frozenset(p for p in needed if (base, p) not in submitted)
 
 # classification thresholds — classification.py:849-860 / SURVEY §2.9
 Q_MAX = 0.1
@@ -118,6 +110,19 @@ _SPARSE_BROADCAST_ROWS = 4_000_000
 
 #: detector side limit of the packed pixel key: y * 8192 + x < 2^26
 _PK_MAX_SIDE = 8192
+
+
+def check_plan_args(controls: ImageControls, barrier: str) -> None:
+    """Raise ``ValueError`` for a barrier other than ``local_checkpoint``
+    or ``hybrid``, or a detector side above the packed key's 8192 px.
+    Pure driver-side: callers run it before submitting any job."""
+    if barrier not in ("local_checkpoint", "hybrid"):
+        raise ValueError(f"unknown barrier {barrier!r}")
+    if max(controls.size_y, controls.size_x) > _PK_MAX_SIDE:
+        raise ValueError(
+            f"detector {controls.size_y}x{controls.size_x} exceeds the "
+            f"packed pixel key's {_PK_MAX_SIDE} px per side"
+        )
 
 
 def _image_set(df: DataFrame) -> list:
@@ -1008,10 +1013,9 @@ class ImagePlanResult:
     spot_stats: DataFrame
     spottiness: DataFrame
     # A19/M6 per-Qbin regional h-maxima counts (the reference computes
-    # these inside the spottiness stage, spottiness.py:64-84); None only
-    # with run_image_plan's h_maxima=False. Lazy — not a barrier
-    # frame, so skipping materialization costs nothing.
-    h_maxima: "DataFrame | None" = None
+    # these inside the spottiness stage, spottiness.py:64-84). Lazy — not
+    # a barrier frame.
+    h_maxima: DataFrame
     gradient: "object | None" = None  # GradientStageResult when enabled
     # the fused A1+A15 joint agg frame (barriered; integrals and
     # spottiness are margin re-aggregations of it)
@@ -1041,7 +1045,6 @@ def run_image_plan(
     observe: bool = False,
     barrier: str = "local_checkpoint",
     corrections: dict | None = None,
-    h_maxima: bool = True,
 ) -> ImagePlanResult:
     """Full per-image plan (pipeline.py:78-504 equivalent).
 
@@ -1091,14 +1094,8 @@ def run_image_plan(
     Executor loss under a checkpoint costs the whole image, and that
     lineage bought nothing: foreachBatch retries a failed batch as a
     whole, so lost checkpoint lineage is covered one level up."""
+    check_plan_args(controls, barrier)
     shape = (controls.size_y, controls.size_x)
-    if barrier not in ("local_checkpoint", "hybrid"):
-        raise ValueError(f"unknown barrier {barrier!r}")
-    if max(shape) > _PK_MAX_SIDE:
-        raise ValueError(
-            f"detector {shape[0]}x{shape[1]} exceeds the packed pixel key's "
-            f"{_PK_MAX_SIDE} px per side"
-        )
     if corrections:
         from xrddatapipeline_spark.operators.corrections import (
             apply_correction_images,
@@ -1106,21 +1103,19 @@ def run_image_plan(
 
         pixels = apply_correction_images(pixels, **corrections)
 
-    if (gradient_stage or h_maxima) and (
-        controls.size_y * controls.size_x >= 4_000_000
-    ):
+    if shape[0] * shape[1] >= 4_000_000:
         # pre-fault the kernel scratch sets across the python worker pool
         # CONCURRENTLY with the px cache build (JVM-heavy, pythons idle):
         # first-touch page faults were the cold-call cost of the kernel
         # stages (10-20x the numpy time under full concurrency) — the
-        # band-gradient set (~120 MB at band height) and, when A19 is on,
-        # the h-maxima set (~105 MB float32 at full image height;
+        # h-maxima set (~105 MB float32 at full image height;
         # steady-state footprint unchanged — see warmup_hmax_scratch,
         # which warms the float32 planes the integer-intensity exactness
-        # gate always selects on detector data). Fire-and-forget
-        # — a failed warmup only loses the overlap.
+        # gate always selects on detector data) and, with the gradient
+        # stage, the band-gradient set (~120 MB at band height).
+        # Fire-and-forget — a failed warmup only loses the overlap.
         #
-        # ONE warmup job per (session, shape, stage-set) — python workers
+        # ONE warmup job per (session, shape, component) — python workers
         # persist across batches within a session, so the kernel-side
         # memsets are idempotent no-ops from batch 2 on (WARMUP_MEMSET_
         # EVENTS pins that), yet the JOB still occupied 96 task slots per
@@ -1137,22 +1132,17 @@ def run_image_plan(
         _wshape = (
             min(controls.size_y, 512 + 2 * _GRAD_HALO), controls.size_x
         )
-        _full_shape = (controls.size_y, controls.size_x)
-        # warmed COMPONENTS are tracked per (session, shape), not per
-        # (bands, hmax) flag tuple (round 11): an h_maxima=False call
-        # after an h-on one used to resubmit a bands-only warmup job —
-        # a kernel-side no-op (memsets are idempotent) that still
-        # occupied ~96 task slots of worker round-trips in the first
-        # h-off batch. Now only the MISSING components get a job.
+        # warmed COMPONENTS are tracked per (session, shape): only the
+        # MISSING ones get a job (see _warmup_missing)
         _warm_base = (
-            _spark.sparkContext.applicationId, _wshape, _full_shape,
+            _spark.sparkContext.applicationId, _wshape, shape,
         )
         # check+claim under the lock (see _WARMUP_LOCK doc): the claim
         # happens here, not at thread start, so a concurrent plan call
         # sees the components as already submitted
         with _WARMUP_LOCK:
             _missing = _warmup_missing(
-                _warm_base, gradient_stage, h_maxima, _WARMUP_SUBMITTED
+                _warm_base, gradient_stage, _WARMUP_SUBMITTED
             )
             _WARMUP_SUBMITTED.update((_warm_base, p) for p in _missing)
 
@@ -1176,7 +1166,7 @@ def run_image_plan(
                     if "bands" in _missing:
                         touched += _K.warmup_band_scratch(_wshape)
                     if "hmax" in _missing:
-                        touched += _K.warmup_hmax_scratch(_full_shape)
+                        touched += _K.warmup_hmax_scratch(shape)
                     for _ in it:
                         pass
                     yield _pd.DataFrame({"n": [touched]})
@@ -1402,26 +1392,22 @@ def run_image_plan(
     )
     stats = spot_stats(lpx, label_table, px, sparse_hint=sb)
     spotty = split_spottiness(fused_bins)
-    hm = None
-    if h_maxima:
-        # A19/M6 runs inside the spottiness stage in the reference
-        # (spottiness.py:64-84); spot membership comes from the same flag
-        # table the integrals consume (gradient-refined when enabled).
-        hm = _obs(
-            h_maxima_per_qbin(
-                px,
-                mask_flags.where(F.col("is_spot_px")).select(
-                    "image_id", "y", "x"
-                ),
-                controls,
-                n_images=len(ids),
-                # closed-form calibration => qbin re-attaches bit-identically
-                # to the sparse maxima; a calib TABLE keeps it in the feed
-                recompute_qbin=calib is None,
-            ),
-            "h_maxima",
-            F.count(F.lit(1)).alias("n_hmax_rows"),
-        )
+    # A19/M6 runs inside the spottiness stage in the reference
+    # (spottiness.py:64-84); spot membership comes from the same flag
+    # table the integrals consume (gradient-refined when enabled).
+    hm = _obs(
+        h_maxima_per_qbin(
+            px,
+            mask_flags.where(F.col("is_spot_px")).select("image_id", "y", "x"),
+            controls,
+            n_images=len(ids),
+            # closed-form calibration => qbin re-attaches bit-identically
+            # to the sparse maxima; a calib TABLE keeps it in the feed
+            recompute_qbin=calib is None,
+        ),
+        "h_maxima",
+        F.count(F.lit(1)).alias("n_hmax_rows"),
+    )
     return ImagePlanResult(
         pixels=px,
         outliers=outliers.drop("img_idx"),

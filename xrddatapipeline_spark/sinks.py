@@ -270,33 +270,3 @@ def render_map_tiffs(
         paths.append(path)
     return paths
 
-
-def table_format() -> str:
-    """Preferred table format: 'delta' when delta-spark is importable (the
-    production target — ACID append, MERGE upserts for the streaming sinks'
-    exactly-once story), else 'parquet' (this container). Gated by
-    import-try so the same code runs in both environments."""
-    try:  # pragma: no cover - environment-dependent branch
-        import delta  # noqa: F401
-
-        return "delta"
-    except ImportError:
-        return "parquet"
-
-
-def write_table(
-    df: DataFrame,
-    path: str,
-    mode: str = "append",
-    partition_by: tuple[str, ...] = (),
-    fmt: str | None = None,
-) -> str:
-    """Write a result table in the preferred format; returns the format
-    used. All batch/streaming sinks route through here so a Delta-enabled
-    cluster upgrades every output table at once."""
-    fmt = fmt or table_format()
-    writer = df.write.format(fmt).mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(path)
-    return fmt

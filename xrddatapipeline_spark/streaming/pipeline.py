@@ -65,6 +65,7 @@ from xrddatapipeline_spark.barrier import release
 from xrddatapipeline_spark.calib.geometry import ImageControls
 from xrddatapipeline_spark.plans.image_pipeline import (
     ImagePlanResult,
+    check_plan_args,
     cosine_similarity_series,
     run_image_plan,
 )
@@ -144,7 +145,6 @@ def run_batch(
     gradient_stage: bool = False,
     observe: bool = False,
     barrier: str = "local_checkpoint",
-    h_maxima: bool = True,
 ) -> Iterator[ImagePlanResult]:
     """One micro-batch as shipped: ``with run_batch(...) as res:``
 
@@ -155,17 +155,21 @@ def run_batch(
        barriers materialize the plan's intermediates (``barrier`` is
        ``"local_checkpoint"``, the default and the stream's, or
        ``"hybrid"``, the keep-up bench's; see ``run_image_plan``);
-    3. writes integrals, spot_stats, spottiness, outliers, h_maxima (if
-       on) and gradient_arcs (if on) concurrently, so one job's stage
-       tail overlaps the next one's ramp-up, each under
+    3. writes integrals, spot_stats, spottiness, outliers, h_maxima and
+       gradient_arcs (if on) concurrently, so one job's stage tail
+       overlaps the next one's ramp-up, each under
        ``callSite.short = "sink:<name>"``. csim's write runs under
        ``"csim"``: the repo benchmark's ``--trace 1`` run rejects the
        per-layer metric a ``sink:csim`` label would add.
 
-    The with-body runs while the plan's barriers are still held. On
-    every exit path csim settles before ``unpersist_all``, so a failed
-    batch never leaves an append in flight when foreachBatch retries it.
+    ``barrier`` and the detector size are checked first
+    (``check_plan_args``), so a rejected batch raises before any job or
+    write, csim's included. The with-body runs while the plan's barriers
+    are still held. On every exit path csim settles before
+    ``unpersist_all``, so a failed batch never leaves an append in flight
+    when foreachBatch retries it.
     """
+    check_plan_args(controls, barrier)
     sc = pixels.sparkSession.sparkContext
 
     def _sink(df: DataFrame, name: str, label: str) -> None:
@@ -185,17 +189,15 @@ def run_batch(
             gradient_stage=gradient_stage,
             observe=observe,
             barrier=barrier,
-            h_maxima=h_maxima,
         )
         sinks = [
             (res.integrals, "integrals"),
             (res.spot_stats, "spot_stats"),
             (res.spottiness, "spottiness"),
             (res.outliers, "outliers"),
-        ]
-        if res.h_maxima is not None:
             # A19: part of the reference's spottiness stage output
-            sinks.append((res.h_maxima, "h_maxima"))
+            (res.h_maxima, "h_maxima"),
+        ]
         if res.gradient is not None:
             sinks.append((res.gradient.on_arc_labels, "gradient_arcs"))
         with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
