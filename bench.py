@@ -100,6 +100,13 @@ def _synthetic_pixels(spark, c, n_images: int = 1):
     )
 
 
+def _image_ids(c, n_images: int = 1) -> list[str]:
+    """The sorted image ids ``_synthetic_pixels(spark, c, n_images)``
+    generates: ``run_batch`` takes them instead of collecting its image
+    set, as the stream does."""
+    return [f"{c.dataset}-{seq:05d}" for seq in range(n_images)]
+
+
 def _noop_writer(group: str | None = None):
     """A ``run_batch`` write that materializes each output into the noop
     sink (no driver-side collect; executors do all the work). ``group``
@@ -163,6 +170,7 @@ def _image_plan_seconds(spark) -> float:
     with run_batch(
         pixels, calib, c, _noop_writer(),
         lambda: cosine_similarity_series(pixels),
+        image_ids=_image_ids(c),
     ):
         pass
     elapsed = time.perf_counter() - t0
@@ -424,6 +432,7 @@ def _keepup_2880(batch: int = 8) -> dict:
             pixels, None, c, _noop_writer(),
             lambda: cosine_similarity_series(pixels),
             gradient_stage=True, barrier=barrier,
+            image_ids=_image_ids(c, batch),
         ):
             pass
         elapsed = time.perf_counter() - t0
@@ -507,6 +516,7 @@ def _keepup_2880(batch: int = 8) -> dict:
             ppx, None, pc, _noop_writer("pilot"),
             lambda: cosine_similarity_series(ppx),
             gradient_stage=True, barrier=barrier,
+            image_ids=_image_ids(pc),
         ):
             pass
         ppx.unpersist()

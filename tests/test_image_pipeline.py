@@ -255,6 +255,50 @@ def test_local_checkpoint_barrier_equivalent_and_released(spark):
     calib.unpersist()
 
 
+def test_given_image_ids_build_the_collected_plan_without_collect_or_count(
+    spark, monkeypatch
+):
+    """run_image_plan(image_ids=...) builds exactly the frames of the
+    collecting path on a two-image batch, and with the default barrier it
+    runs neither the image-set collect nor a count job: the broadcast gate
+    reads the outlier barrier's observed row count."""
+    import pandas as pd
+
+    from xrddatapipeline_spark.plans import image_pipeline as ip
+
+    pixels = images_long_df(spark, [
+        ("synth", 0, make_image(CONTROLS, seq=0)),
+        ("synth", 1, make_image(CONTROLS, seq=1)),
+    ])
+    calib = build_calib_pixels(spark, CONTROLS).cache()
+    names = ("outliers", "om_pixels", "label_table", "integrals",
+             "spot_stats", "spottiness", "h_maxima")
+
+    def frames(res) -> dict:
+        out = {}
+        for n in names:
+            pdf = getattr(res, n).toPandas()
+            out[n] = pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+        res.unpersist_all()
+        return out
+
+    want = frames(run_image_plan(pixels, calib, CONTROLS))
+
+    def refuse(*a, **k):
+        raise AssertionError("collect or count job inside the plan")
+
+    with monkeypatch.context() as m:
+        m.setattr(ip, "_image_set", refuse)
+        m.setattr(type(pixels), "count", refuse)
+        res = run_image_plan(
+            pixels, calib, CONTROLS, image_ids=["synth-00001", "synth-00000"]
+        )
+    got = frames(res)
+    calib.unpersist()
+    for n in names:
+        pd.testing.assert_frame_equal(got[n], want[n], check_exact=True)
+
+
 def _plan_and_batch(pixels, controls, writes: list) -> tuple:
     """run_image_plan and the shipped run_batch (csim included, a writer
     recording each output name) as two callables over the same inputs."""

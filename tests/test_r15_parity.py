@@ -192,3 +192,59 @@ def test_lsh_topk_matches_expression_form(edge_vectors):
         .select("query_id", "rank", "neighbor_id", "cos")
     )
     assert sorted(old.collect()) == sorted(new.collect())
+
+
+@pytest.fixture(scope="module")
+def bad_vectors(spark):
+    """Valid rows mixed with every vector the UDFs once crashed on: a
+    NULL vector, a NULL element, one shorter and one longer than DIM,
+    and an empty one."""
+    rng = np.random.default_rng(1511)
+    good = [[float(x) for x in rng.standard_normal(DIM) * 2] for _ in range(6)]
+    rows = [(i, v) for i, v in enumerate(good)]
+    rows += [
+        (10, None),
+        (11, [1.0, None] + [0.5] * (DIM - 2)),
+        (12, [1.0] * (DIM - 3)),
+        (13, [-0.5] * (DIM + 2)),
+        (14, []),
+    ]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def test_vectorized_udfs_match_folds_on_null_and_ragged_vectors(bad_vectors):
+    """Each Arrow UDF gives the expression fold's value on NULL, ragged
+    and NULL-element vectors (NULL dots, a NULL ivf distance, the fold's
+    all-'0' LSH bucket) instead of crashing its Python worker, and the
+    valid rows in the same batch keep their exact values."""
+    one = bad_vectors.coalesce(1)  # every row in one Arrow batch
+    cents = [(0, [1.0] * DIM), (3, [-1.0] + [0.0] * (DIM - 1))]
+    pairs = one.alias("l").crossJoin(one.alias("r")).select(
+        F.col("l.vec_id").alias("a"), F.col("r.vec_id").alias("b"),
+        F.col("l.embedding").alias("va"), F.col("r.embedding").alias("vb"),
+    ).coalesce(1)
+    cases = [
+        (pairs, ["a", "b"],
+         sim.quantized_dot(F.col("va"), F.col("vb")),
+         sim.quantized_dot_vectorized(F.col("va"), F.col("vb"))),
+        (one, ["vec_id"],
+         sim.quantized_dot(F.col("embedding"), F.col("embedding")),
+         sim.quantized_self_dot_vectorized(F.col("embedding"))),
+        (one, ["vec_id"],
+         sim.lsh_bucket_expr(F.col("embedding"), 6, DIM),
+         sim.lsh_bucket_vectorized(6, DIM)(F.col("embedding"))),
+        (one, ["vec_id"],
+         sim.ivf_assign_expr(F.col("embedding"), cents),
+         sim.ivf_assign_vectorized(cents)(F.col("embedding"))),
+    ]
+    for df, keys, fold, udf in cases:
+        old = sorted(df.select(*keys, fold.alias("v")).collect())
+        new = sorted(df.select(*keys, udf.alias("v")).collect())
+        assert old == new
+    nulls = {
+        r.vec_id for r in one.select(
+            "vec_id",
+            sim.quantized_self_dot_vectorized(F.col("embedding")).alias("q"),
+        ).collect() if r.q is None
+    }
+    assert nulls == {10, 11}

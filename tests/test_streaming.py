@@ -747,6 +747,116 @@ def test_sink_failure_settles_csim_and_releases_plan(spark):
     assert not (_persistent_rdd_ids(spark) - before)
 
 
+def test_plan_failure_settles_early_sinks_and_releases_barriers(
+    spark, monkeypatch
+):
+    """A barrier job that raises inside run_image_plan leaves no persisted
+    RDD behind: the sink already started (outliers) settles first, then
+    the barriers built so far and the failed barrier's own checkpoint are
+    released, and the error reaches the caller."""
+    from tests.test_barrier import _persistent_rdd_ids
+    from xrddatapipeline_spark.plans import image_pipeline as ip
+
+    calib = build_calib_pixels(spark, CONTROLS)
+    px = images_long_df(spark, [("synth", 0, make_image(CONTROLS, seq=0))])
+    orig = ip.label_table_from
+    monkeypatch.setattr(
+        ip, "label_table_from",
+        lambda lpx, **kw: orig(lpx, **kw).withColumn(
+            "boom", F.raise_error(F.lit("label_table down"))
+        ),
+    )
+    before = _persistent_rdd_ids(spark)
+    written: list[str] = []
+
+    def write(df, name):
+        df.write.format("noop").mode("overwrite").save()
+        written.append(name)
+
+    with pytest.raises(Exception, match="label_table down"):
+        with run_batch(px, calib, CONTROLS, write,
+                       lambda: cosine_similarity_series(px)):
+            pytest.fail("the with-body must not run after the plan failed")
+    assert sorted(written) == ["csim", "outliers"]
+    assert not (_persistent_rdd_ids(spark) - before)
+
+
+def test_pixel_store_failure_raises_after_the_batch_settles(
+    spark, tmp_path, monkeypatch
+):
+    """The pixel store is written on csim's side thread beside the plan.
+    When that write fails, process_batch raises its error only after csim
+    (never built, its store is missing), every sink and the plan have
+    settled, and the plan's frames and the decode checkpoint are
+    released."""
+    import os
+
+    from tests.test_barrier import _persistent_rdd_ids
+    from xrddatapipeline_spark import tables
+
+    calib = build_calib_pixels(spark, CONTROLS)
+    pipe = StreamingImagePipeline(spark, calib, CONTROLS, str(tmp_path / "o"))
+    orig = tables.write_table
+    started: list[str] = []
+    finished: list[str] = []
+
+    def write_table(df, path, *a, **k):
+        name = os.path.basename(path)
+        started.append(name)
+        if name == "pixels":
+            raise RuntimeError("pixel store down")
+        orig(df, path, *a, **k)
+        finished.append(name)
+
+    monkeypatch.setattr(tables, "write_table", write_table)
+    batch = images_long_df(spark, [("synth", 0, make_image(CONTROLS, seq=0))])
+    before = _persistent_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="pixel store down"):
+        pipe.process_batch(batch, batch_id=0)
+    assert "csim" not in started
+    assert sorted(finished) == sorted(
+        ["integrals", "spot_stats", "spottiness", "outliers", "h_maxima"]
+    )
+    assert not (_persistent_rdd_ids(spark) - before)
+
+
+def test_run_batch_starts_early_sinks_before_the_intspot_barrier(
+    spark, monkeypatch
+):
+    """outliers, spot_stats and h_maxima read no barrier after
+    label_table, so their writes start while the plan still builds its
+    intspot barrier: the fused-bins stage here waits (at most 60 s) for
+    all three writes to begin."""
+    import threading
+
+    from xrddatapipeline_spark.plans import image_pipeline as ip
+
+    calib = build_calib_pixels(spark, CONTROLS)
+    px = images_long_df(spark, [("synth", 0, make_image(CONTROLS, seq=0))])
+    early = {"outliers", "spot_stats", "h_maxima"}
+    seen: set[str] = set()
+    lock, ready = threading.Lock(), threading.Event()
+    waited: list[bool] = []
+    orig = ip.integrate_and_spottiness
+
+    def gated(*a, **k):
+        waited.append(ready.wait(timeout=60))
+        return orig(*a, **k)
+
+    def write(df, name):
+        with lock:
+            seen.add(name)
+            if early <= seen:
+                ready.set()
+        df.write.format("noop").mode("overwrite").save()
+
+    monkeypatch.setattr(ip, "integrate_and_spottiness", gated)
+    with run_batch(px, calib, CONTROLS, write,
+                   lambda: cosine_similarity_series(px)):
+        pass
+    assert waited == [True], "early sinks did not start before intspot"
+
+
 @pytest.mark.parametrize("gradient", [False, True])
 def test_run_batch_writes_the_shipped_output_set(spark, gradient):
     """run_batch hands write() exactly the shipped outputs, each plan
@@ -768,14 +878,22 @@ def test_run_batch_writes_the_shipped_output_set(spark, gradient):
     assert labels == {**{n: f"sink:{n}" for n in want}, "csim": "csim"}
 
 
-def test_tiff_stream_decodes_each_frame_once(spark, tmp_path):
+def test_tiff_stream_decodes_each_frame_once(spark, tmp_path, monkeypatch):
     """process_batch checkpoints the decoded batch once, and the emptiness
     check, the pixel store, csim's key collect and the plan all scan that
     checkpoint: the TIFF source reports one input row (its one file) per
-    trigger, not one per action. The checkpoint is released when the
-    batch ends, and csim still matches numpy on the decoded frames."""
+    trigger, not one per action. The plan's image set comes from the
+    checkpoint's observed keys, never its own collect. The checkpoint is
+    released when the batch ends, and csim still matches numpy on the
+    decoded frames."""
     from tests.test_barrier import _persistent_rdd_ids
+    from xrddatapipeline_spark.plans import image_pipeline as ip
     from xrddatapipeline_spark.sources.tiff import decode_image, write_tiff_gray
+
+    def no_collect(df):
+        raise AssertionError("the stream collected its image set")
+
+    monkeypatch.setattr(ip, "_image_set", no_collect)
 
     landing = tmp_path / "landing"
     landing.mkdir()

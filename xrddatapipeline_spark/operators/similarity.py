@@ -34,6 +34,46 @@ from pyspark.sql.types import LongType
 QSCALE = float(2 ** 40)  # quantization scale for order-independent dot sums
 
 
+def _length_groups(*cols: pd.Series, dim: int | None = None):
+    """The rows the expression folds give a value, by vector length.
+
+    Yields ``(rows, mats)`` per length L: ``rows`` indexes the rows where
+    every argument is a non-NULL length-L vector with no NULL element
+    (L = ``dim`` when given), and ``mats`` holds each argument's float64
+    ``(len(rows), L)`` matrix. The folds give NULL on every other row:
+    ``zip_with`` pads a shorter vector with NULL, and one NULL term nulls
+    the whole ``aggregate``. A NULL float element reaches pandas as NaN,
+    so a row with a NaN element is left out as well. Only these rows are
+    stacked, so a NULL or ragged vector never reaches ``np.stack``."""
+    arrs = [c.to_numpy() for c in cols]
+    lens = [
+        np.fromiter((-1 if v is None else len(v) for v in a), np.int64, len(a))
+        for a in arrs
+    ]
+    n = lens[0].copy()
+    for other in lens[1:]:
+        n[other != n] = -1
+    if dim is not None:
+        n[n != dim] = -1
+    for width in np.unique(n[n >= 0]):
+        rows = np.flatnonzero(n == width)
+        mats = [np.stack(a[rows]).astype(np.float64) for a in arrs]
+        ok = ~np.logical_or.reduce([np.isnan(m).any(axis=1) for m in mats])
+        yield rows[ok], [m[ok] for m in mats]
+
+
+def _quantized_dots(*cols: pd.Series) -> pd.Series:
+    """sum_d floor(a_d * b_d * 2^40) per row over the vector columns
+    ``(a, b)``, or ``(a,)`` for the self-dot; NULL where the expression
+    fold is NULL (see ``_length_groups``)."""
+    out = np.zeros(len(cols[0]), dtype=np.int64)
+    valid = np.zeros(len(cols[0]), dtype=bool)
+    for rows, mats in _length_groups(*cols):
+        out[rows] = np.floor(mats[0] * mats[-1] * QSCALE).sum(axis=1)
+        valid[rows] = True
+    return pd.Series(pd.arrays.IntegerArray(out, ~valid))
+
+
 # DataType instance (not a DDL string): the UDF is defined at import time,
 # before any SparkSession exists to parse DDL
 @pandas_udf(LongType())
@@ -41,11 +81,10 @@ def quantized_dot_vectorized(a: pd.Series, b: pd.Series) -> pd.Series:
     """Arrow-vectorized quantized dot: numpy computes the SAME integers as
     `quantized_dot` (float64 products of float32 pairs are exact; floor of
     values < 2^53 is exact; the integer-valued float64 sum stays < 2^53),
-    ~100x faster than the interpreted fold on all-pairs workloads."""
-    va = np.stack(a.to_numpy()).astype(np.float64)
-    vb = np.stack(b.to_numpy()).astype(np.float64)
-    q = np.floor(va * vb * QSCALE).sum(axis=1)
-    return pd.Series(q.astype(np.int64))
+    ~100x faster than the interpreted fold on all-pairs workloads. NULL
+    where the fold is NULL: a NULL vector or element, or a and b of
+    different lengths."""
+    return _quantized_dots(a, b)
 
 
 @pandas_udf(LongType())
@@ -53,12 +92,10 @@ def quantized_self_dot_vectorized(a: pd.Series) -> pd.Series:
     """`quantized_dot_vectorized(v, v)` with the vector crossing the Arrow
     boundary ONCE (a two-arg call ships both argument columns, so the
     self-dot would ship the embedding twice). Same integers as
-    `quantized_dot(v, v)` by the argument above."""
-    if not len(a):
-        return pd.Series([], dtype=np.int64)
-    va = np.stack(a.to_numpy()).astype(np.float64)
-    q = np.floor(va * va * QSCALE).sum(axis=1)
-    return pd.Series(q.astype(np.int64))
+    `quantized_dot(v, v)` by the argument above, and NULL for a NULL
+    vector or element; vectors of different lengths in one batch each
+    get their own self-dot, as in the fold."""
+    return _quantized_dots(a)
 
 
 def lsh_bucket_vectorized(num_planes: int, dim: int):
@@ -80,11 +117,14 @@ def lsh_bucket_vectorized(num_planes: int, dim: int):
     def _bucket(v: pd.Series) -> pd.Series:
         if not len(v):
             return pd.Series([], dtype=object)
-        mat = np.stack(v.to_numpy()).astype(np.float64)
-        bits = np.empty((len(mat), num_planes), dtype=np.uint8)
-        for p in range(num_planes):
-            q = np.floor(mat * wmat[p][None, :] * QSCALE).sum(axis=1)
-            bits[:, p] = np.where(q >= 0, ord("1"), ord("0"))
+        # a row the fold sums to NULL (NULL or ragged vector, NULL
+        # element) reads '0' on every plane there: when(NULL >= 0) falls
+        # through to otherwise('0')
+        bits = np.full((len(v), num_planes), ord("0"), dtype=np.uint8)
+        for rows, (mat,) in _length_groups(v, dim=dim):
+            for p in range(num_planes):
+                q = np.floor(mat * wmat[p][None, :] * QSCALE).sum(axis=1)
+                bits[rows, p] = np.where(q >= 0, ord("1"), ord("0"))
         # one fixed-width bytes value per row, decoded without a Python
         # loop: an (n, planes) uint8 C-array viewed as S<planes>
         s = np.ascontiguousarray(bits).view(f"S{num_planes}").ravel()
@@ -124,22 +164,28 @@ def ivf_assign_vectorized(centroids: "list[tuple[int, list[float]]]"):
         if not len(v):
             return pd.DataFrame({"dist": pd.Series([], dtype=np.int64),
                                  "cell": pd.Series([], dtype=np.int32)})
-        mat = np.stack(v.to_numpy()).astype(np.float64)
-        qx = np.floor(mat * mat * QSCALE).sum(axis=1).astype(np.int64)
-        d = np.empty((len(mat), len(cells)), dtype=np.int64)
-        for j in range(len(cells)):
-            qd = (
-                np.floor(mat * cmat[j][None, :] * QSCALE)
-                .sum(axis=1)
-                .astype(np.int64)
-            )
-            d[:, j] = qx - 2 * qd + cnorm[j]
-        best = np.argmin(d, axis=1)
+        # a row whose distances the fold nulls (NULL or ragged vector,
+        # NULL element) gets dist NULL and the lowest cell there:
+        # array_min orders the (NULL, cell) structs NULL first, then by cell
+        dist = np.zeros(len(v), dtype=np.int64)
+        valid = np.zeros(len(v), dtype=bool)
+        cell = np.full(len(v), cells[0], dtype=np.int32)
+        for rows, (mat,) in _length_groups(v, dim=cmat.shape[1]):
+            qx = np.floor(mat * mat * QSCALE).sum(axis=1).astype(np.int64)
+            d = np.empty((len(mat), len(cells)), dtype=np.int64)
+            for j in range(len(cells)):
+                qd = (
+                    np.floor(mat * cmat[j][None, :] * QSCALE)
+                    .sum(axis=1)
+                    .astype(np.int64)
+                )
+                d[:, j] = qx - 2 * qd + cnorm[j]
+            best = np.argmin(d, axis=1)
+            dist[rows] = d[np.arange(len(mat)), best]
+            cell[rows] = cells[best]
+            valid[rows] = True
         return pd.DataFrame(
-            {
-                "dist": d[np.arange(len(mat)), best],
-                "cell": cells[best].astype(np.int32),
-            }
+            {"dist": pd.arrays.IntegerArray(dist, ~valid), "cell": cell}
         )
 
     # same §4.4 duplication guard as lsh_bucket_vectorized: the extracted

@@ -22,6 +22,8 @@ aggregation keys; a calib table is always broadcast, and detectors at the
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import Future, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, Window
@@ -123,6 +125,22 @@ def check_plan_args(controls: ImageControls, barrier: str) -> None:
             f"detector {controls.size_y}x{controls.size_x} exceeds the "
             f"packed pixel key's {_PK_MAX_SIDE} px per side"
         )
+
+
+def _persistent_rdd_ids(sc) -> set[int]:
+    """Ids of the RDDs the context holds persisted (one py4j call)."""
+    return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def _release_new_rdds(sc, known: set[int], site: str) -> None:
+    """Unpersist each persisted RDD outside ``known`` created under the
+    call-site label ``site``: what an eager barrier job that raised left
+    registered. The label keeps a concurrent plan's storage out of it."""
+    rdds = sc._jsc.getPersistentRDDs()
+    for k in rdds.keySet().toArray():
+        rdd = rdds.get(k).rdd()
+        if int(k) not in known and rdd.getCreationSite() == site:
+            rdd.unpersist(False)
 
 
 def _image_set(df: DataFrame) -> list:
@@ -1045,17 +1063,31 @@ def run_image_plan(
     observe: bool = False,
     barrier: str = "local_checkpoint",
     corrections: dict | None = None,
+    image_ids: list | None = None,
+    on_output: Callable[[str, DataFrame], Future | None] | None = None,
 ) -> ImagePlanResult:
     """Full per-image plan (pipeline.py:78-504 equivalent).
 
-    Plan construction is EAGER: the batch's sorted image set and five
-    intermediates materialize as Spark jobs before this function returns.
+    Plan construction is EAGER: five intermediates materialize as Spark
+    jobs before this function returns.
 
-    That image set keys the plan: the px barrier carries each row's
-    ``img_idx`` (its position in the set), and the dense joins and
-    groupings build packed longs from it (see ``_pk_expr``). The pack
-    needs both detector sides <= 8192; a larger detector raises
-    ``ValueError`` before any job.
+    The batch's sorted image set keys the plan: the px barrier carries
+    each row's ``img_idx`` (its position in the set), and the dense joins
+    and groupings build packed longs from it (see ``_pk_expr``).
+    ``image_ids`` passes that set when the caller already has it (the
+    stream reads it off its decode checkpoint's observed metric); ``None``
+    collects it from ``pixels`` in one job. The pack needs both detector
+    sides <= 8192; a larger detector raises ``ValueError`` before any job.
+
+    ``on_output(name, frame)`` is called for each shipped output as soon
+    as the barriers it reads exist, so a caller's writes overlap the rest
+    of the plan: ``outliers`` after the outlier barrier, ``spot_stats``
+    after ``label_table``, ``h_maxima`` after ``label_table`` (after the
+    gradient stage when that runs), then ``integrals``, ``spottiness`` and
+    ``gradient_arcs`` (with the gradient stage) at the end. The frames are
+    the ones the result carries. If a barrier job raises, the plan waits
+    for every ``Future`` that ``on_output`` returned, then releases the
+    barriers it built, then re-raises.
 
     ``corrections`` (optional) is a kwargs dict for
     ``operators.corrections.apply_correction_images`` (dark / background /
@@ -1182,7 +1214,48 @@ def run_image_plan(
                 target=_warm, daemon=True, name="kernel-warmup"
             ).start()
 
+    # the batch's sorted image set: img_idx rides on the px barrier, so the
+    # three dense stages build their packed keys arithmetically (see
+    # _pk_expr) and the kernel feeds know the image count
+    ids = _image_set(pixels) if image_ids is None else sorted(image_ids)
     barriers: list[DataFrame] = []
+    started: list = []
+
+    def emit(name: str, df: DataFrame) -> None:
+        if on_output is not None:
+            started.append(on_output(name, df))
+
+    try:
+        return _plan(
+            pixels, calib, controls, ids, emit, barriers,
+            gradient_stage=gradient_stage, observe=observe, barrier=barrier,
+        )
+    except BaseException:
+        # a barrier job raised part-way: the outputs already handed out
+        # read the barriers built so far, so settle them before releasing
+        wait([f for f in started if f is not None])
+        for df in barriers:
+            _release(df)
+        raise
+
+
+def _plan(
+    pixels: DataFrame,
+    calib: DataFrame | None,
+    controls: ImageControls,
+    ids: list,
+    emit: Callable[[str, DataFrame], None],
+    barriers: list,
+    *,
+    gradient_stage: bool,
+    observe: bool,
+    barrier: str,
+) -> ImagePlanResult:
+    """``run_image_plan``'s stages over the sorted image set ``ids``: each
+    materialized frame is appended to ``barriers`` as it is built, and
+    each shipped output goes to ``emit(name, frame)`` once its inputs are
+    barriered."""
+    shape = (controls.size_y, controls.size_x)
 
     def _bar(df: DataFrame, dense: bool = False, label: str = "") -> DataFrame:
         # name the barrier's stages in the Spark UI / REST profile: the
@@ -1193,8 +1266,14 @@ def run_image_plan(
         sc = df.sparkSession.sparkContext
         if label:
             sc.setLocalProperty("callSite.short", f"barrier:{label}")
+        known = _persistent_rdd_ids(sc)
         try:
             df = _bar_inner(df, dense)
+        except BaseException:
+            # a barrier job that raised returns no frame to release, yet
+            # its checkpoint storage is already registered
+            _release_new_rdds(sc, known, f"barrier:{label}")
+            raise
         finally:
             if label:
                 sc.setLocalProperty("callSite.short", None)
@@ -1216,7 +1295,11 @@ def run_image_plan(
             # calib projections), so skipping the checkpoint costs little
             # driver re-analysis.
             df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            df.count()
+            try:
+                df.count()
+            except BaseException:
+                df.unpersist()
+                raise
             return df
         # SPARSE frames: serialized-row checkpoint — truncates the deep
         # lineage tail (ring stats, raster kernels) out of every
@@ -1259,11 +1342,6 @@ def run_image_plan(
     drop_cols = ["tth", "azim_band", "azim_mask", "dataset", "seq"]
     if calib is None:
         drop_cols += ["q", "azim"]
-    # the batch's sorted image set, collected once: img_idx rides on the
-    # px barrier, so the three dense stages build their packed keys
-    # arithmetically (see _pk_expr) and the kernel feeds know the image
-    # count
-    ids = _image_set(pixels)
     masked = with_base_mask(
         join_calib(pixels, calib, controls=controls),
         controls=controls,
@@ -1305,22 +1383,35 @@ def run_image_plan(
     # feed several downstream outputs; barrier them so the expensive
     # upstream (ring stats + raster kernels) runs once, not once per output.
     # They are ~1e4-1e5 rows per image — cheap to cache at any scale.
-    outliers = _bar(_obs(
-        outlier_pixels(px, esd_mul=controls.esd_mul),
-        "outlier_mask",
-        F.count(F.lit(1)).alias("n_outlier_px"),
-    ), label="outliers")
+    # the outlier row count is observed on the barrier's own job whether
+    # or not observe is on: the broadcast gate below reads it, and with
+    # observe=True it is also the outlier_mask stage counter
+    n_outliers = Observation("outlier_mask")
+    outliers = _bar(
+        outlier_pixels(px, esd_mul=controls.esd_mul).observe(
+            n_outliers, F.count(F.lit(1)).alias("n_outlier_px")
+        ),
+        label="outliers",
+    )
+    if observe:
+        obs["outlier_mask"] = n_outliers
+    outlier_rows = outliers.drop("img_idx")
+    emit("outliers", outlier_rows)
     # Join-strategy hint for the sparse⋈dense joins downstream (mask sets
     # against the pixel raster). Under the checkpoint barrier the sparse
     # frames are LogicalRDDs with UNKNOWN stats, so AQE falls back to a
     # sort-merge join that shuffles the DENSE pixel side (measured 1.2-2 GB
     # shuffle writes per join at 8 x 2880^2); an explicit broadcast hint on
     # the sparse side removes every one of those exchanges. Gated on the
-    # materialized OUTLIER row count (a cheap cached scan — the barrier
-    # already ran it eagerly; the 3x3 closing only grows the set by gap
-    # fill, far inside the threshold's safety margin) so a pathologically
-    # dense mask falls back to SMJ instead of a driver-sized broadcast.
-    sb = F.broadcast if outliers.count() <= _SPARSE_BROADCAST_ROWS else None
+    # OUTLIER row count the barrier job observed (no job of its own; the
+    # 3x3 closing only grows the set by gap fill, far inside the
+    # threshold's safety margin) so a pathologically dense mask falls back
+    # to SMJ instead of broadcasting an oversized set.
+    sb = (
+        F.broadcast
+        if n_outliers.get["n_outlier_px"] <= _SPARSE_BROADCAST_ROWS
+        else None
+    )
     # split construction (round 8): materialize the lpx barrier FIRST,
     # then build label_table FROM the barrier — the tuple form re-ran
     # the labeling kernel + the 66M-row px join inside the label_table
@@ -1352,6 +1443,10 @@ def run_image_plan(
         F.count_if(F.col("classifier") == 1).alias("n_spots"),
         F.count_if(F.col("classifier") == 2).alias("n_arcs"),
     ), label="label_table")
+    # spot_stats reads only the lpx and label_table barriers: its sink
+    # starts now, beside the remaining barriers
+    stats = spot_stats(lpx, label_table, px, sparse_hint=sb)
+    emit("spot_stats", stats)
     # one sparse flag table covers all three mask variants: the om set IS
     # the labeled pixel set, and spot/arc membership is the classifier (or
     # the gradient stage's refined new_spot/new_arc flags)
@@ -1375,6 +1470,25 @@ def run_image_plan(
         )
     else:
         mask_flags = classifier_mask_flags(lpx, label_table)
+    # A19/M6 runs inside the spottiness stage in the reference
+    # (spottiness.py:64-84); spot membership comes from the same flag
+    # table the integrals consume (gradient-refined when enabled). It
+    # reads no later barrier, so its sink (the slowest one) overlaps the
+    # intspot barrier.
+    hm = _obs(
+        h_maxima_per_qbin(
+            px,
+            mask_flags.where(F.col("is_spot_px")).select("image_id", "y", "x"),
+            controls,
+            n_images=len(ids),
+            # closed-form calibration => qbin re-attaches bit-identically
+            # to the sparse maxima; a calib TABLE keeps it in the feed
+            recompute_qbin=calib is None,
+        ),
+        "h_maxima",
+        F.count(F.lit(1)).alias("n_hmax_rows"),
+    )
+    emit("h_maxima", hm)
     # A1 + A15 fused: one pixel-table scan serves both outputs (GROUPING
     # SETS — see integrate_and_spottiness). The fused agg frame is tiny
     # (images x bins), so it takes a barrier; the two derived outputs are
@@ -1390,27 +1504,14 @@ def run_image_plan(
         "integrations",
         F.count(F.lit(1)).alias("n_integral_rows"),
     )
-    stats = spot_stats(lpx, label_table, px, sparse_hint=sb)
     spotty = split_spottiness(fused_bins)
-    # A19/M6 runs inside the spottiness stage in the reference
-    # (spottiness.py:64-84); spot membership comes from the same flag
-    # table the integrals consume (gradient-refined when enabled).
-    hm = _obs(
-        h_maxima_per_qbin(
-            px,
-            mask_flags.where(F.col("is_spot_px")).select("image_id", "y", "x"),
-            controls,
-            n_images=len(ids),
-            # closed-form calibration => qbin re-attaches bit-identically
-            # to the sparse maxima; a calib TABLE keeps it in the feed
-            recompute_qbin=calib is None,
-        ),
-        "h_maxima",
-        F.count(F.lit(1)).alias("n_hmax_rows"),
-    )
+    emit("integrals", integrals)
+    emit("spottiness", spotty)
+    if grad is not None:
+        emit("gradient_arcs", grad.on_arc_labels)
     return ImagePlanResult(
         pixels=px,
-        outliers=outliers.drop("img_idx"),
+        outliers=outlier_rows,
         om_pixels=om,
         labeled_pixels=lpx,
         label_table=label_table,

@@ -36,24 +36,27 @@ Reference semantics mapped to Spark:
 
 Each micro-batch is decoded once: ``process_batch`` turns the batch frame
 into one eager local checkpoint before anything else (a TIFF stream would
-otherwise re-run its decode for every action), and the pixel store and the
-plan read that checkpoint. The batch's (dataset, seq) keys, which the
-emptiness check and csim's store lookback need, are an observed metric of
-the checkpoint job. Structured Streaming's ``foreachBatch`` guidance is
-the same: materialize a micro-batch once when several writers read it.
+otherwise re-run its decode for every action), and the plan and the pixel
+store read that checkpoint. The store is written on csim's side thread
+while the plan's barriers run, since csim is its only reader. The batch's
+(dataset, seq, image_id) keys, which the emptiness check, csim's store
+lookback and the plan's image set need, are an observed metric of the
+checkpoint job. Structured Streaming's ``foreachBatch`` guidance is the
+same: materialize a micro-batch once when several writers read it.
 
 Exactly-once: the checkpoint makes the SOURCE exactly-once (each input
 file is processed in one batch). The parquet sinks here are append-only,
-so a crash mid-batch can duplicate output rows on retry; production
-deployments should point the sinks at a transactional table format
-(Delta/Iceberg MERGE on image_id) — the plan itself is unchanged.
+so a crash mid-batch can duplicate output rows on retry, and a failed
+batch can have appended outputs before (or without) its pixel store;
+production deployments should point the sinks at a transactional table
+format (Delta/Iceberg MERGE on image_id) — the plan itself is unchanged.
 """
 
 from __future__ import annotations
 
 import os
 from collections.abc import Callable, Iterator
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
@@ -145,29 +148,40 @@ def run_batch(
     gradient_stage: bool = False,
     observe: bool = False,
     barrier: str = "local_checkpoint",
+    image_ids: list | None = None,
 ) -> Iterator[ImagePlanResult]:
     """One micro-batch as shipped: ``with run_batch(...) as res:``
 
-    1. submits ``write(csim(), "csim")`` on a side thread before the plan
-       (csim needs only the raw pixels, so its window-shuffle job, the
-       biggest independent one, overlaps the plan's eager barriers);
+    1. submits ``write(csim(), "csim")`` on a side thread before the plan:
+       ``csim()`` builds the frame (the stream's callable first writes the
+       pixel store that csim reads), and its window-shuffle job, the
+       biggest independent one, overlaps the plan's eager barriers;
     2. calls ``run_image_plan`` with the remaining arguments; its eager
        barriers materialize the plan's intermediates (``barrier`` is
        ``"local_checkpoint"``, the default and the stream's, or
-       ``"hybrid"``, the keep-up bench's; see ``run_image_plan``);
+       ``"hybrid"``, the keep-up bench's; see ``run_image_plan``), and
+       ``image_ids``, the batch's sorted image set when the caller has
+       it, saves the plan its image-set collect;
     3. writes integrals, spot_stats, spottiness, outliers, h_maxima and
-       gradient_arcs (if on) concurrently, so one job's stage tail
-       overlaps the next one's ramp-up, each under
-       ``callSite.short = "sink:<name>"``. csim's write runs under
-       ``"csim"``: the repo benchmark's ``--trace 1`` run rejects the
-       per-layer metric a ``sink:csim`` label would add.
+       gradient_arcs (if on) on a pool, each submitted as soon as the plan
+       hands it out (``on_output``): outliers, spot_stats and h_maxima run
+       beside the plan's later barriers, the rest after the last one.
+       Each write runs under ``callSite.short = "sink:<name>"``. csim's
+       write runs under ``"csim"``: the repo benchmark's ``--trace 1`` run
+       rejects the per-layer metric a ``sink:csim`` label would add.
 
     ``barrier`` and the detector size are checked first
     (``check_plan_args``), so a rejected batch raises before any job or
-    write, csim's included. The with-body runs while the plan's barriers
-    are still held. On every exit path csim settles before
+    write, csim's included. The with-body runs once every output is
+    written, while the plan's barriers are still held. On every exit path
+    the writes settle before the frames they read are released: a plan
+    that raises part-way waits for the sinks it started before releasing
+    its barriers, and csim and every sink settle before
     ``unpersist_all``, so a failed batch never leaves an append in flight
-    when foreachBatch retries it.
+    when foreachBatch retries it. A failed batch can still have appended
+    some of its outputs, even before its pixel store, since the early
+    sinks start while the plan runs: the sinks append, the replay gap
+    that ROADMAP Direction 2 closes.
     """
     check_plan_args(controls, barrier)
     sc = pixels.sparkSession.sparkContext
@@ -182,6 +196,15 @@ def run_batch(
 
     csim_pool = ThreadPoolExecutor(max_workers=1)
     csim_fut = csim_pool.submit(lambda: _sink(csim(), "csim", "csim"))
+    # one thread per shipped output (six with the gradient stage)
+    sink_pool = ThreadPoolExecutor(max_workers=6)
+    sinks: list[Future] = []
+
+    def on_output(name: str, df: DataFrame) -> Future:
+        f = sink_pool.submit(_sink, df, name, f"sink:{name}")
+        sinks.append(f)
+        return f
+
     res = None
     try:
         res = run_image_plan(
@@ -189,26 +212,15 @@ def run_batch(
             gradient_stage=gradient_stage,
             observe=observe,
             barrier=barrier,
+            image_ids=image_ids,
+            on_output=on_output,
         )
-        sinks = [
-            (res.integrals, "integrals"),
-            (res.spot_stats, "spot_stats"),
-            (res.spottiness, "spottiness"),
-            (res.outliers, "outliers"),
-            # A19: part of the reference's spottiness stage output
-            (res.h_maxima, "h_maxima"),
-        ]
-        if res.gradient is not None:
-            sinks.append((res.gradient.on_arc_labels, "gradient_arcs"))
-        with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
-            for f in [
-                pool.submit(_sink, df, name, f"sink:{name}")
-                for df, name in sinks
-            ]:
-                f.result()
+        for f in sinks:
+            f.result()
         yield res
         csim_fut.result()
     finally:
+        sink_pool.shutdown(wait=True)
         csim_pool.shutdown(wait=True)
         if res is not None:
             res.unpersist_all()
@@ -363,34 +375,45 @@ class StreamingImagePipeline:
         self.batches_seen += 1
         # decode once: a TIFF stream re-runs its decode UDTF for every
         # action on the batch frame, so the pixel store and the plan scan
-        # this checkpoint instead. The batch's (dataset, seq) keys are an
-        # observed metric of the checkpoint job: they are the emptiness
-        # check and csim's partition keys without a job of their own. The
-        # checkpoint is released when the batch ends.
+        # this checkpoint instead. The batch's (dataset, seq, image_id)
+        # keys are an observed metric of the checkpoint job: they are the
+        # emptiness check, csim's partition keys and the plan's image set
+        # without a job of their own. The checkpoint is released when the
+        # batch ends.
         keys = Observation(f"batch_keys_{batch_id}")
         batch_df = (
             batch_df.select("dataset", "seq", "image_id", "y", "x", "intensity")
-            .observe(keys, F.collect_set(F.struct("dataset", "seq")).alias("k"))
+            .observe(keys, F.collect_set(
+                F.struct("dataset", "seq", "image_id")).alias("k"))
             .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
         )
         try:
-            touched = sorted((r.dataset, r.seq) for r in keys.get["k"])
+            k = keys.get["k"]
+            touched = sorted({(r.dataset, r.seq) for r in k})
             if touched:
-                self._process_decoded(batch_df, batch_id, touched)
+                self._process_decoded(
+                    batch_df, batch_id, touched,
+                    sorted({r.image_id for r in k}),
+                )
         finally:
             release(batch_df)
 
     def _process_decoded(
-        self, batch_df: DataFrame, batch_id: int, touched: list
+        self, batch_df: DataFrame, batch_id: int, touched: list,
+        image_ids: list,
     ) -> None:
         from xrddatapipeline_spark import tables
 
-        # pixel store first: partitioned by (dataset, seq) so the csim
-        # lookback and any reprocessing read only the partitions they need.
-        tables.write_table(
-            batch_df, self._path("pixels"),
-            partition_by=("dataset", "seq"), fmt=self.table_format,
-        )
+        def store_then_csim() -> DataFrame:
+            # the pixel store, partitioned by (dataset, seq) so the csim
+            # lookback and any reprocessing read only the partitions they
+            # need, is written on csim's side thread beside the plan:
+            # csim is its only reader
+            tables.write_table(
+                batch_df, self._path("pixels"),
+                partition_by=("dataset", "seq"), fmt=self.table_format,
+            )
+            return self._csim_frame(touched)
 
         def write(df: DataFrame, name: str) -> None:
             tables.write_table(df, self._path(name), fmt=self.table_format)
@@ -400,9 +423,10 @@ class StreamingImagePipeline:
             self.calib,
             self.controls,
             write,
-            lambda: self._csim_frame(touched),
+            store_then_csim,
             gradient_stage=self.gradient_stage,
             observe=self.observe_metrics,
+            image_ids=image_ids,
         ) as res:
             if self.render_masks:
                 from xrddatapipeline_spark.sinks import render_mask_tiffs
