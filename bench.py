@@ -134,9 +134,8 @@ def _image_plan_seconds(spark) -> float:
     spottiness -> per-Qbin h-maxima, plus the overlapped csim series, on
     one synthetic SIZExSIZE detector image generated executor-side (pure
     column expressions — no driver data). It is the streamed micro-batch's
-    ``run_batch`` over noop sinks, so it times what ships. Calibration
-    build is excluded (once-per-run cache, pipeline_queue.py:183)."""
-    from xrddatapipeline_spark.calib.cache import build_calib_pixels
+    ``run_batch`` over noop sinks, so it times what ships, closed-form
+    calibration included."""
     from xrddatapipeline_spark.calib.geometry import ImageControls
     from xrddatapipeline_spark.plans.image_pipeline import (
         cosine_similarity_series,
@@ -160,22 +159,18 @@ def _image_plan_seconds(spark) -> float:
         esd_mul=3.0,
         dataset="bench",
     )
-    calib = build_calib_pixels(spark, c).persist()
-    calib.count()
-
     pixels = _synthetic_pixels(spark, c, n_images=1).persist()
     pixels.count()
 
     t0 = time.perf_counter()
     with run_batch(
-        pixels, calib, c, _noop_writer(),
+        pixels, c, _noop_writer(),
         lambda: cosine_similarity_series(pixels),
         image_ids=_image_ids(c),
     ):
         pass
     elapsed = time.perf_counter() - t0
     pixels.unpersist()
-    calib.unpersist()
     return round(elapsed, 4)
 
 
@@ -292,8 +287,6 @@ def _keepup_2880(batch: int = 8) -> dict:
         pixels.count()
         return time.perf_counter() - t0
 
-    # calib=None: closed-form calibration columns (codegen trig per row
-    # beats broadcasting + probing an 8.3 M-row map table — SCALE.md §1);
     # hybrid barrier: columnar pixel cache + checkpointed sparse frames.
     # The one-time cache build beats every consumer recomputing the
     # column-pruned closed-form trig: 78.1 vs 172.1 s/batch in the
@@ -429,7 +422,7 @@ def _keepup_2880(batch: int = 8) -> dict:
         # csim-over-res.pixels (the operator's first select takes the same
         # fields off the raw frame; the barriered px drops dataset/seq)
         with run_batch(
-            pixels, None, c, _noop_writer(),
+            pixels, c, _noop_writer(),
             lambda: cosine_similarity_series(pixels),
             gradient_stage=True, barrier=barrier,
             image_ids=_image_ids(c, batch),
@@ -513,7 +506,7 @@ def _keepup_2880(batch: int = 8) -> dict:
         # the same batch one_batch runs, so the pilot pre-JITs the right
         # generated classes
         with run_batch(
-            ppx, None, pc, _noop_writer("pilot"),
+            ppx, pc, _noop_writer("pilot"),
             lambda: cosine_similarity_series(ppx),
             gradient_stage=True, barrier=barrier,
             image_ids=_image_ids(pc),

@@ -21,7 +21,7 @@ from xrddatapipeline_spark.session import get_spark  # noqa: E402
 
 
 def pandas_hmax(px, spot_px, controls, n_images):
-    """Pre-r15 h_maxima_per_qbin (recompute_qbin=True branch), inlined."""
+    """Pre-r15 h_maxima_per_qbin (qbin re-attached to the maxima), inlined."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
@@ -97,10 +97,10 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     import bench as B
+    from xrddatapipeline_spark.calib.cache import with_calib_columns
     from xrddatapipeline_spark.calib.geometry import ImageControls
     from xrddatapipeline_spark.plans.image_pipeline import (
         h_maxima_per_qbin,
-        join_calib,
         with_base_mask,
     )
 
@@ -118,9 +118,7 @@ def main() -> None:
     )
     pixels.count()
     drop = ["tth", "azim_band", "azim_mask", "dataset", "seq", "q", "azim"]
-    masked = with_base_mask(
-        join_calib(pixels, None, controls=c), controls=c
-    )
+    masked = with_base_mask(with_calib_columns(pixels, c), controls=c)
     px = masked.drop(*[col for col in drop if col in masked.columns])
     px = px.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
     print("px rows:", px.count(), flush=True)
@@ -145,7 +143,7 @@ def main() -> None:
 
     variants = {
         "arrow": lambda: h_maxima_per_qbin(
-            px, F.broadcast(spot), c, n_images=batch, recompute_qbin=True
+            px, F.broadcast(spot), c, n_images=batch
         ),
         "pandas": lambda: pandas_hmax(px, F.broadcast(spot), c, batch),
     }

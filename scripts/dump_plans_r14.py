@@ -61,7 +61,6 @@ def main() -> None:
     # not the upstream lineage.
     if not only or "xrd_image_plan_512" in only:
         import bench as _bench
-        from xrddatapipeline_spark.calib.cache import build_calib_pixels
         from xrddatapipeline_spark.calib.geometry import ImageControls
         from xrddatapipeline_spark.plans.image_pipeline import run_image_plan
 
@@ -74,9 +73,8 @@ def main() -> None:
             out_channels=1000, num_chans_om=500, pola_val=0.99,
             esd_mul=3.0, dataset="bench",
         )
-        calib = build_calib_pixels(spark, c)
         pixels = _bench._synthetic_pixels(spark, c, n_images=1)
-        res = run_image_plan(pixels, calib, c)
+        res = run_image_plan(pixels, c)
         chunks = []
         for out, lbl in (
             (res.integrals, "integrals"), (res.spot_stats, "spot_stats"),

@@ -49,6 +49,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     import bench as B
+    from xrddatapipeline_spark.calib.cache import with_calib_columns
     from xrddatapipeline_spark.calib.geometry import ImageControls
     from xrddatapipeline_spark.plans.gradient_stage import (
         fused_gradient_inputs,
@@ -56,7 +57,6 @@ def main() -> None:
     from xrddatapipeline_spark.plans.image_pipeline import (
         cosine_similarity_series,
         h_maxima_per_qbin,
-        join_calib,
         labeled_pixels_frame,
         outlier_pixels,
         with_base_mask,
@@ -77,9 +77,7 @@ def main() -> None:
     )
     pixels.count()
     drop = ["tth", "azim_band", "azim_mask", "q", "azim"]
-    masked = with_base_mask(
-        join_calib(pixels, None, controls=c), controls=c
-    )
+    masked = with_base_mask(with_calib_columns(pixels, c), controls=c)
     px = with_img_idx(
         masked.drop(*[col for col in drop if col in masked.columns])
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -137,13 +135,11 @@ def main() -> None:
                     _noop,
                     h_maxima_per_qbin(
                         with_base_mask(
-                            join_calib(pixels, None, controls=c),
-                            controls=c,
+                            with_calib_columns(pixels, c), controls=c,
                         ).where(~F.col("base_mask")).select(
                             "image_id", "y", "x", "intensity"
                         ),
                         F.broadcast(spot), c, n_images=batch,
-                        recompute_qbin=True,
                     ),
                     "probe:hmax",
                 )

@@ -26,7 +26,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from xrddatapipeline_spark.calib.cache import build_calib_pixels
 from xrddatapipeline_spark.calib.geometry import ImageControls
 from xrddatapipeline_spark.session import get_spark
 from xrddatapipeline_spark.sources.controls import (
@@ -100,11 +99,9 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark(app_name="xrd-pipeline")
     spark.sparkContext.setLogLevel("WARN")
-    calib = build_calib_pixels(spark, controls).persist()
-    calib.count()  # T2: cache created once, before the first image
 
     pipe = StreamingImagePipeline(
-        spark, calib, controls, args.out,
+        spark, None, controls, args.out,
         gradient_stage=args.gradient,
         observe_metrics=args.observe,
     )

@@ -17,7 +17,6 @@ import sys
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
-from xrddatapipeline_spark.calib.cache import build_calib_pixels  # noqa: E402
 from xrddatapipeline_spark.session import get_spark  # noqa: E402
 from xrddatapipeline_spark.streaming import StreamingImagePipeline  # noqa: E402
 
@@ -32,10 +31,8 @@ def main() -> None:
         app_name="chaos-worker", master="local[2]", shuffle_partitions=4
     )
     spark.sparkContext.setLogLevel("ERROR")
-    calib = build_calib_pixels(spark, CONTROLS).cache()
-    calib.count()
     pipe = StreamingImagePipeline(
-        spark, calib, CONTROLS, out_dir, gradient_stage=gradient
+        spark, None, CONTROLS, out_dir, gradient_stage=gradient
     )
     print("WORKER_READY", flush=True)
     q = pipe.start(

@@ -108,16 +108,14 @@ def test_corrections_inside_image_plan(spark):
     """The chain composes with the full image plan (with_base_mask sees
     corrected intensities: a big negative dark scale masks everything)."""
     from tests.fixtures_images import CONTROLS, images_long_df, make_image
-    from xrddatapipeline_spark.calib.cache import build_calib_pixels
     from xrddatapipeline_spark.plans.image_pipeline import run_image_plan
 
     px = images_long_df(spark, [("synth", 1, make_image(CONTROLS, seq=1))])
-    calib = build_calib_pixels(spark, CONTROLS)
     flat = px.selectExpr("y", "x").distinct().selectExpr(
         "y", "x", "100000.0 AS dark"
     )
     res = run_image_plan(
-        px, calib, CONTROLS,
+        px, CONTROLS,
         corrections=dict(dark=flat, dark_scale=-1.0),
     )
     base = res.pixels.toPandas()

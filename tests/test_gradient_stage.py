@@ -13,7 +13,6 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from xrddatapipeline_spark.calib.cache import build_calib_pixels
 from xrddatapipeline_spark.calib.geometry import compute_maps_numpy
 from xrddatapipeline_spark.plans.image_pipeline import run_image_plan
 from tests.fixtures_images import CONTROLS, images_long_df, make_image
@@ -36,8 +35,7 @@ def grad_result(spark):
         90000.0 * np.exp(-(((ys - ty) ** 2 + (xs - tx) ** 2)) / (2 * 3.0 ** 2))
     ).astype(np.int32)
     pixels = images_long_df(spark, [("synth", 0, img)])
-    calib = build_calib_pixels(spark, c).cache()
-    res = run_image_plan(pixels, calib, c, gradient_stage=True)
+    res = run_image_plan(pixels, c, gradient_stage=True)
     lp = res.labeled_pixels.toPandas()
     lt = res.label_table.toPandas()
     fl = res.gradient.pixel_flags.toPandas()
@@ -103,17 +101,15 @@ def test_plain_arcs_kept_whole(grad_result):
 def test_banded_second_gradients_exact(spark):
     """Ghost-row band tiling is exact: tiny band_rows (many bands with
     4-row halos) must reproduce the single-group kernel bit-for-bit."""
-    from xrddatapipeline_spark.calib.cache import build_calib_pixels
+    from xrddatapipeline_spark.calib.cache import with_calib_columns
     from xrddatapipeline_spark.plans.gradient_stage import second_gradients
     from xrddatapipeline_spark.plans.image_pipeline import (
-        join_calib,
         with_base_mask,
     )
 
     c = CONTROLS
     pixels = images_long_df(spark, [("synth", 0, make_image(c, seq=0))])
-    calib = build_calib_pixels(spark, c).cache()
-    px = with_base_mask(join_calib(pixels, calib, controls=c))
+    px = with_base_mask(with_calib_columns(pixels, c))
 
     whole = (
         second_gradients(px, c, band_rows=c.size_y)
@@ -136,7 +132,7 @@ def test_banded_second_gradients_exact(spark):
 def test_fused_thresholds_bit_equal_dense_percentiles(spark):
     """The per-band bottom-k candidate merge must reproduce np.percentile
     over the dense gradient frame bit-for-bit (many small bands)."""
-    from xrddatapipeline_spark.calib.cache import build_calib_pixels
+    from xrddatapipeline_spark.calib.cache import with_calib_columns
     from xrddatapipeline_spark.plans.gradient_stage import (
         THRESHOLD_PCT,
         exact_percentiles_from_candidates,
@@ -146,7 +142,6 @@ def test_fused_thresholds_bit_equal_dense_percentiles(spark):
     from xrddatapipeline_spark.plans.image_pipeline import (
         classify_clusters,
         closed_outlier_pixels,
-        join_calib,
         outlier_pixels,
         with_base_mask,
         with_img_idx,
@@ -154,9 +149,8 @@ def test_fused_thresholds_bit_equal_dense_percentiles(spark):
 
     c = CONTROLS
     pixels = images_long_df(spark, [("synth", 0, make_image(c, seq=0))])
-    calib = build_calib_pixels(spark, c).cache()
     px = with_img_idx(
-        with_base_mask(join_calib(pixels, calib, controls=c))
+        with_base_mask(with_calib_columns(pixels, c))
     ).cache()
     om = closed_outlier_pixels(outlier_pixels(px, c.esd_mul), (c.size_y, c.size_x))
     lpx, _ = classify_clusters(px, om, (c.size_y, c.size_x))
@@ -195,7 +189,7 @@ def test_fused_thresholds_survive_fully_masked_band(spark):
     cogroup group entirely without the per-band sentinel): n_core must still
     sum to h*w and the thresholds must stay bit-identical to np.percentile
     over the dense route, whose unpaintable interior is 0.0 by spec."""
-    from xrddatapipeline_spark.calib.cache import build_calib_pixels
+    from xrddatapipeline_spark.calib.cache import with_calib_columns
     from xrddatapipeline_spark.plans.gradient_stage import (
         THRESHOLD_PCT,
         exact_percentiles_from_candidates,
@@ -205,7 +199,6 @@ def test_fused_thresholds_survive_fully_masked_band(spark):
     from xrddatapipeline_spark.plans.image_pipeline import (
         classify_clusters,
         closed_outlier_pixels,
-        join_calib,
         outlier_pixels,
         with_base_mask,
         with_img_idx,
@@ -214,10 +207,9 @@ def test_fused_thresholds_survive_fully_masked_band(spark):
 
     c = CONTROLS
     pixels = images_long_df(spark, [("synth", 0, make_image(c, seq=0))])
-    calib = build_calib_pixels(spark, c).cache()
     # band_rows=32 -> 8 bands; mask band 5 (y 160-191) PLUS its 4-row halo
     # on both sides, so the halo'd slices of band 5 contain zero good pixels
-    px = with_base_mask(join_calib(pixels, calib, controls=c))
+    px = with_base_mask(with_calib_columns(pixels, c))
     px = with_img_idx(px.withColumn(
         "base_mask",
         F.col("base_mask") | F.col("y").between(160 - 4, 191 + 4),
@@ -257,13 +249,12 @@ def test_gradient_float32_chain_close_to_float64(spark):
     routes are internally consistent — the bit-equality tests above run
     entirely inside one chain)."""
     from pyspark.sql import functions as F
-    from xrddatapipeline_spark.calib.cache import build_calib_pixels
+    from xrddatapipeline_spark.calib.cache import with_calib_columns
     from xrddatapipeline_spark.plans.gradient_stage import (
         _grad_dtype,
         second_gradients,
     )
     from xrddatapipeline_spark.plans.image_pipeline import (
-        join_calib,
         with_base_mask,
     )
 
@@ -272,8 +263,7 @@ def test_gradient_float32_chain_close_to_float64(spark):
 
     c = CONTROLS
     pixels = images_long_df(spark, [("synth", 0, make_image(c, seq=0))])
-    calib = build_calib_pixels(spark, c).cache()
-    px = with_base_mask(join_calib(pixels, calib, controls=c)).cache()
+    px = with_base_mask(with_calib_columns(pixels, c)).cache()
     f32 = (
         second_gradients(px, c, band_rows=64)
         .toPandas().sort_values(["y", "x"]).reset_index(drop=True)

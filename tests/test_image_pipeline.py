@@ -23,8 +23,7 @@ from tests.fixtures_images import CONTROLS, images_long_df, make_image
 def plan_result(spark):
     img = make_image(CONTROLS, seq=0)
     pixels = images_long_df(spark, [("synth", 0, img)])
-    calib = build_calib_pixels(spark, CONTROLS).cache()
-    res = run_image_plan(pixels, calib, CONTROLS)
+    res = run_image_plan(pixels, CONTROLS)
     return img, res
 
 
@@ -194,8 +193,7 @@ def test_observed_stage_counters_match_outputs(spark):
     and equal independently recomputed counts."""
     img = make_image(CONTROLS, seq=7)
     pixels = images_long_df(spark, [("synth", 7, img)])
-    calib = build_calib_pixels(spark, CONTROLS).cache()
-    res = run_image_plan(pixels, calib, CONTROLS, observe=True)
+    res = run_image_plan(pixels, CONTROLS, observe=True)
     try:
         # materialize every output the way the streaming sink would
         for out in (res.integrals, res.spot_stats, res.spottiness,
@@ -218,7 +216,6 @@ def test_observed_stage_counters_match_outputs(spark):
         }
     finally:
         res.unpersist_all()
-        calib.unpersist()
 
 
 def test_local_checkpoint_barrier_equivalent_and_released(spark):
@@ -227,9 +224,8 @@ def test_local_checkpoint_barrier_equivalent_and_released(spark):
     checkpointed RDD storage (a long-lived stream cannot wait for GC)."""
     img = make_image(CONTROLS, seq=3)
     pixels = images_long_df(spark, [("synth", 3, img)])
-    calib = build_calib_pixels(spark, CONTROLS).cache()
 
-    res_h = run_image_plan(pixels, calib, CONTROLS, barrier="hybrid")
+    res_h = run_image_plan(pixels, CONTROLS, barrier="hybrid")
     want = res_h.integrals.orderBy("kind", "tth_idx").toPandas()
     res_h.unpersist_all()
 
@@ -239,8 +235,7 @@ def test_local_checkpoint_barrier_equivalent_and_released(spark):
         }
 
     before = rdd_ids()
-    res_c = run_image_plan(pixels, calib, CONTROLS,
-                           barrier="local_checkpoint")
+    res_c = run_image_plan(pixels, CONTROLS, barrier="local_checkpoint")
     got = res_c.integrals.orderBy("kind", "tth_idx").toPandas()
     np.testing.assert_allclose(
         got["intensity"].values, want["intensity"].values, rtol=1e-12
@@ -252,7 +247,6 @@ def test_local_checkpoint_barrier_equivalent_and_released(spark):
     # every checkpointed barrier frame was explicitly released (other
     # tests' unrelated caches may remain)
     assert not (rdd_ids() - before), rdd_ids() - before
-    calib.unpersist()
 
 
 def test_given_image_ids_build_the_collected_plan_without_collect_or_count(
@@ -270,7 +264,6 @@ def test_given_image_ids_build_the_collected_plan_without_collect_or_count(
         ("synth", 0, make_image(CONTROLS, seq=0)),
         ("synth", 1, make_image(CONTROLS, seq=1)),
     ])
-    calib = build_calib_pixels(spark, CONTROLS).cache()
     names = ("outliers", "om_pixels", "label_table", "integrals",
              "spot_stats", "spottiness", "h_maxima")
 
@@ -282,7 +275,7 @@ def test_given_image_ids_build_the_collected_plan_without_collect_or_count(
         res.unpersist_all()
         return out
 
-    want = frames(run_image_plan(pixels, calib, CONTROLS))
+    want = frames(run_image_plan(pixels, CONTROLS))
 
     def refuse(*a, **k):
         raise AssertionError("collect or count job inside the plan")
@@ -291,10 +284,9 @@ def test_given_image_ids_build_the_collected_plan_without_collect_or_count(
         m.setattr(ip, "_image_set", refuse)
         m.setattr(type(pixels), "count", refuse)
         res = run_image_plan(
-            pixels, calib, CONTROLS, image_ids=["synth-00001", "synth-00000"]
+            pixels, CONTROLS, image_ids=["synth-00001", "synth-00000"]
         )
     got = frames(res)
-    calib.unpersist()
     for n in names:
         pd.testing.assert_frame_equal(got[n], want[n], check_exact=True)
 
@@ -306,12 +298,12 @@ def _plan_and_batch(pixels, controls, writes: list) -> tuple:
 
     def batch(**kw):
         with run_batch(
-            pixels, None, controls, lambda df, name: writes.append(name),
+            pixels, controls, lambda df, name: writes.append(name),
             lambda: cosine_similarity_series(pixels), **kw,
         ):
             pass
 
-    return (lambda **kw: run_image_plan(pixels, None, controls, **kw)), batch
+    return (lambda **kw: run_image_plan(pixels, controls, **kw)), batch
 
 
 @pytest.mark.parametrize("barrier", ["hybrid-nopx", "persist"])
@@ -370,14 +362,12 @@ def test_empty_batch_eager_plan_builds(spark):
     built with 0 partitions (plan-construction crash). Empty in, empty
     out, no exception."""
     from pyspark.sql import functions as F
-    from xrddatapipeline_spark.calib.cache import build_calib_pixels
     from xrddatapipeline_spark.plans.image_pipeline import run_image_plan
 
     empty = images_long_df(
         spark, [("synth", 0, make_image(CONTROLS, seq=0))]
     ).where(F.lit(False))
-    calib = build_calib_pixels(spark, CONTROLS)
-    res = run_image_plan(empty, calib, CONTROLS, barrier="local_checkpoint")
+    res = run_image_plan(empty, CONTROLS, barrier="local_checkpoint")
     assert res.h_maxima.count() == 0
     assert res.integrals.count() == 0
     res.unpersist_all()
@@ -450,47 +440,36 @@ def test_csim_window_exchange_ships_packed_narrow_rows(spark):
 
 
 def test_closed_form_calib_matches_calib_table(spark):
-    """run_image_plan(calib=None) (closed-form geometry; lpx probe trimmed
-    to intensity-only, round 9) must be bit-identical to the calib-table
-    join path on every labeled/sparse output."""
+    """The plan's closed-form calibration equals the reference artifact
+    bit for bit: the lpx barrier's q/azim/qbin/azim_flip (recomputed on
+    the sparse rows) and the px barrier's tth_idx/ring_idx/qbin/base_mask
+    match build_calib_pixels joined on (y, x)."""
     import pandas as pd
-
-    from tests.fixtures_images import images_long_df, make_image
-    from xrddatapipeline_spark.calib.cache import build_calib_pixels
+    from pyspark.sql import functions as F
 
     pixels = images_long_df(
         spark, [("synth", 0, make_image(CONTROLS, seq=0))]
-    ).persist()
-    pixels.count()
-    calib = build_calib_pixels(spark, CONTROLS).persist()
-    calib.count()
-    outs = {}
-    for name, cal in (("table", calib), ("closed", None)):
-        res = run_image_plan(pixels, cal, CONTROLS, barrier="hybrid")
-        outs[name] = {
-            "lpx": res.labeled_pixels.orderBy("y", "x")
-            .select("image_id", "y", "x", "label", "q", "azim",
-                    "intensity", "qbin", "azim_flip").toPandas(),
-            "label_table": res.label_table.orderBy("label").toPandas(),
-            "integrals": res.integrals.orderBy("kind", "tth_idx").toPandas(),
-            "spot_stats": res.spot_stats.orderBy("spot_stat_label").toPandas(),
-        }
+    )
+    ref = pixels.join(build_calib_pixels(spark, CONTROLS), ["y", "x"]).select(
+        "y", "x", "q", "azim", "qbin", "tth_idx", "ring_idx",
+        F.pmod(F.col("azim") + 180.0, F.lit(360.0)).alias("azim_flip"),
+        ((F.col("intensity") <= 0) | F.col("azim_mask")).alias("base_mask"),
+    )
+    res = run_image_plan(pixels, CONTROLS)
+    try:
+        for got, cols in (
+            (res.labeled_pixels, ["q", "azim", "qbin", "azim_flip"]),
+            (res.pixels, ["tth_idx", "ring_idx", "qbin", "base_mask"]),
+        ):
+            g = got.select("y", "x", *cols).orderBy("y", "x").toPandas()
+            w = (
+                ref.join(got.select("y", "x"), ["y", "x"])
+                .select("y", "x", *cols).orderBy("y", "x").toPandas()
+            )
+            assert len(g) > 0
+            pd.testing.assert_frame_equal(g, w, check_exact=True)
+    finally:
         res.unpersist_all()
-    for frame in outs["table"]:
-        # lpx/label_table: pure per-row expressions -> bit-exact.
-        # integrals/spot_stats aggregate SUMS of doubles, and the two plan
-        # shapes feed the partial aggregation in different row orders, so
-        # the last ULP can differ — tolerance 1e-12, not exactness.
-        exact = frame in ("lpx", "label_table")
-        pd.testing.assert_frame_equal(
-            outs["table"][frame].reset_index(drop=True),
-            outs["closed"][frame].reset_index(drop=True),
-            check_exact=exact,
-            rtol=0 if exact else 1e-12,
-            atol=0,
-        )
-    calib.unpersist()
-    pixels.unpersist()
 
 
 def test_warmup_job_submitted_once_per_session(spark, monkeypatch):
@@ -522,7 +501,7 @@ def test_warmup_job_submitted_once_per_session(spark, monkeypatch):
     big = dataclasses.replace(CONTROLS, size_x=2048, size_y=2048)
     pixels = images_long_df(spark, [("synth", 0, make_image(CONTROLS, seq=0))])
     for _ in range(3):
-        run_image_plan(pixels, None, big).unpersist_all()
+        run_image_plan(pixels, big).unpersist_all()
     assert len(starts) == 1, f"warmup thread started {len(starts)}x"
 
 
@@ -537,8 +516,7 @@ def test_fused_spottiness_matches_direct_formulation(spark, grad):
 
     img = make_image(CONTROLS, seq=0)
     pixels = images_long_df(spark, [("synth", 0, img)])
-    calib = build_calib_pixels(spark, CONTROLS).cache()
-    res = run_image_plan(pixels, calib, CONTROLS, gradient_stage=grad)
+    res = run_image_plan(pixels, CONTROLS, gradient_stage=grad)
 
     fused = res.spottiness.orderBy("qbin").toPandas()
     direct = (
@@ -563,7 +541,6 @@ def test_base_mask_honors_immask_and_predef_raster(spark):
 
     img = make_image(CONTROLS, seq=0)
     pixels = images_long_df(spark, [("synth", 0, img)])
-    calib = build_calib_pixels(spark, CONTROLS).cache()
 
     predef = np.zeros((CONTROLS.size_y, CONTROLS.size_x), dtype=bool)
     predef[40:44, 100:140] = True
@@ -573,8 +550,8 @@ def test_base_mask_honors_immask_and_predef_raster(spark):
                "predef_mask": predef},
     )
 
-    plain = run_image_plan(pixels, calib, CONTROLS)
-    masked = run_image_plan(pixels, calib, c2)
+    plain = run_image_plan(pixels, CONTROLS)
+    masked = run_image_plan(pixels, c2)
     b0 = (
         plain.pixels.select("y", "x", "base_mask")
         .toPandas()

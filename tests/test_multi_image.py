@@ -10,16 +10,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
 
-from xrddatapipeline_spark.calib.cache import build_calib_pixels
 from xrddatapipeline_spark.plans.image_pipeline import run_image_plan
 from tests.fixtures_images import CONTROLS, images_long_df, make_image
-
-
-@pytest.fixture(scope="module")
-def calib(spark):
-    return build_calib_pixels(spark, CONTROLS).cache()
 
 
 def _base_integrals(res) -> pd.DataFrame:
@@ -32,18 +25,18 @@ def _base_integrals(res) -> pd.DataFrame:
     )
 
 
-def test_multi_image_batch_equals_single_runs(spark, calib):
+def test_multi_image_batch_equals_single_runs(spark):
     imgs = [("a", 0, make_image(CONTROLS, seq=0)),
             ("a", 1, make_image(CONTROLS, seq=1)),
             ("b", 0, make_image(CONTROLS, seq=5))]
-    batch = run_image_plan(images_long_df(spark, imgs), calib, CONTROLS)
+    batch = run_image_plan(images_long_df(spark, imgs), CONTROLS)
     got = _base_integrals(batch)
     outliers_batch = batch.outliers.toPandas()
 
     singles = []
     outliers_single = []
     for ds, seq, img in imgs:
-        res = run_image_plan(images_long_df(spark, [(ds, seq, img)]), calib, CONTROLS)
+        res = run_image_plan(images_long_df(spark, [(ds, seq, img)]), CONTROLS)
         singles.append(_base_integrals(res))
         outliers_single.append(res.outliers.toPandas())
     want = pd.concat(singles).sort_values(["image_id", "tth_idx"]).reset_index(drop=True)

@@ -239,7 +239,7 @@ def test_fused_integrals_spottiness_one_scan(spark):
         spark, [("synth", 0, make_image(CONTROLS, seq=0))]
     ).persist()
     pixels.count()
-    res = run_image_plan(pixels, None, CONTROLS, barrier="hybrid")
+    res = run_image_plan(pixels, CONTROLS, barrier="hybrid")
 
     fused_plan = _plan(res.fused_bins)
     assert fused_plan.count("Expand") == 0  # checkpointed: plan truncated
@@ -266,8 +266,8 @@ def test_outlier_stage_takes_histogram_route(spark):
     import re
 
     from tests.fixtures_images import CONTROLS, images_long_df, make_image
+    from xrddatapipeline_spark.calib.cache import with_calib_columns
     from xrddatapipeline_spark.plans.image_pipeline import (
-        join_calib,
         outlier_pixels,
         with_base_mask,
         with_img_idx,
@@ -277,7 +277,7 @@ def test_outlier_stage_takes_histogram_route(spark):
         spark, [("synth", 0, make_image(CONTROLS, seq=0))]
     )
     px = with_img_idx(with_base_mask(
-        join_calib(pixels, None, controls=CONTROLS), controls=CONTROLS
+        with_calib_columns(pixels, CONTROLS), controls=CONTROLS
     ))
     outliers = outlier_pixels(px, esd_mul=CONTROLS.esd_mul)
     plan = outliers._jdf.queryExecution().analyzed().toString()

@@ -250,41 +250,47 @@ def test_shingle_jaccard_assume_distinct_parity(edge_docs, spark):
     pd.testing.assert_frame_equal(fast, base)
 
 
-def test_h_maxima_recompute_qbin_parity(spark):
-    # round-14 slim kernel feed: under closed-form calibration the qbin
-    # column leaves the dense per-pixel shuffle and is re-attached to the
-    # sparse maxima via the SAME with_calib_columns expressions that
-    # built the px frame's qbin — outputs must be identical
+def test_h_maxima_per_qbin_matches_numpy_oracle(spark):
+    # the kernel feed carries no qbin: it is re-attached to the sparse
+    # maxima by the closed-form calibration expressions. Oracle: run the
+    # kernel on the numpy frame, look up each maximum's qbin in the
+    # reference calib table, count per qbin
     import dataclasses
 
-    from pyspark.sql import functions as F
-
     from tests.test_image_pipeline import CONTROLS
-    from xrddatapipeline_spark.calib.cache import with_calib_columns
+    from xrddatapipeline_spark.calib.cache import build_calib_pixels
+    from xrddatapipeline_spark.operators import kernels
     from xrddatapipeline_spark.plans.image_pipeline import h_maxima_per_qbin
 
     c = dataclasses.replace(CONTROLS, size_x=48, size_y=48)
     rng = np.random.default_rng(11)
-    rows = [
-        ("im-a", int(y), int(x), int(v))
-        for y in range(48) for x in range(48)
-        for v in [10 + (rng.integers(0, 5))]
-    ]
+    img = 10 + rng.integers(0, 5, size=(48, 48))
     # plant maxima
     for y, x, v in [(5, 5, 500), (20, 30, 400), (40, 8, 350)]:
-        rows[y * 48 + x] = ("im-a", y, x, v)
-    base = spark.createDataFrame(
-        rows, "image_id string, y int, x int, intensity int"
-    )
-    px = with_calib_columns(base, c).select(
-        "image_id", "y", "x", "intensity", "qbin"
+        img[y, x] = v
+    px = spark.createDataFrame(
+        [("im-a", y, x, int(img[y, x])) for y in range(48) for x in range(48)],
+        "image_id string, y int, x int, intensity int",
     )
     spot = spark.createDataFrame(
         [("im-a", 5, 5)], "image_id string, y int, x int"
     )
-    ship = h_maxima_per_qbin(px, spot, c, recompute_qbin=False).toPandas()
-    slim = h_maxima_per_qbin(px, spot, c, recompute_qbin=True).toPandas()
-    key = ["image_id", "qbin"]
-    ship = ship.sort_values(key).reset_index(drop=True)
-    slim = slim.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(slim, ship)
+    got = h_maxima_per_qbin(px, spot, c).toPandas()
+
+    hval = float(int(0.05 * float(np.percentile(img, 99.9))))
+    ys, xs = np.nonzero(kernels.h_maxima(img.astype(np.float64), hval))
+    calib = build_calib_pixels(spark, c).select("y", "x", "qbin").toPandas()
+    qbin = np.empty((48, 48), dtype=np.int64)
+    qbin[calib["y"], calib["x"]] = calib["qbin"]
+    want = pd.DataFrame({
+        "qbin": qbin[ys, xs],
+        "spot": (ys == 5) & (xs == 5),
+    }).query("qbin >= 0").groupby("qbin").agg(
+        n_maxima=("spot", "size"), n_spot_maxima=("spot", "sum"),
+    ).reset_index()
+    assert len(want) > 0
+    got = got.sort_values("qbin").reset_index(drop=True)
+    assert list(got["image_id"].unique()) == ["im-a"]
+    np.testing.assert_array_equal(got["qbin"], want["qbin"])
+    np.testing.assert_array_equal(got["n_maxima"], want["n_maxima"])
+    np.testing.assert_array_equal(got["n_spot_maxima"], want["n_spot_maxima"])

@@ -18,7 +18,6 @@ from xrddatapipeline_spark.operators.raster import close_and_label_pixels
 from xrddatapipeline_spark.operators.ring_stats import flag_outliers
 from xrddatapipeline_spark.plans.image_pipeline import (
     integrate_and_spottiness,
-    join_calib,
     labeled_pixels_frame,
     outlier_pixels,
     with_base_mask,
@@ -31,7 +30,7 @@ PIXEL = ["image_id", "y", "x"]
 
 @pytest.fixture(scope="module")
 def px2(spark):
-    """Two-image calib-joined, base-masked dense pixel frame with img_idx."""
+    """Two-image calibrated, base-masked dense pixel frame with img_idx."""
     pixels = images_long_df(
         spark,
         [
@@ -40,10 +39,7 @@ def px2(spark):
         ],
     )
     px = with_img_idx(
-        with_base_mask(
-            join_calib(pixels, None, controls=CONTROLS),
-            controls=CONTROLS,
-        )
+        with_base_mask(with_calib_columns(pixels, CONTROLS), controls=CONTROLS)
     ).persist()
     px.count()
     return px
@@ -110,7 +106,8 @@ def test_labeled_pixels_frame_packed_key_parity(px2, outliers2):
     )
     assert len(legacy) > 0
     pd.testing.assert_frame_equal(legacy, packed, check_exact=True)
-    # calib-table branch (no controls: q/azim/qbin read off the probe)
+    # controls=None branch (q/azim/qbin read off px, as classify_clusters
+    # and the driver queries do)
     legacy7 = _sorted(
         _reference_lpx(
             px2, outliers2, ["q", "azim", "intensity", "qbin"],

@@ -85,6 +85,36 @@ def test_ivf_assign_vectorized_tie_breaks_to_lowest_cell(spark):
     assert all(r["cell"] == 0 for r in new if r["vec_id"] == 0)
 
 
+def test_join_key_udfs_are_pure_across_arrow_batch_sizes(spark, edge_vectors):
+    """lsh_bucket_vectorized and ivf_assign_vectorized are marked
+    asNondeterministic only so the optimizer evaluates each once per join
+    side; that is sound because a row's value depends on that row alone.
+    One row per Arrow batch and every row in one batch give the same
+    rows, and both equal the expression folds."""
+    one = edge_vectors.coalesce(1)
+    cents = sim.ivf_centroids(edge_vectors, 8)
+    cases = [
+        (sim.lsh_bucket_expr(F.col("embedding"), 12, DIM),
+         sim.lsh_bucket_vectorized(12, DIM)(F.col("embedding"))),
+        (sim.ivf_assign_expr(F.col("embedding"), cents),
+         sim.ivf_assign_vectorized(cents)(F.col("embedding"))),
+    ]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(key, None)
+    for fold, udf in cases:
+        want = sorted(one.select("vec_id", fold.alias("v")).collect())
+        got = sorted(one.select("vec_id", udf.alias("v")).collect())
+        spark.conf.set(key, "1")
+        try:
+            per_row = sorted(one.select("vec_id", udf.alias("v")).collect())
+        finally:
+            if default is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, default)
+        assert per_row == got == want
+
+
 def test_quantized_self_dot_vectorized_matches_expression(edge_vectors):
     old = edge_vectors.select(
         "vec_id",

@@ -5,7 +5,6 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from xrddatapipeline_spark.calib.cache import build_calib_pixels
 from xrddatapipeline_spark.plans.image_pipeline import run_image_plan
 from xrddatapipeline_spark.plans.readback import (
     contour_matrix,
@@ -19,8 +18,7 @@ from tests.fixtures_images import CONTROLS, images_long_df, make_image
 def outputs(spark):
     imgs = [("synth", s, make_image(CONTROLS, seq=s)) for s in range(4)]
     pixels = images_long_df(spark, imgs)
-    calib = build_calib_pixels(spark, CONTROLS).cache()
-    res = run_image_plan(pixels, calib, CONTROLS)
+    res = run_image_plan(pixels, CONTROLS)
     return res.integrals.cache(), res.spot_stats.cache()
 
 

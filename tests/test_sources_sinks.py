@@ -5,14 +5,16 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from xrddatapipeline_spark.calib.cache import build_calib_pixels
+from xrddatapipeline_spark.calib.cache import (
+    build_calib_pixels,
+    with_calib_columns,
+)
 from xrddatapipeline_spark.calib.geometry import compute_maps_numpy
 from xrddatapipeline_spark.operators.masks import (
     geometric_mask_predicate,
     masks_table_rows,
     point_in_polygon,
 )
-from xrddatapipeline_spark.plans.image_pipeline import join_calib
 from xrddatapipeline_spark.sinks import export_chi, export_xye, read_chi
 from xrddatapipeline_spark.sources.controls import (
     imctrl_to_controls,
@@ -287,8 +289,7 @@ def test_geometric_masks_match_numpy(spark):
     m = parse_immask(IMMASK)
     img = make_image(c, seq=0)
     pixels = images_long_df(spark, [("synth", 0, img)])
-    calib = build_calib_pixels(spark, c)
-    px = join_calib(pixels, calib)
+    px = with_calib_columns(pixels, c)
     got = (
         px.withColumn("gm", geometric_mask_predicate(m, c))
         .where("gm")
@@ -338,8 +339,7 @@ def test_chi_xye_roundtrip(spark, tmp_path):
     from xrddatapipeline_spark.plans.image_pipeline import run_image_plan
     img = make_image(CONTROLS, seq=0)
     pixels = images_long_df(spark, [("synth", 0, img)])
-    calib = build_calib_pixels(spark, CONTROLS)
-    res = run_image_plan(pixels, calib, CONTROLS)
+    res = run_image_plan(pixels, CONTROLS)
     integrals = res.integrals.cache()
 
     chi = export_chi(integrals, "synth-00000", "base", str(tmp_path / "a.chi"))
@@ -372,8 +372,7 @@ def test_export_dataset_chis_bytes_match_single_writer(spark, tmp_path):
         [("synth", 0, make_image(CONTROLS, seq=0)),
          ("synth", 1, make_image(CONTROLS, seq=1))],
     )
-    calib = build_calib_pixels(spark, CONTROLS)
-    res = run_image_plan(pixels, calib, CONTROLS)
+    res = run_image_plan(pixels, CONTROLS)
     integrals = res.integrals.cache()
 
     bulk_dir = tmp_path / "bulk"
@@ -434,8 +433,7 @@ def test_export_dataset_stats_csvs_bytes_match_single_writer(spark, tmp_path):
         [("synth", 0, make_image(CONTROLS, seq=0)),
          ("synth", 1, make_image(CONTROLS, seq=1))],
     )
-    calib = build_calib_pixels(spark, CONTROLS)
-    res = run_image_plan(pixels, calib, CONTROLS)
+    res = run_image_plan(pixels, CONTROLS)
     stats = res.spot_stats.cache()
 
     bulk_dir = tmp_path / "bulk"

@@ -12,7 +12,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from xrddatapipeline_spark.calib.cache import build_calib_pixels
 from xrddatapipeline_spark.plans.image_pipeline import cosine_similarity_series
 from xrddatapipeline_spark.streaming import StreamingImagePipeline, read_pixel_stream
 from xrddatapipeline_spark.streaming.pipeline import run_batch
@@ -38,8 +37,7 @@ def stream_run(spark, tmp_path_factory):
     _land_image(spark, input_dir, 0)
     _land_image(spark, input_dir, 1)
 
-    calib = build_calib_pixels(spark, CONTROLS).cache()
-    pipe = StreamingImagePipeline(spark, calib, CONTROLS, out_dir)
+    pipe = StreamingImagePipeline(spark, None, CONTROLS, out_dir)
 
     # run 1: backfill both existing images, auto-stop (T4 availableNow)
     q = pipe.start(input_dir, ckpt, available_now=True, max_files_per_trigger=1)
@@ -63,9 +61,8 @@ def test_render_masks_batch(spark, tmp_path):
     from xrddatapipeline_spark.sources.tiff import read_tiff_gray
 
     out_dir = str(tmp_path / "out")
-    calib = build_calib_pixels(spark, CONTROLS)
     pipe = StreamingImagePipeline(
-        spark, calib, CONTROLS, out_dir, render_masks=True
+        spark, None, CONTROLS, out_dir, render_masks=True
     )
     px = images_long_df(spark, [("synth", 0, make_image(CONTROLS, seq=0))])
     pipe.process_batch(px, 0)
@@ -85,8 +82,7 @@ def test_pause_clear_queue_resume(spark, tmp_path):
     later-arriving files are unaffected (reference UI queue.clear())."""
     input_dir, out_dir = str(tmp_path / "landing"), str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    calib = build_calib_pixels(spark, CONTROLS)
-    pipe = StreamingImagePipeline(spark, calib, CONTROLS, out_dir)
+    pipe = StreamingImagePipeline(spark, None, CONTROLS, out_dir)
 
     _land_image(spark, input_dir, 0)
     q = pipe.start(input_dir, ckpt, available_now=True)
@@ -151,14 +147,12 @@ def test_csim_lookback_across_batches(stream_run):
 
 def test_outputs_consistent_with_batch_plan(stream_run, spark):
     """Streaming outputs == running the batch plan directly (same images)."""
-    from xrddatapipeline_spark.calib.cache import build_calib_pixels
     from xrddatapipeline_spark.plans.image_pipeline import run_image_plan
 
     pipe, _ = stream_run
     img = make_image(CONTROLS, seq=1)
     pixels = images_long_df(spark, [("synth", 1, img)])
-    calib = build_calib_pixels(spark, CONTROLS)
-    res = run_image_plan(pixels, calib, CONTROLS)
+    res = run_image_plan(pixels, CONTROLS)
     want = (
         res.integrals.where("kind = 'base'")
         .toPandas().set_index("tth_idx").intensity.sort_index()
@@ -211,8 +205,7 @@ def test_live_processing_time_trigger(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     _land_image(spark, input_dir, 0)
 
-    calib = build_calib_pixels(spark, CONTROLS).cache()
-    pipe = StreamingImagePipeline(spark, calib, CONTROLS, out_dir)
+    pipe = StreamingImagePipeline(spark, None, CONTROLS, out_dir)
     q = pipe.start(
         input_dir, ckpt,
         available_now=False, processing_interval="500 milliseconds",
@@ -456,9 +449,8 @@ def test_streaming_gradient_stage_output(spark, tmp_path):
     input_dir = str(tmp_path / "landing")
     _land_image(spark, input_dir, 0)
 
-    calib = build_calib_pixels(spark, CONTROLS).cache()
     pipe = StreamingImagePipeline(
-        spark, calib, CONTROLS, str(tmp_path / "out"), gradient_stage=True
+        spark, None, CONTROLS, str(tmp_path / "out"), gradient_stage=True
     )
     q = pipe.start(input_dir, str(tmp_path / "ckpt"), available_now=True)
     q.awaitTermination(180)
@@ -548,9 +540,8 @@ def test_stage_metrics_observability_sink(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     _land_image(spark, input_dir, 0)
     _land_image(spark, input_dir, 1)
-    calib = build_calib_pixels(spark, CONTROLS).cache()
     pipe = StreamingImagePipeline(
-        spark, calib, CONTROLS, out_dir, observe_metrics=True
+        spark, None, CONTROLS, out_dir, observe_metrics=True
     )
     q = pipe.start(input_dir, ckpt, available_now=True,
                    max_files_per_trigger=1)
@@ -563,7 +554,6 @@ def test_stage_metrics_observability_sink(spark, tmp_path):
         "batch_id", "n_px", "n_base_masked", "n_outlier_px", "n_om_px",
         "n_clusters", "n_spots", "n_arcs", "n_integral_rows",
     }
-    calib.unpersist()
 
 
 def test_stream_dedup_within_watermark(spark, tmp_path):
@@ -637,8 +627,7 @@ def test_prune_skip_manifest_keeps_uncommitted_batch_files(spark, tmp_path):
     )
     (commits / "0").write_text("v1\n{}")
 
-    calib = build_calib_pixels(spark, CONTROLS)
-    pipe = StreamingImagePipeline(spark, calib, CONTROLS, out_dir)
+    pipe = StreamingImagePipeline(spark, None, CONTROLS, out_dir)
     manifest = tmp_path / "out" / "control" / "skip_manifest.json"
     manifest.parent.mkdir(parents=True)
     manifest.write_text(json.dumps(["fileA.parquet", "fileB.parquet"]))
@@ -676,8 +665,7 @@ def test_plan_failure_settles_csim_before_batch_exits(
 
     from xrddatapipeline_spark.streaming import pipeline as sp
 
-    calib = build_calib_pixels(spark, CONTROLS)
-    pipe = StreamingImagePipeline(spark, calib, CONTROLS, str(tmp_path / "o"))
+    pipe = StreamingImagePipeline(spark, None, CONTROLS, str(tmp_path / "o"))
 
     csim_done = threading.Event()
     orig_frame = pipe._csim_frame
@@ -718,7 +706,6 @@ def test_sink_failure_settles_csim_and_releases_plan(spark):
 
     from tests.test_barrier import _persistent_rdd_ids
 
-    calib = build_calib_pixels(spark, CONTROLS)
     px = images_long_df(spark, [("synth", 0, make_image(CONTROLS, seq=0))])
     before = _persistent_rdd_ids(spark)
     live: list[set[int]] = []
@@ -740,7 +727,7 @@ def test_sink_failure_settles_csim_and_releases_plan(spark):
             csim_done.set()
 
     with pytest.raises(RuntimeError, match="sink down"):
-        with run_batch(px, calib, CONTROLS, write, slow_csim):
+        with run_batch(px, CONTROLS, write, slow_csim):
             pytest.fail("the with-body must not run after a sink failed")
     assert csim_done.is_set(), "run_batch raised with csim still in flight"
     assert live and live[0], "the plan's barrier frames were not persisted"
@@ -757,7 +744,6 @@ def test_plan_failure_settles_early_sinks_and_releases_barriers(
     from tests.test_barrier import _persistent_rdd_ids
     from xrddatapipeline_spark.plans import image_pipeline as ip
 
-    calib = build_calib_pixels(spark, CONTROLS)
     px = images_long_df(spark, [("synth", 0, make_image(CONTROLS, seq=0))])
     orig = ip.label_table_from
     monkeypatch.setattr(
@@ -774,7 +760,7 @@ def test_plan_failure_settles_early_sinks_and_releases_barriers(
         written.append(name)
 
     with pytest.raises(Exception, match="label_table down"):
-        with run_batch(px, calib, CONTROLS, write,
+        with run_batch(px, CONTROLS, write,
                        lambda: cosine_similarity_series(px)):
             pytest.fail("the with-body must not run after the plan failed")
     assert sorted(written) == ["csim", "outliers"]
@@ -785,17 +771,16 @@ def test_pixel_store_failure_raises_after_the_batch_settles(
     spark, tmp_path, monkeypatch
 ):
     """The pixel store is written on csim's side thread beside the plan.
-    When that write fails, process_batch raises its error only after csim
-    (never built, its store is missing), every sink and the plan have
-    settled, and the plan's frames and the decode checkpoint are
-    released."""
+    When that write fails, the plan raises it at its first output instead
+    of submitting a sink: csim is never built (its store is missing), no
+    plan output is written, and the plan's frames and the decode
+    checkpoint are released."""
     import os
 
     from tests.test_barrier import _persistent_rdd_ids
     from xrddatapipeline_spark import tables
 
-    calib = build_calib_pixels(spark, CONTROLS)
-    pipe = StreamingImagePipeline(spark, calib, CONTROLS, str(tmp_path / "o"))
+    pipe = StreamingImagePipeline(spark, None, CONTROLS, str(tmp_path / "o"))
     orig = tables.write_table
     started: list[str] = []
     finished: list[str] = []
@@ -814,10 +799,39 @@ def test_pixel_store_failure_raises_after_the_batch_settles(
     with pytest.raises(RuntimeError, match="pixel store down"):
         pipe.process_batch(batch, batch_id=0)
     assert "csim" not in started
-    assert sorted(finished) == sorted(
-        ["integrals", "spot_stats", "spottiness", "outliers", "h_maxima"]
-    )
+    assert finished == []
     assert not (_persistent_rdd_ids(spark) - before)
+
+
+def test_positional_calib_table_is_unread(spark, tmp_path):
+    """The repo benchmark passes a calib table positionally,
+    StreamingImagePipeline(spark, calib, controls, out_dir); the plan
+    computes calibration from controls, so that call writes the same
+    outputs as a pipeline given None."""
+    import pandas as pd
+
+    from xrddatapipeline_spark.calib.cache import build_calib_pixels
+
+    tables = ("integrals", "spot_stats", "spottiness", "outliers",
+              "h_maxima", "csim", "pixels")
+    batch = images_long_df(spark, [("synth", 0, make_image(CONTROLS, seq=0))])
+    calib = build_calib_pixels(spark, CONTROLS).persist()
+    outs = {}
+    for side, cal in (("table", calib), ("none", None)):
+        pipe = StreamingImagePipeline(spark, cal, CONTROLS, str(tmp_path / side))
+        pipe.process_batch(batch, batch_id=0)
+        outs[side] = {}
+        for t in tables:
+            pdf = pipe.output(t).toPandas()
+            key = sorted(c for c in pdf.columns if pdf[c].dtype.kind != "f")
+            outs[side][t] = pdf.sort_values(key).reset_index(drop=True)
+    calib.unpersist()
+    for t in tables:
+        assert len(outs["none"][t]) > 0, t
+        # sums of doubles may differ in the last ulp with task order
+        pd.testing.assert_frame_equal(
+            outs["table"][t], outs["none"][t], check_like=True, rtol=1e-12
+        )
 
 
 def test_run_batch_starts_early_sinks_before_the_intspot_barrier(
@@ -831,7 +845,6 @@ def test_run_batch_starts_early_sinks_before_the_intspot_barrier(
 
     from xrddatapipeline_spark.plans import image_pipeline as ip
 
-    calib = build_calib_pixels(spark, CONTROLS)
     px = images_long_df(spark, [("synth", 0, make_image(CONTROLS, seq=0))])
     early = {"outliers", "spot_stats", "h_maxima"}
     seen: set[str] = set()
@@ -851,7 +864,7 @@ def test_run_batch_starts_early_sinks_before_the_intspot_barrier(
         df.write.format("noop").mode("overwrite").save()
 
     monkeypatch.setattr(ip, "integrate_and_spottiness", gated)
-    with run_batch(px, calib, CONTROLS, write,
+    with run_batch(px, CONTROLS, write,
                    lambda: cosine_similarity_series(px)):
         pass
     assert waited == [True], "early sinks did not start before intspot"
@@ -861,7 +874,6 @@ def test_run_batch_starts_early_sinks_before_the_intspot_barrier(
 def test_run_batch_writes_the_shipped_output_set(spark, gradient):
     """run_batch hands write() exactly the shipped outputs, each plan
     output under its sink:<name> job label and csim under "csim"."""
-    calib = build_calib_pixels(spark, CONTROLS)
     px = images_long_df(spark, [("synth", 0, make_image(CONTROLS, seq=0))])
     labels: dict[str, str] = {}
 
@@ -869,7 +881,7 @@ def test_run_batch_writes_the_shipped_output_set(spark, gradient):
         assert name not in labels, f"{name} written twice"
         labels[name] = spark.sparkContext.getLocalProperty("callSite.short")
 
-    with run_batch(px, calib, CONTROLS, write,
+    with run_batch(px, CONTROLS, write,
                    lambda: cosine_similarity_series(px),
                    gradient_stage=gradient):
         pass
@@ -902,9 +914,8 @@ def test_tiff_stream_decodes_each_frame_once(spark, tmp_path, monkeypatch):
         path = landing / f"synth-{seq:05d}.tif"
         write_tiff_gray(str(path), make_image(CONTROLS, seq=seq))
         frames[seq] = decode_image(path.read_bytes()).astype(np.float64).ravel()
-    calib = build_calib_pixels(spark, CONTROLS)
     before = _persistent_rdd_ids(spark)
-    pipe = StreamingImagePipeline(spark, calib, CONTROLS, str(tmp_path / "out"))
+    pipe = StreamingImagePipeline(spark, None, CONTROLS, str(tmp_path / "out"))
     q = pipe.start(
         str(landing), str(tmp_path / "ckpt"), available_now=True,
         max_files_per_trigger=1, source_format="tiff",

@@ -30,7 +30,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.fixtures_images import CONTROLS, images_long_df, make_image
-from xrddatapipeline_spark.calib.cache import build_calib_pixels
 from xrddatapipeline_spark.streaming import StreamingImagePipeline
 
 
@@ -125,9 +124,8 @@ def test_kill_midbatch_recover_clear_resume(spark, tmp_path, gradient):
     integrals_dir = os.path.join(out_dir, "integrals")
 
     # --- recovery in THIS session from the same checkpoint
-    calib = build_calib_pixels(spark, CONTROLS)
     pipe = StreamingImagePipeline(
-        spark, calib, CONTROLS, out_dir, gradient_stage=gradient
+        spark, None, CONTROLS, out_dir, gradient_stage=gradient
     )
     q = pipe.start(landing, ckpt, available_now=True, max_files_per_trigger=1)
     q.awaitTermination(240)
@@ -195,8 +193,7 @@ def test_clear_inflight_file_not_replayed(spark, tmp_path):
         spark.read.parquet(pixels_dir).where("seq = 1").count()
     )
 
-    calib = build_calib_pixels(spark, CONTROLS)
-    pipe = StreamingImagePipeline(spark, calib, CONTROLS, out_dir)
+    pipe = StreamingImagePipeline(spark, None, CONTROLS, out_dir)
     # operator clears the queue while stopped: snapshot includes image 0's
     # committed file, image 1's in-flight file
     assert pipe.clear_queue(landing, "*.parquet") >= 2

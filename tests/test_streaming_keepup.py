@@ -13,8 +13,8 @@ Minutes-long by design, so skip-guarded: run with
 
 The per-batch assembly is shared by construction with bench.py's
 `_keepup_2880` measurement path: both run `streaming.pipeline.run_batch`
-(the bench with noop sinks, closed-form calibration and its own barrier;
-the stream with the calib table and `local_checkpoint`). This test adds
+(the bench with noop sinks and its own barrier; the stream with
+`local_checkpoint`). This test adds
 what bench can't see — the Structured Streaming wrapper (source listing,
 foreachBatch dispatch, checkpoint commits, csim-over-store lookback) on
 top of that batch.
@@ -81,7 +81,7 @@ def test_streaming_keepup_full_parity(tmp_path):
 
     pipe = StreamingImagePipeline(
         spark,
-        calib=None,  # closed-form calibration columns (SCALE.md §1)
+        calib=None,
         controls=c,
         out_dir=str(tmp_path / "out"),
         gradient_stage=True,  # full parity: gradient + h-maxima + csim

@@ -46,13 +46,11 @@ def test_streaming_pipeline_accepts_delta_format(spark, tmp_path):
     format='delta' in this container it must still land batches (parquet
     fallback), proving the abstraction is wired through every write site."""
     from tests.fixtures_images import CONTROLS, images_long_df, make_image
-    from xrddatapipeline_spark.calib.cache import build_calib_pixels
     from xrddatapipeline_spark.streaming import StreamingImagePipeline
 
     out_dir = str(tmp_path / "out")
-    calib = build_calib_pixels(spark, CONTROLS)
     pipe = StreamingImagePipeline(
-        spark, calib, CONTROLS, out_dir, table_format="delta"
+        spark, None, CONTROLS, out_dir, table_format="delta"
     )
     px = images_long_df(spark, [("synth", 0, make_image(CONTROLS, seq=0))])
     with warnings.catch_warnings():

@@ -14,12 +14,13 @@ Two consumption modes:
   DataFrame carrying (y, x) as pure expressions — **no join at all**. The
   reference caches dense maps because re-running Python trig per image is
   expensive; under whole-stage codegen the per-row trig is cheaper than
-  shuffling/sorting 8.3 M rows for a (y, x) join, so this is the default
-  path in the per-image plan (compute beats cache).
+  shuffling/sorting 8.3 M rows for a (y, x) join, so this is the per-image
+  plan's only calibration route (compute beats cache).
 - ``build_calib_pixels(spark, c)`` materializes the table (grid +
-  ``with_calib_columns``) for parity with the reference's cache artifact,
-  for inspection, and for joins against externally-measured per-pixel data
-  (flat fields, dark frames) that genuinely must be stored.
+  ``with_calib_columns``). It is the reference's cache artifact, the
+  oracle the plan's calibration columns are tested against, and the base
+  for bucketed external per-pixel tables (flat fields, dark frames) that
+  genuinely must be stored (``save_bucketed_pixel_table``).
 """
 
 from __future__ import annotations

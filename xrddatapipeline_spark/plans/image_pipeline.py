@@ -4,7 +4,7 @@ Mirrors ``run_iteration`` (pipeline.py:78-567) and the groupby
 classification path (classification.py:373-444; SURVEY §2.9, §3.1 step 4),
 re-expressed Spark-first:
 
-    pixels ⋈ calib_pixels          (J1; broadcast, or closed-form)
+    pixels + calib columns         (J1; closed-form, no join)
       → base mask                  (F1-F3: nonpositive ∨ azim-range ∨ predef)
       → ring median/MAD outliers   (A2/A4/J7 as groupBy + broadcast-back)
       → binary closing             (M2 kernel)
@@ -16,8 +16,9 @@ re-expressed Spark-first:
 
 Every stage returns a DataFrame; nothing collects to the driver. At 100 TB
 scale the plan shuffles on image_id (kernel stages) and on the small
-aggregation keys; a calib table is always broadcast, and detectors at the
-8.3 Mpx scale use closed-form calibration (``calib=None``) instead.
+aggregation keys; calibration is closed-form column expressions on the
+pixel rows (``calib.cache.with_calib_columns``), so no stage joins a
+calibration table at any detector size.
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from xrddatapipeline_spark.barrier import release as _release
+from xrddatapipeline_spark.calib.cache import with_calib_columns
 from xrddatapipeline_spark.calib.geometry import ImageControls
 from xrddatapipeline_spark.functions.binning import tth_bin_center
 from xrddatapipeline_spark.operators.ring_stats import flag_outliers
@@ -64,25 +66,6 @@ Q_MAX = 0.1
 AZIM_MIN = 3.5
 AZIM_Q_SHAPE_MIN = 100.0
 MIN_ARC_AREA = 100
-
-
-def join_calib(
-    pixels: DataFrame,
-    calib: DataFrame | None,
-    controls: ImageControls | None = None,
-) -> DataFrame:
-    """J1: image ⋈ calibration maps on (y, x), the calib table broadcast —
-    or, when ``calib`` is None, compute the calibration columns closed-form
-    on the pixel rows (``with_calib_columns``): zero joins, zero shuffles;
-    codegen'd trig per row is cheaper than sorting 8.3 M rows per image
-    for a join. The shipped stream joins a table at 512²; detectors at the
-    8.3 Mpx scale use closed-form calibration (``calib=None``)."""
-    if calib is None:
-        from xrddatapipeline_spark.calib.cache import with_calib_columns
-
-        assert controls is not None
-        return with_calib_columns(pixels, controls)
-    return pixels.join(F.broadcast(calib), ["y", "x"])
 
 
 def with_base_mask(
@@ -258,14 +241,14 @@ def labeled_pixels_frame(
     hash-probe of a multi-column key (measured 24 s/task of pure CPU in
     the warm 8 x 2880^2 profile).
 
-    With ``controls`` set (valid ONLY when the caller's calibration is
-    the closed-form one, i.e. run_image_plan with calib=None), the dense
+    With ``controls`` set (run_image_plan always sets it), the dense
     probe reads just (image_id, img_idx, y, x, intensity) off the
-    columnar cache, and q/azim/qbin are recomputed closed-form on the
+    barrier, and q/azim/qbin are recomputed closed-form on the
     ~1%-of-pixels sparse rows with the SAME expressions that built the
-    cache, so the values are bit-identical. Only ``intensity`` is data;
-    everything else is geometry. With an externally-measured calib table
-    the probe also reads q/azim/qbin (recomputation could diverge).
+    px barrier, so the values are bit-identical. Only ``intensity`` is
+    data; everything else is geometry. ``controls=None`` reads q/azim/qbin
+    from ``px`` instead, for callers whose ``px`` carries them
+    (classify_clusters, the driver queries).
 
     ``closing_radius`` (round 14): when set, ``om_pixels`` is the RAW
     outlier set and the M2 closing runs FUSED with the labeling kernel
@@ -296,8 +279,6 @@ def labeled_pixels_frame(
         probe += ["q", "azim", "qbin"]
     lpx = px.select(*probe, _pk_expr().alias("_pk")).join(labeled, "_pk")
     if controls is not None:
-        from xrddatapipeline_spark.calib.cache import with_calib_columns
-
         lpx = with_calib_columns(lpx, controls)
     # flipped azimuth mirrors the axis so wrapped arcs read contiguous (A7)
     return lpx.select(
@@ -763,7 +744,7 @@ def hmax_float32_exact(inten, hval: float) -> bool:
 
 def h_maxima_per_qbin(
     px: DataFrame, spot_px: DataFrame, controls: ImageControls,
-    n_images: int | None = None, recompute_qbin: bool = False,
+    n_images: int | None = None,
 ) -> DataFrame:
     """A19/M6 (spottiness.py:64-84): count regional h-maxima per Q-bin,
     total and intersected with the spot mask; h = int(5% of the image's
@@ -791,19 +772,14 @@ def h_maxima_per_qbin(
     temporaries in the per-process scratch pool — a few seconds per 2880^2
     frame, so this stage is viable at the full-resolution config.
 
-    ``recompute_qbin=True`` (round 14, guide §2.3 "shuffle keys and
-    metadata instead of payloads"): under CLOSED-FORM calibration the
-    qbin column is a pure function of (y, x), so it does not need to ride
-    the dense per-pixel shuffle + Arrow transfer into the kernel at all —
-    the sparse maxima rows get it re-attached JVM-side via the same
-    `with_calib_columns` expressions that computed the px cache's qbin
-    (bit-identical; the lpx probe has used this trick since round 13).
-    The kernel feed drops from (packed int64, qbin int) to the packed
-    int64 alone — one third fewer shuffled bytes and one fewer Arrow
-    column for the stage whose tasks are transfer-wait-dominated
-    (profiled run 150-170 core-s vs cpu ~38 per warm keep-up batch).
-    Only valid when px's qbin came from the closed-form projection (the
-    run_image_plan caller gates it on ``calib is None``)."""
+    qbin is a pure function of (y, x), so it does not ride the dense
+    per-pixel shuffle + Arrow transfer into the kernel: the sparse maxima
+    rows get it re-attached JVM-side by ``with_calib_columns``, the same
+    expressions that give px its qbin (bit-identical). That keeps the
+    kernel feed to the packed int64 alone, one third fewer shuffled bytes
+    and one fewer Arrow column than (packed int64, qbin int) for a stage
+    whose tasks are transfer-wait-dominated (profiled run 150-170 core-s
+    vs cpu ~38 per warm keep-up batch)."""
     import numpy as np
     from xrddatapipeline_spark.operators import kernels
 
@@ -821,7 +797,6 @@ def h_maxima_per_qbin(
         and dict(px.dtypes).get("intensity") in
         ("tinyint", "smallint", "int")
     )
-    qbin_cols = [] if recompute_qbin else ["qbin"]
     if packed:
         src = px.select(
             "image_id",
@@ -829,10 +804,9 @@ def h_maxima_per_qbin(
                 F.shiftleft(F.col("y").cast("long") * 8192 + F.col("x"), 32)
                 + (F.col("intensity").cast("long") + F.lit(2**31))
             ).alias("p"),
-            *qbin_cols,
         )
     else:
-        src = px.select("image_id", "y", "x", "intensity", *qbin_cols)
+        src = px.select("image_id", "y", "x", "intensity")
     # n_images may legitimately be 0 (empty batch):
     # repartition(0) is an error, and there is nothing to balance anyway
     if n_images and 0 < 4 * n_images <= 4096:
@@ -874,29 +848,18 @@ def h_maxima_per_qbin(
         is_max = kernels.h_maxima(img, hval)
         sel = is_max[ys, xs]
         n = int(sel.sum())
-        out = {
+        return pa.table({
             "image_id": pa.array([iid] * n, type=pa.string()),
             "y": pa.array(ys[sel].astype("int32")),
             "x": pa.array(xs[sel].astype("int32")),
-        }
-        if not recompute_qbin:
-            out["qbin"] = pa.array(
-                tbl["qbin"].to_numpy()[sel].astype("int32")
-            )
-        return pa.table(out)
+        })
 
-    out_schema = (
-        "image_id string, y int, x int"
-        if recompute_qbin
-        else "image_id string, y int, x int, qbin int"
+    maxima = src.groupBy("image_id").applyInArrow(
+        _maxima, "image_id string, y int, x int"
     )
-    maxima = src.groupBy("image_id").applyInArrow(_maxima, out_schema)
-    if recompute_qbin:
-        from xrddatapipeline_spark.calib.cache import with_calib_columns
-
-        maxima = with_calib_columns(maxima, controls).select(
-            "image_id", "y", "x", "qbin"
-        )
+    maxima = with_calib_columns(maxima, controls).select(
+        "image_id", "y", "x", "qbin"
+    )
     flagged = maxima.join(
         spot_px.withColumn("is_spot_px", F.lit(True)),
         ["image_id", "y", "x"],
@@ -1057,7 +1020,6 @@ class ImagePlanResult:
 
 def run_image_plan(
     pixels: DataFrame,
-    calib: DataFrame,
     controls: ImageControls,
     gradient_stage: bool = False,
     observe: bool = False,
@@ -1070,6 +1032,15 @@ def run_image_plan(
 
     Plan construction is EAGER: five intermediates materialize as Spark
     jobs before this function returns.
+
+    Calibration is closed-form: the plan appends ``with_calib_columns``
+    to the pixel rows, so every per-pixel map of the reference's
+    ``CacheCreator`` is a codegen'd expression, never a join. A broadcast
+    calib table does not scale to 8.3 Mpx, and at 512² computing beats
+    joining too: the stream's px barrier fell from 3.2 to 0.9 run core-s
+    per batch when it stopped joining one (medians of 3 traced pairs,
+    CHANGES.md). Tests pin the plan's columns to ``build_calib_pixels``
+    joined on (y, x).
 
     The batch's sorted image set keys the plan: the px barrier carries
     each row's ``img_idx`` (its position in the set), and the dense joins
@@ -1227,7 +1198,7 @@ def run_image_plan(
 
     try:
         return _plan(
-            pixels, calib, controls, ids, emit, barriers,
+            pixels, controls, ids, emit, barriers,
             gradient_stage=gradient_stage, observe=observe, barrier=barrier,
         )
     except BaseException:
@@ -1241,7 +1212,6 @@ def run_image_plan(
 
 def _plan(
     pixels: DataFrame,
-    calib: DataFrame | None,
     controls: ImageControls,
     ids: list,
     emit: Callable[[str, DataFrame], None],
@@ -1284,14 +1254,14 @@ def _plan(
         from pyspark.storagelevel import StorageLevel
 
         if barrier == "hybrid" and dense:
-            # DENSE frames (the calib-joined pixel table, the gradient
+            # DENSE frames (the calibrated pixel table, the gradient
             # raster) are re-scanned by 4-6 consumers: a row-format
             # checkpoint deserializes every 15-column row per scan
             # (profiled ~30 s CPU/task at 8 x 2880^2 just to feed a
             # 3-column agg). Columnar cache + eager count gives pruned,
             # compressed re-scans AND accurate stats for AQE — the count
             # also closes the lazy-persist race that double-ran the
-            # gradient kernel. The frame's own lineage is shallow (scan ⋈
+            # gradient kernel. The frame's own lineage is shallow (scan +
             # calib projections), so skipping the checkpoint costs little
             # driver re-analysis.
             df = df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1322,10 +1292,11 @@ def _plan(
         obs[name] = o
         return df.observe(o, *metrics)
 
-    # px (the dense calib-joined pixel table) feeds five outputs; without a
-    # barrier every output re-executes the pixels ⋈ calib join. ~8.3 M rows
-    # x ~15 columns per image — a deliberate per-batch cache, dropped by the
-    # caller (streaming does this per foreachBatch).
+    # px (the dense calibrated pixel table) feeds five outputs; without a
+    # barrier every output re-executes the decode and calibration
+    # expressions. ~8.3 M rows x ~13 columns per image — a deliberate
+    # per-batch cache, dropped by the caller (streaming does this per
+    # foreachBatch).
     # columns no plan stage reads after base-mask folding are dropped
     # BEFORE the barrier: tth is recomputed closed-form from tth_idx at
     # output time, azim_mask is folded into base_mask, azim_band is a
@@ -1334,17 +1305,14 @@ def _plan(
     # reads them — csim takes the RAW pixel frame, the streaming pixel
     # store writes the raw batch, and image_id remains the per-image key
     # — so the cache build skips a per-row string copy and an int column.
-    # Under closed-form calibration q/azim also leave the cache: their
-    # only consumer was the lpx probe, which now recomputes them on the
-    # sparse rows (labeled_pixels_frame(controls=...)) — two double
-    # columns (~1 GB at 8 x 2880^2) off the build/store/re-scan path.
-    # With a calib TABLE they stay (lpx reads them from the cache).
-    drop_cols = ["tth", "azim_band", "azim_mask", "dataset", "seq"]
-    if calib is None:
-        drop_cols += ["q", "azim"]
+    # q/azim leave too: their only consumer, the lpx probe, recomputes
+    # them on the sparse rows (labeled_pixels_frame(controls=...)) — two
+    # double columns (~1 GB at 8 x 2880^2) off the build/store/re-scan path.
+    drop_cols = [
+        "tth", "azim_band", "azim_mask", "dataset", "seq", "q", "azim",
+    ]
     masked = with_base_mask(
-        join_calib(pixels, calib, controls=controls),
-        controls=controls,
+        with_calib_columns(pixels, controls), controls=controls
     )
     # Predef RASTER mask (the reference's .tif mask branch,
     # cache_creation.py:239-246): a driver-side boolean array in
@@ -1425,11 +1393,9 @@ def _plan(
     lpx = _bar(_obs(
         labeled_pixels_frame(
             px, outliers, shape, sparse_hint=sb,
-            # closed-form calibration => the lpx probe reads only
-            # intensity off the dense cache (geometry recomputed on the
-            # sparse rows, bit-identical); a real calib table keeps the
-            # full-column probe
-            controls=controls if calib is None else None,
+            # the probe reads only intensity off the dense barrier; the
+            # geometry is recomputed on the sparse rows, bit-identical
+            controls=controls,
             closing_radius=1,
         ),
         "binary_closing",
@@ -1481,9 +1447,6 @@ def _plan(
             mask_flags.where(F.col("is_spot_px")).select("image_id", "y", "x"),
             controls,
             n_images=len(ids),
-            # closed-form calibration => qbin re-attaches bit-identically
-            # to the sparse maxima; a calib TABLE keeps it in the feed
-            recompute_qbin=calib is None,
         ),
         "h_maxima",
         F.count(F.lit(1)).alias("n_hmax_rows"),

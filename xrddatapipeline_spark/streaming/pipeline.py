@@ -7,8 +7,10 @@ Reference semantics mapped to Spark:
 - T2 (100 ms poll, one image in flight, cache-on-first-file): trigger
   control; ``maxFilesPerTrigger=1`` reproduces one-image-in-flight, larger
   values batch images — strictly better than the reference's serial loop.
-  Calibration is built once on the driver and reused across batches
-  (the ``CacheCreator`` analog).
+  The ``CacheCreator``'s per-pixel maps are not cached at all: the plan
+  computes them closed-form on each batch's pixel rows
+  (``calib.cache.with_calib_columns``), cheaper under whole-stage codegen
+  than joining a stored table.
 - T3 (file-settle guard): Spark's idiom is ATOMIC ARRIVAL — files must be
   written to a temp path and renamed in (every Spark/Parquet writer does
   this), which removes the race the reference's mtime guard papers over.
@@ -140,7 +142,6 @@ def read_pixel_stream(
 @contextmanager
 def run_batch(
     pixels: DataFrame,
-    calib: DataFrame | None,
     controls: ImageControls,
     write: Callable[[DataFrame, str], None],
     csim: Callable[[], DataFrame],
@@ -172,16 +173,19 @@ def run_batch(
 
     ``barrier`` and the detector size are checked first
     (``check_plan_args``), so a rejected batch raises before any job or
-    write, csim's included. The with-body runs once every output is
-    written, while the plan's barriers are still held. On every exit path
-    the writes settle before the frames they read are released: a plan
-    that raises part-way waits for the sinks it started before releasing
-    its barriers, and csim and every sink settle before
+    write, csim's included. A failed csim write (in the stream, a failed
+    pixel-store write) fails the batch early: once csim's future holds an
+    error, the next ``on_output`` re-raises it instead of submitting a
+    sink, and the with-body does not run. The with-body runs once every
+    output is written, while the plan's barriers are still held. On every
+    exit path the writes settle before the frames they read are released:
+    a plan that raises part-way waits for the sinks it started before
+    releasing its barriers, and csim and every sink settle before
     ``unpersist_all``, so a failed batch never leaves an append in flight
-    when foreachBatch retries it. A failed batch can still have appended
-    some of its outputs, even before its pixel store, since the early
-    sinks start while the plan runs: the sinks append, the replay gap
-    that ROADMAP Direction 2 closes.
+    when foreachBatch retries it. A batch whose plan or sink fails can
+    still have appended some of its outputs, since the early sinks start
+    while the plan runs: the sinks append, the replay gap that ROADMAP
+    Direction 2 closes.
     """
     check_plan_args(controls, barrier)
     sc = pixels.sparkSession.sparkContext
@@ -200,7 +204,13 @@ def run_batch(
     sink_pool = ThreadPoolExecutor(max_workers=6)
     sinks: list[Future] = []
 
+    def csim_check() -> None:
+        # non-blocking: re-raise csim's error once its write has failed
+        if csim_fut.done():
+            csim_fut.result()
+
     def on_output(name: str, df: DataFrame) -> Future:
+        csim_check()
         f = sink_pool.submit(_sink, df, name, f"sink:{name}")
         sinks.append(f)
         return f
@@ -208,7 +218,7 @@ def run_batch(
     res = None
     try:
         res = run_image_plan(
-            pixels, calib, controls,
+            pixels, controls,
             gradient_stage=gradient_stage,
             observe=observe,
             barrier=barrier,
@@ -217,6 +227,7 @@ def run_batch(
         )
         for f in sinks:
             f.result()
+        csim_check()
         yield res
         csim_fut.result()
     finally:
@@ -230,12 +241,16 @@ def run_batch(
 class StreamingImagePipeline:
     """foreachBatch driver: per-batch image plan + incremental csim.
 
-    ``calib`` is the one-time calibration table (T2's CacheCreator analog);
-    outputs land under ``out_dir/<table>`` as append-only parquet.
+    The plan computes calibration from ``controls`` (closed-form, see
+    ``run_image_plan``); outputs land under ``out_dir/<table>`` as
+    append-only parquet.
     """
 
     spark: SparkSession
-    calib: DataFrame
+    # unread: kept so the repo benchmark's positional call
+    # StreamingImagePipeline(spark, calib, controls, out_dir) still works;
+    # dropped at the next benchmark change
+    calib: DataFrame | None
     controls: ImageControls
     out_dir: str
     gradient_stage: bool = False
@@ -420,7 +435,6 @@ class StreamingImagePipeline:
 
         with run_batch(
             batch_df,
-            self.calib,
             self.controls,
             write,
             store_then_csim,
